@@ -100,7 +100,7 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffleParts)
-      // UTC like every other entry point (Verify/BenchOne/Plans/
+      // UTC like every other entry point (Verify/Plans/
       // specs): the NTZ timestamp reads and string->timestamp cutoff
       // literals are session-TZ-dependent, and an unpinned zone would
       // make the bench silently measure different row counts than

@@ -34,14 +34,23 @@ object ParquetMeta {
     } else java.nio.file.Files.size(p)
   }
 
+  /** Total rows of a parquet file, or of every `.parquet` file under a
+    * directory at any depth (partitioned layouts nest them). Throws
+    * when a directory holds files but none of them is parquet: a
+    * layout this walk does not understand must fail, not count 0.
+    */
   def rowCount(path: String): Long = {
     val p = java.nio.file.Paths.get(path)
     val files: Seq[java.nio.file.Path] =
       if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try s.iterator().asScala
-          .filter(_.toString.endsWith(".parquet")).toSeq
+        val s = java.nio.file.Files.walk(p)
+        val all = try s.iterator().asScala
+          .filter(f => java.nio.file.Files.isRegularFile(f)).toSeq
         finally s.close()
+        val parquet = all.filter(_.toString.endsWith(".parquet"))
+        require(all.isEmpty || parquet.nonEmpty,
+          s"no .parquet file under non-empty directory $path")
+        parquet
       } else Seq(p)
     val conf = new org.apache.hadoop.conf.Configuration()
     files.map { f =>

@@ -2,14 +2,14 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
-/** The PARAMETERIZED library surface (r9): the engine's reusable
-  * curation primitives exposed over caller-named columns, so a user
-  * points them at their own tables instead of the test fixtures. Each
-  * function is the same expression tree as the corresponding
-  * oracle-verified `SparkEntry` operator — GraftOpsSpec asserts the
-  * equivalence ON the fixtures, so the facade inherits the DuckDB
-  * differential evidence rather than re-deriving it.
+/** The PARAMETERIZED library surface: the engine's reusable curation
+  * primitives over caller-named columns, so a user points them at
+  * their own tables instead of the test fixtures. The fixture
+  * operators in `SparkEntry` call these functions on the fixture
+  * columns, so the DuckDB oracle compare of those operators tests
+  * this code; GraftOpsSpec adds one run on a non-fixture schema.
   *
   * Everything here is a narrow map, a broadcast-threshold join, or a
   * banded candidate join — the per-operator scale notes live with the
@@ -59,12 +59,14 @@ object GraftOps {
     */
   def hashSplit(df: DataFrame, hashCol: String,
       splitName: String = "split"): DataFrame =
-    df.withColumn(splitName, {
-      // string cast as in hashSample: identity for string columns,
-      // admits numeric ids (r14)
-      val h2 = substring(md5(col(hashCol).cast("string")), 1, 2)
-      when(h2 < "cd", "train").when(h2 < "e7", "val").otherwise("test")
-    })
+    // string cast as in hashSample: identity for string columns,
+    // admits numeric ids. The prefix is its own column so md5 runs
+    // once per row: CollapseProject does not inline a non-trivial
+    // alias that the CASE reads twice.
+    df.withColumn("__h2", substring(md5(col(hashCol).cast("string")), 1, 2))
+      .withColumn(splitName, when(col("__h2") < "cd", "train")
+        .when(col("__h2") < "e7", "val").otherwise("test"))
+      .drop("__h2")
 
   /** Integer-exact quality-score columns over a whitespace-tokenized
     * text column: token count, mean token length (centi-chars),
@@ -75,6 +77,8 @@ object GraftOps {
       stopwords: Seq[String] = Seq("the", "a", "and", "of", "to")): DataFrame = {
     val toks = split(col(textCol), " ")
     val stop = array(stopwords.map(lit): _*)
+    // passes_gate recomputes the stop_bp expression rather than reading
+    // the column: reading it would keep one more Project in the plan
     df.withColumn("tok_cnt", size(toks).cast("long"))
       .withColumn("char_cnt",
         aggregate(transform(toks, t => length(t).cast("long")),
@@ -83,11 +87,12 @@ object GraftOps {
         size(filter(toks, t => array_position(stop, t) > 0)).cast("long"))
       .withColumn("short_cnt",
         size(filter(toks, t => length(t) <= lit(2))).cast("long"))
-      .withColumn("mean_tok_len_c", expr("char_cnt * 100 div tok_cnt"))
-      .withColumn("stop_bp", expr("stop_cnt * 10000 div tok_cnt"))
-      .withColumn("short_bp", expr("short_cnt * 10000 div tok_cnt"))
-      .withColumn("passes_gate",
-        col("tok_cnt") >= 20 && col("stop_bp") < 4000)
+      .withColumns(ListMap(
+        "mean_tok_len_c" -> expr("char_cnt * 100 div tok_cnt"),
+        "stop_bp" -> expr("stop_cnt * 10000 div tok_cnt"),
+        "short_bp" -> expr("short_cnt * 10000 div tok_cnt"),
+        "passes_gate" -> (col("tok_cnt") >= 20 &&
+          expr("stop_cnt * 10000 div tok_cnt") < 4000)))
       .drop("char_cnt", "stop_cnt", "short_cnt")
   }
 
@@ -125,22 +130,47 @@ object GraftOps {
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       numPerm: Int = 16, bands: Int = 4,
-      jaccardMin: Double = 0.4): DataFrame = {
+      jaccardMin: Double = 0.4): DataFrame =
+    minhashPairs(
+      withShingleHashes(
+        df.select(col(idCol).as("__id"), col(textCol).as("__text")), "__text")
+        .select(col("__id"), col("hset")),
+      numPerm, bands, jaccardMin)
+
+  /** Adds `hset`: the distinct xxhash64 digests of `textCol`'s 3-word
+    * shingles (a text under 3 words is one shingle). One string hash
+    * per distinct shingle; the signature permutations then re-hash
+    * longs, not strings.
+    */
+  private[graft] def withShingleHashes(df: DataFrame,
+      textCol: String): DataFrame =
+    df.withColumn("__toks", split(col(textCol), " "))
+      .withColumn("__shingles",
+        when(size(col("__toks")) < 3, array(array_join(col("__toks"), " ")))
+          .otherwise(expr(
+            "transform(sequence(0, size(__toks) - 3), " +
+              "i -> concat_ws(' ', slice(__toks, i + 1, 3)))")))
+      .withColumn("hset",
+        expr("array_distinct(transform(__shingles, s -> xxhash64(s)))"))
+      .drop("__toks", "__shingles")
+
+  /** The hset → signature → banded pairs step of
+    * [[minhashCandidatePairs]] over `(__id, hset)` rows. The signature
+    * is the codegen'd MinHashSigExpr (bit-identical to the interpreted
+    * `transform(sequence(0, numPerm - 1), i -> array_min(transform(hset,
+    * h -> xxhash64(h, i))))`, asserted in SimilaritySpec). The hashed
+    * shingle set (~8 B/shingle) rides the band join, so exact Jaccard
+    * is one map step on the matched pair; a pair matching in k bands
+    * is scored k times, then de-duplicated.
+    */
+  private[graft] def minhashPairs(hsets: DataFrame, numPerm: Int,
+      bands: Int, jaccardMin: Double): DataFrame = {
     require(numPerm % bands == 0, "numPerm must be divisible by bands")
     val rows = numPerm / bands
-    val sig = df.select(col(idCol).as("__id"), col(textCol).as("__text"))
-      .withColumn("toks", split(col("__text"), " "))
-      .withColumn("shingles",
-        when(size(col("toks")) < 3, array(array_join(col("toks"), " ")))
-          .otherwise(expr(
-            "transform(sequence(0, size(toks) - 3), " +
-              "i -> concat_ws(' ', slice(toks, i + 1, 3)))")))
-      .withColumn("hset",
-        expr("array_distinct(transform(shingles, s -> xxhash64(s)))"))
+    val banded = hsets
       .withColumn("sig",
         graft.functions.MinHashSigExpr.sig(col("hset"), numPerm))
-      .select(col("__id"), col("hset"), col("sig"))
-    val banded = sig.select(col("__id"), col("hset"),
+      .select(col("__id"), col("hset"),
       posexplode(expr(
         s"transform(sequence(0, ${bands - 1}), " +
           s"b -> xxhash64(concat_ws(',', slice(sig, b * $rows + 1, $rows))))"))

@@ -696,42 +696,11 @@ object AggQueries {
     // size. Ties collapse in the per-value aggs, so intra-tie order
     // has no surface.
     "agg_weighted_median" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val li = lineitem(s, d).select(col("l_returnflag"),
         expr("cast(round(l_extendedprice * 100) as bigint)").as("cents"),
         col("l_quantity").cast(DecimalType(18, 0)).cast("long").as("w"))
-      val bucketed = li.withColumn("bkt", expr("cents div 65536"))
-      val bw = bucketed.groupBy(col("l_returnflag"), col("bkt"))
-        .agg(sum(col("w")).as("bw"), count(lit(1)).as("bn"))
-      val cumW = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("bkt"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = bw.withColumn("cum", sum(col("bw")).over(cumW))
-      val tot = bw.groupBy(col("l_returnflag"))
-        .agg(sum(col("bw")).as("total_w"), sum(col("bn")).as("n_rows"))
-      // crossing bucket: the first whose cumulative reaches half;
-      // below = weight strictly under it (cum - own bucket weight)
-      val crossing = cum.join(broadcast(tot), "l_returnflag")
-        .filter(col("cum") * 2 >= col("total_w"))
-        .groupBy(col("l_returnflag"), col("total_w"), col("n_rows"))
-        .agg(min_by(struct(col("bkt"), (col("cum") - col("bw")).as("below")),
-          col("bkt")).as("cb"))
-        .select(col("l_returnflag"), col("total_w"), col("n_rows"),
-          col("cb.bkt").as("cbkt"), col("cb.below").as("below"))
-      val inBkt = bucketed.join(broadcast(crossing), Seq("l_returnflag"))
-        .filter(col("bkt") === col("cbkt"))
-        .groupBy(col("l_returnflag"), col("total_w"), col("n_rows"),
-          col("below"), col("cents"))
-        .agg(sum(col("w")).as("vw"))
-      val cumV = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("cents"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      inBkt.withColumn("cum_in", sum(col("vw")).over(cumV))
-        .filter((col("below") + col("cum_in")) * 2 >= col("total_w"))
-        .groupBy(col("l_returnflag"), col("total_w"), col("n_rows"))
-        .agg(min(col("cents")).as("wmed_cents"))
-        .select(col("l_returnflag"), col("n_rows"), col("total_w"),
-          col("wmed_cents"))
+      graft.api.GraftOps.weightedMedian(li, "l_returnflag", "cents", "w")
+        .withColumnRenamed("wmed", "wmed_cents")
         .orderBy(col("l_returnflag"))
     }),
 

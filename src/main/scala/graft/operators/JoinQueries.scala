@@ -191,28 +191,21 @@ object JoinQueries {
     // interval lengths (the fixture has one date column; the shape is
     // what is exercised). Plan-asserted: no BNLJ/CartesianProduct.
     "join_interval_overlap" -> ((s, d) => {
-      val epoch = lit("1970-01-01")
       def side(mod: Int, lenMod: Int, id: String, s0: String, e0: String) =
         orders(s, d).filter(col("o_orderkey") % mod === 0)
           .select(col("o_orderkey").as(id),
             to_date(col("o_orderdate")).as(s0),
             date_add(to_date(col("o_orderdate")),
               (col("o_orderkey") % lenMod + 1).cast("int")).as(e0))
-      val a = side(97, 5, "a_id", "a_s", "a_e")
-        .withColumn("tile", explode(sequence(
-          floor(datediff(col("a_s"), epoch) / 7),
-          floor(datediff(col("a_e"), epoch) / 7))))
-      val b = side(89, 7, "b_id", "b_s", "b_e")
-        .withColumn("tile", explode(sequence(
-          floor(datediff(col("b_s"), epoch) / 7),
-          floor(datediff(col("b_e"), epoch) / 7))))
-      a.join(b, Seq("tile"))
-        .filter(col("a_s") <= col("b_e") && col("b_s") <= col("a_e"))
+      // the join dedups whole (a, b) interval pairs; o_orderkey is
+      // unique, so each pair is one (a_id, b_id) row
+      graft.api.GraftOps.intervalOverlapJoin(
+          side(97, 5, "a_id", "a_s", "a_e"), "a_s", "a_e",
+          side(89, 7, "b_id", "b_s", "b_e"), "b_s", "b_e")
         .select(col("a_id"), col("b_id"),
           (datediff(least(col("a_e"), col("b_e")),
             greatest(col("a_s"), col("b_s"))) + 1).cast("long")
             .as("overlap_days"))
-        .distinct()
         .orderBy(col("a_id"), col("b_id"))
     }),
 

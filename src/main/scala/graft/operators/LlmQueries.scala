@@ -144,29 +144,6 @@ object LlmQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** 3-word shingles of the space-tokenized text. */
-  private def shingled(df: DataFrame): DataFrame =
-    df.withColumn("toks", split(col("text"), " "))
-      .withColumn("shingles",
-        when(size(col("toks")) < 3, array(array_join(col("toks"), " ")))
-          .otherwise(expr(
-            "transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', slice(toks, i + 1, 3)))")))
-
-  /** 16-permutation MinHash signature over the shingle set.
-    *
-    * One string hash per distinct shingle (`hset`), then 16 cheap
-    * long-domain re-hashes instead of 16 string concat+hash passes —
-    * ~10x less per-row work than naive per-permutation string hashing,
-    * same LSH guarantees. The signature itself is the codegen'd
-    * MinHashSigExpr (bit-identical to the interpreted
-    * `transform(sequence(0,15), i -> array_min(transform(hset, h ->
-    * xxhash64(h, i))))` it replaces — asserted in SimilaritySpec).
-    */
-  private val hashedShingles =
-    expr("array_distinct(transform(shingles, s -> xxhash64(s)))")
-  private val minhashSig =
-    graft.functions.MinHashSigExpr.sig(col("hset"), 16)
-
   /** Connected-component labels over the word-bigram near-dup pair
     * graph: (doc_id, cluster_id = min reachable doc_id), one row per
     * doc that appears in any near-dup pair. Shared by
@@ -520,45 +497,25 @@ object LlmQueries {
     "dedup_minhash" -> ((s, d) => {
       val hsetDir = graft.TempDirs.durableOnce("minhash_hsets", d,
         graft.TempDirs.fingerprintOf(s"$d/documents.parquet")) { dir =>
-        shingled(documents(s, d))
-          .withColumn("hset", hashedShingles)
+        graft.api.GraftOps.withShingleHashes(documents(s, d), "text")
           .select(col("doc_id"), col("hset"))
           .coalesce(1).write.mode("overwrite").parquet(dir)
       }
       // schema-explicit read: both engines consume THIS artifact, so
-      // the oracle compare covers every step after the string hash
-      val sig = s.read.schema("doc_id BIGINT, hset ARRAY<BIGINT>")
+      // the oracle compare covers every step after the string hash.
+      // Jaccard over 64-bit-hashed shingle sets == Jaccard over the
+      // string sets up to negligible collision probability. At PB
+      // scale with huge shingle sets, the alternative to carrying hset
+      // through the band join is an id-only bucket join plus two
+      // join-backs to the signature table; with hashed shingles the
+      // payload is small enough that the carry-through plan shuffles
+      // less in total.
+      val hsets = s.read.schema("doc_id BIGINT, hset ARRAY<BIGINT>")
         .parquet(hsetDir)
-        .withColumn("sig", minhashSig)
-        .select(col("doc_id"), col("hset"), col("sig"))
-      // LSH candidate discovery: explode each doc into 4 (band, 64-bit
-      // band digest) keys and self-join on them. The compact hashed
-      // shingle set (~8 B/shingle) rides the join so exact Jaccard is a
-      // single map step on the matched pair — fewest stages. (At PB
-      // scale with huge shingle sets, the alternative is an id-only
-      // bucket join plus two join-backs to the signature table; with
-      // hashed shingles the payload is small enough that the
-      // carry-through plan shuffles less in total.)
-      val bands = sig.select(
-        col("doc_id"), col("hset"),
-        posexplode(expr(
-          "transform(sequence(0, 3), b -> xxhash64(concat_ws(',', slice(sig, b * 4 + 1, 4))))"))
-          .as(Seq("band", "band_sig")))
-      bands.as("a")
-        .join(bands.as("b"),
-          col("a.band") === col("b.band") &&
-            col("a.band_sig") === col("b.band_sig") &&
-            col("a.doc_id") < col("b.doc_id"))
-        // Jaccard over 64-bit-hashed shingle sets == Jaccard over the
-        // string sets up to negligible collision probability; a pair
-        // matching in k>1 bands is computed k times then de-duplicated
-        // (cheaper than a pre-join distinct over id pairs).
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          (size(array_intersect(col("a.hset"), col("b.hset"))).cast(DoubleType) /
-            size(array_union(col("a.hset"), col("b.hset")))).as("jaccard"))
-        .filter(col("jaccard") >= 0.4)
-        .select(col("doc_a"), col("doc_b"))
-        .distinct()
+        .select(col("doc_id").as("__id"), col("hset"))
+      graft.api.GraftOps.minhashPairs(hsets, numPerm = 16, bands = 4,
+          jaccardMin = 0.4)
+        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 

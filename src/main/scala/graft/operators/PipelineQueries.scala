@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.api.GraftOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,8 +40,7 @@ object PipelineQueries {
     // across runs, partitionings, and engines; disjoint samples come
     // from disjoint digit ranges (the standard hash-mod split).
     "sample_hash" -> ((s, d) =>
-      documents(s, d)
-        .filter(hexDigit < "4")
+      GraftOps.hashSample(documents(s, d), "text", 4)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .orderBy(col("doc_id"))),
 
@@ -104,11 +104,7 @@ object PipelineQueries {
     // window cumsum (no sequential loop; long docs simply start their
     // own bins).
     "pack_token_budget" -> ((s, d) =>
-      documents(s, d)
-        .withColumn("n_toks", size(split(col("text"), " ")))
-        .withColumn("bin",
-          expr("(sum(n_toks) OVER (PARTITION BY lang ORDER BY doc_id " +
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_toks) div 4096"))
+      GraftOps.packTokenBudget(documents(s, d), "lang", "doc_id", "text")
         .select(col("lang"), col("doc_id"), col("n_toks"), col("bin"))
         .orderBy(col("lang"), col("doc_id"))),
 
@@ -150,11 +146,7 @@ object PipelineQueries {
     // order-independent id checksum) — the manifest a pipeline
     // records next to the split.
     "sample_split" -> ((s, d) =>
-      documents(s, d)
-        .withColumn("h2", substring(md5(col("text")), 1, 2))
-        .withColumn("split",
-          when(col("h2") < "cd", "train")
-            .when(col("h2") < "e7", "val").otherwise("test"))
+      GraftOps.hashSplit(documents(s, d), "text")
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n_docs"),
           sum(size(split(col("text"), " ")).cast("long")).as("sum_toks"),

@@ -568,17 +568,10 @@ object SimilarityQueries {
     // mergeable GramCovAgg sufficient-stats aggregate — per-partition
     // partial Gram buffers (~17 KB each at d=64), a single tiny merge,
     // and a 2080-struct explode. Corpus size enters only the scan.
-    "emb_covariance" -> ((s, d) => {
-      embeddings(s, d)
-        .select(expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 1000.0) as bigint))")
-          .as("q"))
-        .agg(graft.functions.GramCovAgg.gram(col("q")).as("st"))
-        .select(explode(col("st")).as("e"))
-        .select(col("e.i").as("i"), col("e.j").as("j"),
-          col("e.cov_num").as("cov_num"), col("e.n").as("n"))
-        .orderBy(col("i"), col("j"))
-    }),
+    "emb_covariance" -> ((s, d) =>
+      graft.api.GraftOps.covarianceNumerators(embeddings(s, d),
+          "embedding", "vec_id")
+        .orderBy(col("i"), col("j"))),
 
     // Per-label centroids (r12): the class-mean vector table —
     // the primitive behind IVF coarse quantizers, contrastive

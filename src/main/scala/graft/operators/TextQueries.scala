@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.api.GraftOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -70,12 +71,14 @@ object TextQueries {
     s.read.parquet(dir)
   }
 
-  /** The quality-gate stopword set, shared by `text_quality_score`
-    * and `text_quality_topfrac` (one list — the two gates are
-    * documented as the same score and must stay in lockstep).
+  /** Documents plus the integer score of the top-fraction quality
+    * gates: 20000 − stopword bp − short-token bp (higher = better),
+    * from the same `qualityScore` columns as `text_quality_score`.
     */
-  private val stopwordsCol =
-    array(Seq("the", "a", "and", "of", "to").map(lit): _*)
+  private def qualityGateScore(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    GraftOps.qualityScore(docs, "text")
+      .withColumn("score", expr("20000 - stop_bp - short_bp"))
 
   /** Word-bigram struct generator over a `toks` column — the ONE
     * expression both the `lm_bigrams` artifact build and the
@@ -280,27 +283,11 @@ object TextQueries {
     // Quality scoring: token count, mean token length (centi-chars),
     // stopword ratio and short-token ratio in basis points, plus a
     // boolean gate — all integer math.
-    "text_quality_score" -> ((s, d) => {
-      val toks = split(col("text"), " ")
-      val stop = stopwordsCol
-      documents(s, d)
-        .withColumn("tok_cnt", size(toks).cast("long"))
-        .withColumn("char_cnt",
-          aggregate(transform(toks, t => length(t).cast("long")),
-            lit(0L), (acc, v) => acc + v))
-        .withColumn("stop_cnt",
-          size(filter(toks, t => array_position(stop, t) > 0)).cast("long"))
-        .withColumn("short_cnt",
-          size(filter(toks, t => length(t) <= lit(2))).cast("long"))
-        .select(
-          col("doc_id"), col("tok_cnt"),
-          expr("char_cnt * 100 div tok_cnt").as("mean_tok_len_c"),
-          expr("stop_cnt * 10000 div tok_cnt").as("stop_bp"),
-          expr("short_cnt * 10000 div tok_cnt").as("short_bp"),
-          (col("tok_cnt") >= 20 &&
-            expr("stop_cnt * 10000 div tok_cnt") < 4000).as("passes_gate"))
-        .orderBy(col("doc_id"))
-    }),
+    "text_quality_score" -> ((s, d) =>
+      GraftOps.qualityScore(documents(s, d), "text")
+        .select(col("doc_id"), col("tok_cnt"), col("mean_tok_len_c"),
+          col("stop_bp"), col("short_bp"), col("passes_gate"))
+        .orderBy(col("doc_id"))),
 
     // Per-source relative quality gate (r7): keep each source's top
     // 30% by quality score. Absolute thresholds over- or under-prune
@@ -313,19 +300,10 @@ object TextQueries {
     // output. Both windows (rank + per-source count) share one
     // source-partitioned exchange.
     "text_quality_topfrac" -> ((s, d) => {
-      val toks = split(col("text"), " ")
-      val stop = stopwordsCol
       val wRank = Window.partitionBy(col("source"))
         .orderBy(col("score").desc, col("doc_id").asc)
       val wSrc = Window.partitionBy(col("source"))
-      documents(s, d)
-        .withColumn("tok_cnt", size(toks).cast("long"))
-        .withColumn("stop_cnt",
-          size(filter(toks, t => array_position(stop, t) > 0)).cast("long"))
-        .withColumn("short_cnt",
-          size(filter(toks, t => length(t) <= lit(2))).cast("long"))
-        .withColumn("score", expr(
-          "20000 - stop_cnt * 10000 div tok_cnt - short_cnt * 10000 div tok_cnt"))
+      qualityGateScore(documents(s, d))
         .withColumn("rk", row_number().over(wRank))
         .withColumn("n_src", count(lit(1)).over(wSrc))
         .filter(col("rk") <= expr("(3 * n_src + 9) div 10"))
@@ -346,22 +324,10 @@ object TextQueries {
     // exactly 30% per source (ties and sampling error — the recipe's
     // documented trade), deterministically in both engines.
     "text_topfrac_sampled" -> ((s, d) => {
-      val toks = split(col("text"), " ")
-      val stop = stopwordsCol
-      val scored = documents(s, d)
-        .withColumn("tok_cnt", size(toks).cast("long"))
-        .withColumn("stop_cnt",
-          size(filter(toks, t => array_position(stop, t) > 0)).cast("long"))
-        .withColumn("short_cnt",
-          size(filter(toks, t => length(t) <= lit(2))).cast("long"))
-        .withColumn("score", expr(
-          "20000 - stop_cnt * 10000 div tok_cnt - short_cnt * 10000 div tok_cnt"))
-        .select(col("doc_id"), col("source"), col("score"),
-          substring(md5(col("text")), 1, 1).as("hx"))
-      val cuts = scored.filter(col("hx") < "4")
-        .groupBy(col("source"))
-        .agg(expr("percentile_disc(0.7) WITHIN GROUP (ORDER BY score)")
-          .as("thr"))
+      val scored = qualityGateScore(documents(s, d))
+      val cuts = GraftOps.sampledQuantileCuts(scored, "source", "score",
+          "text", Seq(0.7))
+        .select(col("source"), element_at(col("cuts"), 1).as("thr"))
       scored.join(broadcast(cuts), "source")
         .filter(col("score") >= col("thr"))
         .select(col("doc_id"), col("source"), col("score"))
@@ -371,15 +337,9 @@ object TextQueries {
     // Token counting: whitespace tokens, BPE-ish regex tokens (letter
     // runs / digit runs / single other chars), distinct tokens.
     "text_token_count" -> ((s, d) =>
-      documents(s, d)
-        .select(
-          col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("ws_tokens"),
-          size(regexp_extract_all(col("text"),
-            lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))).cast("long")
-            .as("re_tokens"),
-          size(array_distinct(split(col("text"), " "))).cast("long")
-            .as("distinct_tokens"))
+      GraftOps.tokenCounts(documents(s, d), "text")
+        .select(col("doc_id"), col("ws_tokens"), col("re_tokens"),
+          col("distinct_tokens"))
         .orderBy(col("doc_id"))),
 
     // Gopher-style quality rule set (r9, Rae et al. 2021 §A1.1 — the

@@ -204,29 +204,11 @@ object TimeSeriesQueries {
     // partial-agg: at 100 TB the pairing is a per-key sorted walk,
     // never a self-join.
     "ts_autocorr" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val ev = events(s, d)
         .select(col("user_id"), col("ts_us"), col("event_id"),
           expr("cast(round(value * 100) as bigint)").as("x"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-      val st = ev
-        .withColumn("y", lead(col("x"), 1).over(w))
-        .filter(col("y").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).cast("double").as("n"),
-          sum(col("x")).cast("double").as("sx"),
-          sum(col("y")).cast("double").as("sy"),
-          sum(col("x") * col("y")).cast("double").as("sxy"),
-          sum(col("x") * col("x")).cast("double").as("sxx"),
-          sum(col("y") * col("y")).cast("double").as("syy"))
-      st.select(col("user_id"), col("n").cast("long").as("n_pairs"),
-          when((col("n") * col("sxx") - col("sx") * col("sx")) === 0.0 ||
-               (col("n") * col("syy") - col("sy") * col("sy")) === 0.0, lit(null))
-            .otherwise((col("n") * col("sxy") - col("sx") * col("sy")) /
-              (sqrt(col("n") * col("sxx") - col("sx") * col("sx")) *
-               sqrt(col("n") * col("syy") - col("sy") * col("sy"))))
-            .as("lag1_corr"))
+      graft.api.GraftOps.lag1Autocorr(ev, "user_id", "x",
+          Seq("ts_us", "event_id"))
         .orderBy(col("user_id"))
     }),
 
@@ -240,22 +222,13 @@ object TimeSeriesQueries {
     // sort is per-key external sort, and the per-user mean join stays
     // key-local.
     "ts_cusum" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val ev = events(s, d)
         .select(col("user_id"), col("ts_us"), col("event_id"),
           expr("cast(round(value * 100) as bigint)").as("cents"))
-      val m = ev.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-        .withColumn("mean_cents", expr("sum_cents div n_events"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.join(m, "user_id")
-        .withColumn("cusum", sum(col("cents") - col("mean_cents")).over(w))
-        .groupBy(col("user_id"), col("n_events"), col("mean_cents"))
-        .agg(max(abs(col("cusum"))).as("max_abs_cusum"))
-        .select(col("user_id"), col("n_events"), col("mean_cents"),
-          col("max_abs_cusum"))
+      graft.api.GraftOps.cusum(ev, "user_id", "cents",
+          Seq("ts_us", "event_id"))
+        .select(col("user_id"), col("n_events"),
+          col("mean").as("mean_cents"), col("max_abs_cusum"))
         .orderBy(col("user_id"))
     }),
 
@@ -549,19 +522,23 @@ object TimeSeriesQueries {
     // warm, anchors within 10%): 0.95-1.15 s old vs 0.31-0.35 s new
     // (~3x); plan 4 scans -> 1, 8 Exchanges -> 2 (plans/r15/); oracle
     // (unchanged SQL) identical at sf0.001 AND sf0.1.
+    // collect_list drops NULL values, as percentile_disc ignores them;
+    // n_events counts rows like the oracle's count(*), and the 0-based
+    // `get` returns NULL med/mad for a user with no non-NULL value
+    // (ceil(0/2) - 1 = -1) where element_at would throw.
     "ts_outlier_mad" -> ((s, d) => {
-      val half = (c: org.apache.spark.sql.Column) =>
-        ((size(c) + 1) / lit(2)).cast("int")
+      val lowerMedian = (c: org.apache.spark.sql.Column) =>
+        get(c, ((size(c) + 1) / lit(2)).cast("int") - 1)
       events(s, d).select(col("user_id"), col("value"))
         .groupBy(col("user_id"))
-        .agg(sort_array(collect_list(col("value"))).as("vals"))
-        .withColumn("med", element_at(col("vals"), half(col("vals"))))
+        .agg(count(lit(1)).as("n_events"),
+          sort_array(collect_list(col("value"))).as("vals"))
+        .withColumn("med", lowerMedian(col("vals")))
         .withColumn("devs",
           array_sort(transform(col("vals"),
             v => abs(v - col("med")))))
-        .withColumn("mad", element_at(col("devs"), half(col("devs"))))
-        .select(col("user_id"),
-          size(col("vals")).cast("long").as("n_events"),
+        .withColumn("mad", lowerMedian(col("devs")))
+        .select(col("user_id"), col("n_events"),
           col("med"), col("mad"),
           size(filter(col("devs"), x => x > col("mad") * 3.0))
             .cast("long").as("n_outliers"))

@@ -440,19 +440,15 @@ object StreamingQueries {
     */
   private val replaySeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Partition count for the SMALL-KEYED stateful replays, env-tunable
-    * for A/B probes (r13 VERDICT task 5). The hypothesis that 1
-    * partition beats 2 by saving a state-store lifecycle was A/B'd
-    * same-binary in r14: family second-pass totals 13.9 s (parts=1) vs
-    * 12.4 s (parts=2) — the serial 100k-row addBatch fold loses more
-    * than the saved open/commit returns, re-confirming the r11
-    * all-replays probe at per-query granularity. Default stays 2 (the
-    * measured optimum); results are key-grouped aggregates,
-    * partitioning-invariant by construction, so the knob is pure cost
-    * either way.
+  /** Partition count for the SMALL-KEYED stateful replays. The
+    * hypothesis that 1 partition beats 2 by saving a state-store
+    * lifecycle was A/B'd same-binary: family second-pass totals 13.9 s
+    * (parts=1) vs 12.4 s (parts=2) — the serial 100k-row addBatch fold
+    * loses more than the saved open/commit returns. Results are
+    * key-grouped aggregates, partitioning-invariant by construction,
+    * so the count is pure cost either way.
     */
-  private val keyedParts: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse(2)
+  private val keyedParts = 2
 
   /** Consolidated checkpoint root for the replay family (r11 verdict
     * #2): one RAM-filesystem base instead of a per-query temp dir on

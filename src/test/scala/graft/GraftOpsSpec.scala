@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The parameterized facade (graft.api.GraftOps) must reproduce the
-  * oracle-verified fixture operators exactly when pointed at the
-  * fixture columns — the facade inherits the DuckDB differential
-  * evidence through these equivalences instead of re-deriving it.
-  * Plus one run on a NON-fixture schema per function, proving the
-  * column parameterization is real.
+/** The fixture operators call the parameterized facade
+  * (graft.api.GraftOps) on the fixture columns; these tests pin that
+  * the facade, projected the way each operator projects it, returns
+  * exactly the oracle-verified operator's rows. Plus runs on a
+  * NON-fixture schema, proving the column parameterization is real.
   */
 class GraftOpsSpec extends SparkSpecBase {
   import graft.api.GraftOps
@@ -40,6 +39,15 @@ class GraftOpsSpec extends SparkSpecBase {
     val want = SparkEntry.queries("sample_split")(spark, sfDir)
       .collect().toSeq
     assert(got == want)
+  }
+
+  test("hashSplit computes the md5 prefix once per row") {
+    import org.apache.spark.sql.catalyst.expressions.Md5
+    val plan = GraftOps.hashSplit(docs, "text")
+      .queryExecution.optimizedPlan
+    val md5s = plan.flatMap(_.expressions.flatMap(_.collect {
+      case m: Md5 => m }))
+    assert(md5s.size == 1, plan.toString)
   }
 
   test("qualityScore reproduces text_quality_score") {

@@ -28,6 +28,27 @@ class ParquetMetaSpec extends SparkSpecBase {
     } finally TempDirs.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
+  test("footer row count walks a partitioned (nested) dir") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_pmeta_part").toString
+    try {
+      spark.range(0, 500).select(col("id"), (col("id") % 3).as("k"),
+          (col("id") % 2).as("j"))
+        .write.partitionBy("k", "j").mode("overwrite").parquet(dir)
+      assert(ParquetMeta.rowCount(dir) == 500L)
+      assert(ParquetMeta.rowCount(dir) ==
+        spark.read.parquet(dir).count())
+    } finally TempDirs.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
+  test("a non-empty dir without parquet files fails loudly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pmeta_csv")
+    try {
+      java.nio.file.Files.writeString(dir.resolve("part-0.csv"), "1,2\n")
+      intercept[IllegalArgumentException](ParquetMeta.rowCount(dir.toString))
+    } finally TempDirs.deleteRecursively(dir)
+  }
+
   test("empty write yields zero") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_pmeta0").toString

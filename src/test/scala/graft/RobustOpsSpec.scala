@@ -135,6 +135,31 @@ class RobustOpsSpec extends SparkSpecBase {
     out.unpersist()
   }
 
+  test("ts_outlier_mad: NULL values count as events, an all-NULL user " +
+    "gets NULL med/mad") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_mad_null")
+    try {
+      // user 1: 1, 2, 100 and one NULL; user 2: NULLs only
+      Seq[(Long, Long, Long, String, Option[Double], String)](
+          (1L, 1000L, 1L, "view", Some(1.0), "{}"),
+          (2L, 2000L, 1L, "view", Some(2.0), "{}"),
+          (3L, 3000L, 1L, "view", Some(100.0), "{}"),
+          (4L, 4000L, 1L, "view", None, "{}"),
+          (5L, 1000L, 2L, "view", None, "{}"),
+          (6L, 2000L, 2L, "view", None, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.parquet(s"$dir/events.parquet")
+      val got = SparkEntry.queries("ts_outlier_mad")(spark, dir.toString)
+        .collect().map(r => r.getLong(0) ->
+          (r.getLong(1), Option(r.get(2)), Option(r.get(3)), r.getLong(4)))
+        .toMap
+      // med = 2 of {1, 2, 100}, devs {0, 1, 98}: mad = 1, one outlier
+      assert(got(1L) == ((4L, Some(2.0), Some(1.0), 1L)))
+      assert(got(2L) == ((2L, None, None, 0L)))
+    } finally TempDirs.deleteRecursively(dir)
+  }
+
   test("ts_outlier_sampled: thresholds track the exact MAD within tolerance") {
     // the production (sample-thresholded) path must agree with the
     // exact operator up to sampling noise: per-user medians within one

@@ -14,14 +14,14 @@ plan regression is query-specific AND reproducible on a quiet box):
     median ratio vs the band, the calibration preamble's spin ns/op vs
     the band legs' spin, and steal%. If ANY says throttled, per-query
     spikes cannot be trusted as regressions — they are labeled
-    WEATHER-SUSPECT with a re-measure instruction (BenchOne, quiet box).
+    WEATHER-SUSPECT with a re-measure instruction (Bench, quiet box).
  2. On a quiet-verdict leg, a query is a REGRESSION CANDIDATE only if
     its ratio exceeds max(2, 2 x median) AND both of its runs agree
     (within 40%) — a weather gust usually hits one run of the
     back-to-back pair, a changed plan slows both equally. A candidate
     is still only a candidate: sustained LOCAL contention (a compile
     running next to the bench) passes every leg-level check, so the
-    verdict for a candidate is one BenchOne re-measure on a quiet box,
+    verdict for a candidate is one Bench re-measure on a quiet box,
     never this tool's word alone.
 
 Exit status: number of REGRESSION-candidate queries (0 = clean or
@@ -127,11 +127,11 @@ def main():
             suspects.append(line)
     if regressions:
         print(f"REGRESSION CANDIDATES ({len(regressions)}) — quiet leg, "
-              "both runs agree; confirm each with a BenchOne re-measure "
+              "both runs agree; confirm each with a Bench re-measure "
               "before treating as real:")
         print("\n".join(regressions))
     if suspects:
-        label = ("WEATHER-SUSPECT (throttled leg — re-measure with BenchOne "
+        label = ("WEATHER-SUSPECT (throttled leg — re-measure with Bench "
                  "on a quiet box before acting)"
                  if throttled else
                  "weather (runs disagree — a gust hit one run)")

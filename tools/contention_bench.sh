@@ -11,7 +11,7 @@
 # Usage:
 #   tools/contention_bench.sh [-n NSPIN] <main-class> [args...]
 #   tools/contention_bench.sh graft.Bench
-#   tools/contention_bench.sh -n 24 graft.BenchOne text_repetition_filter
+#   tools/contention_bench.sh -n 12 graft.Bench
 #   NSPIN=0 runs the identical java invocation quiet (the A/B control).
 #
 # Env passthrough: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
