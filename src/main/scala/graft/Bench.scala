@@ -2,41 +2,29 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Driver-run benchmark: times one `count()` action per SparkEntry query.
+/** Whole-surface timing run: times one `count()` action per SparkEntry
+  * query. `perfbench/run.py` is the benchmark gate; this main only checks
+  * that every query runs at the chosen scale and how long each takes.
   *
-  * Each query runs TWICE back to back and the MIN is reported
-  * (BASELINE.md r4): run 1 absorbs every one-time cost — Janino
-  * whole-stage-codegen compilation, the `TempDirs.writeOnce` layout /
-  * artifact builds (bucketed tables, z-order layouts, stream source
-  * chunks, gram/label tables), parquet footer caching — so run 2
-  * measures the query, not the setup, and the number is robust to the
-  * driver-box CPU contention that inflated BENCH_r03 4.5× over the
-  * same binary's quiet-box run (median query 1.4×, codegen-heavy
-  * queries 40–80×). Both runs land in BENCH_FULL.json per query.
+  * Each query runs TWICE back to back and the MIN is reported: run 1
+  * absorbs every one-time cost — Janino whole-stage-codegen compilation,
+  * the `TempDirs.writeOnce` layout / artifact builds, parquet footer
+  * caching — so run 2 measures the query, not the setup.
   *
-  * The driver captures only the LAST 2000 chars of stdout and parses the
-  * JSON line out of that tail (BENCH_r02.json: a full 106-entry
-  * per-query map made the line ~3 KB, the line start fell off the
-  * capture window, and the round's bench parsed as null). So the stdout
-  * line stays under ~1.5 KB — total + the slowest queries only — and the
-  * complete per-query map is written to BENCH_FULL.json in the repo root
-  * for the judge to read directly.
+  * A caller may capture only the last 2000 chars of stdout, so the stdout
+  * line stays at or under 1400 chars (total + the slowest queries only)
+  * and is the last thing the JVM prints. The complete per-query map, with
+  * every run, goes to `BENCH_LAST.json` in the working directory.
   */
 object Bench {
-  /** Fixed-work single-thread CPU spin → ns/op. Run before and after the
-    * bench so a leg carries its own box-health evidence: the r12 verdict
-    * had to reconstruct "127.7 s quiet vs 265.6 s throttled, same binary"
-    * by hand from cross-leg diffs; a pre/post calibration pair makes every
-    * leg self-classifying (r12 VERDICT next-round task 1). The spin is a
-    * xorshift loop — pure ALU, no memory traffic — so its ns/op moves only
-    * with clock speed / hypervisor steal, not with cache state.
+  /** Fixed-work single-thread CPU spin → ns/op, taken before and after
+    * the run so the record carries its own box-health evidence. The spin
+    * is a xorshift loop — pure ALU, no memory traffic — so its ns/op
+    * moves only with clock speed / hypervisor steal, not with cache state.
     */
   private def spinNsPerOp(): Double = {
-    // untimed warm-up (r13 ADVICE): calibPre is the first work in
-    // main(), and without this the timed loop includes interpreter/OSR
-    // JIT warm-up — the committed quiet legs showed pre ~2.50 vs post
-    // ~2.10 ns/op on a QUIET box, a ~20% inflation the "both >> quiet
-    // = started throttled" reading could misattribute to box weather
+    // untimed warm-up: the pre-run spin is the first work in main(), and
+    // without this the timed loop includes interpreter/OSR JIT warm-up
     var w = 0x9E3779B97F4A7C15L
     var j = 0L
     while (j < 50000000L) { w ^= w << 13; w ^= w >>> 7; w ^= w << 17; j += 1 }
@@ -50,30 +38,6 @@ object Bench {
     if (x == 42L) System.err.println("calib")
     dt.toDouble / n
   }
-
-  /** Quiet-band manifest (tools/quiet_band.json, maintained by
-    * tools/make_quiet_band.py): per-query quiet minima + the band legs'
-    * calibration spins + the band's sf dir. Parsed with regexes — the
-    * file is flat and machine-written, and the bench binary must not
-    * grow a JSON dependency. Returns (sf, minBandSpin, name -> quietSec).
-    */
-  private def loadQuietBand(): Option[(String, Option[Double], Map[String, Double])] =
-    try {
-      val txt = Files.readString(Paths.get("/root/repo/tools/quiet_band.json"))
-      val bandAt = txt.indexOf("\"band\"")
-      if (bandAt < 0) None
-      else {
-        val head = txt.substring(0, bandAt)
-        val sf = """"sf":\s*"([^"]+)"""".r.findFirstMatchIn(head).map(_.group(1))
-        val spins = """"post_ns_per_op":\s*([0-9.]+)""".r
-          .findAllMatchIn(head).map(_.group(1).toDouble).toSeq
-        val band = """"([A-Za-z0-9_]+)":\s*([0-9.eE+-]+)""".r
-          .findAllMatchIn(txt.substring(bandAt + 6))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        sf.filter(_ => band.nonEmpty)
-          .map(s => (s, if (spins.nonEmpty) Some(spins.min) else None, band))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** (steal, total) jiffies from the aggregate cpu line of /proc/stat.
     * Cumulative counters — steal% over the bench is the delta ratio. */
@@ -91,22 +55,13 @@ object Bench {
     val calibPre = spinNsPerOp()
     val (steal0, jiffies0) = procStatSample()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // partition-sensitivity knob (r11, r10 verdict #7): override the
-    // shuffle partition count independently of the thread count to
-    // prove the plans survive a cluster-like topology (200) and not
-    // just the tuned local one — the driver never sets it, so driver
-    // runs are unchanged
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      // UTC like every other entry point (Verify/Plans/
-      // specs): the NTZ timestamp reads and string->timestamp cutoff
-      // literals are session-TZ-dependent, and an unpinned zone would
-      // make the bench silently measure different row counts than
-      // Verify verifies (r7 review — the sbt path was covered by
-      // build.sbt's -Dspark.sql.session.timeZone, the plain-java path
-      // only by convention)
+      .config("spark.sql.shuffle.partitions", cpus)
+      // UTC like every other entry point (Verify/Plans/specs): the NTZ
+      // timestamp reads and string->timestamp cutoff literals are
+      // session-TZ-dependent, and an unpinned zone would make the bench
+      // measure different row counts than Verify verifies
       .config("spark.sql.session.timeZone", "UTC")
       // a loaded box can stall a broadcast-side job past the 5-min
       // default and fail the query outright; the bench should measure
@@ -116,10 +71,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM / codegen / parquet-reader paths once so per-query
-    // timings measure the queries, not session startup (first-query
-    // numbers were otherwise inflated ~3s by map ordering luck).
-    // NonFatal only: a fatal JVM error must abort the run here, not
-    // resurface as bogus timings later (r7 ADVICE)
+    // timings measure the queries, not session startup. NonFatal only:
+    // a fatal JVM error must abort the run here, not resurface as bogus
+    // timings later
     try SparkEntry.entry(spark).count()
     catch { case scala.util.control.NonFatal(_) => () }
     val runsPerQuery = 2
@@ -147,18 +101,13 @@ object Bench {
         .mkString("{", ",", "}")
     // the total sums only successful mins: adding the -1.0 sentinel of
     // a doubly-failed query would SUBTRACT a second per failure while
-    // still counting it in n_queries — failures are surfaced as their
-    // own count instead
+    // still counting it in n_queries. value/n_queries is a per-query
+    // average only when n_failed = 0
     val total = mins.values.filter(_ >= 0).sum
     val nFailed = mins.values.count(_ < 0)
-    // n_success is the count the total actually sums over (ADVICE r5:
-    // value/n_queries is a per-query average only when n_failed = 0 —
-    // cross-round total comparisons need n_failed = 0 on both sides)
     val nSuccess = mins.size - nFailed
-    // box-health postamble (r12 VERDICT task 1): post-run spin + steal%
-    // over the whole bench interval. calib_post >> calib_pre = the box
-    // degraded DURING the leg; both >> ~0.4 ns/op = the leg started
-    // throttled. steal_pct > ~1% = hypervisor contention.
+    // box health over the whole run: calib_post >> calib_pre = the box
+    // degraded during the run; steal_pct > ~1% = hypervisor contention
     val calibPost = spinNsPerOp()
     val (steal1, jiffies1) = procStatSample()
     val stealPct =
@@ -166,91 +115,27 @@ object Bench {
       else 0.0
     val calibJson =
       f"""{"pre_ns_per_op":$calibPre%.4f,"post_ns_per_op":$calibPost%.4f,"steal_pct":$stealPct%.3f}"""
-    // self-classifying leg verdict (r13 VERDICT task 1): the r13 driver
-    // record said 660 s / "2.5x regression" while the same binary
-    // measured 128.8 s quiet — the classifier that proved it weather
-    // lived only in tools/. Compute the same three signals
-    // classify_bench.py uses (median per-query ratio vs the committed
-    // quiet band, post-spin vs the band legs' spin, steal%) and emit
-    // them INTO the stdout JSON so the permanent BENCH_rNN.json record
-    // carries its own verdict. Thresholds mirror classify_bench.py
-    // exactly — the done-check is that the two agree on the same leg.
-    val legVerdictJson: String = loadQuietBand() match {
-      case Some((bandSf, bandSpin, band)) if bandSf == sfDir =>
-        val ratios = mins.toSeq.collect {
-          case (q, t) if t >= 0 && band.get(q).exists(_ > 0) => t / band(q)
-        }.sorted
-        if (ratios.isEmpty) """"leg":"NO-BAND""""
-        else {
-          val med =
-            if (ratios.length % 2 == 1) ratios(ratios.length / 2)
-            else (ratios(ratios.length / 2 - 1) + ratios(ratios.length / 2)) / 2
-          val spinRatio = bandSpin.map(calibPost / _)
-          val throttled = med > 1.3 ||
-            spinRatio.exists(_ > 1.3) || stealPct > 6.0
-          val label = if (throttled) "THROTTLED" else "QUIET"
-          f""""band_median_ratio":$med%.3f,""" +
-            spinRatio.map(r => f""""band_spin_ratio":$r%.3f,""").getOrElse("") +
-            s""""leg":"$label""""
-        }
-      // sweeps at other scales have no band — say so rather than omit
-      case Some(_) => """"leg":"NO-BAND""""
-      case None => """"leg":"NO-BAND""""
-    }
     def line(qs: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${mins.size},"n_success":$nSuccess,"n_failed":$nFailed,"runs_per_query":$runsPerQuery,"agg":"min","calibration":$calibJson,$legVerdictJson,"queries":$qs,"sf":"$sfDir"}"""
-    // full map (min + every run; negative run = that attempt threw) →
-    // repo file (judge-readable; stdout would truncate it)
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${mins.size},"n_success":$nSuccess,"n_failed":$nFailed,"runs_per_query":$runsPerQuery,"agg":"min","calibration":$calibJson,"queries":$qs,"sf":"$sfDir"}"""
+    // full map (min + every run; negative run = that attempt threw)
     val bySlowest = mins.toSeq.sortBy(-_._2)
     val fullQs = bySlowest.map { case (k, v) =>
       "\"" + k + "\":{\"min\":" + fmt(v) + ",\"runs\":[" +
         results(k).map(fmt).mkString(",") + "]}"
     }.mkString("{", ",", "}")
-    // Artifact hygiene (r12 VERDICT task 8): every leg's full map goes to
-    // BENCH_LAST.json; BENCH_FULL.json is only REPLACED when this leg is
-    // better (lower total at equal surface/sf) or the surface changed
-    // (different query count / sf ⇒ old best is for a different binary).
-    // This stops an end-of-round throttled driver leg from overwriting
-    // the committed quiet best, which r12 lost to `git show`.
-    try Files.writeString(Paths.get("/root/repo/BENCH_LAST.json"),
-      line(fullQs) + "\n")
-    catch { case _: Throwable => () }
-    try {
-      val fullPath = Paths.get("/root/repo/BENCH_FULL.json")
-      val replace =
-        if (!Files.exists(fullPath)) true
-        else {
-          val old = Files.readString(fullPath)
-          def grab(re: String): Option[String] =
-            re.r.findFirstMatchIn(old).map(_.group(1))
-          val oldTotal = grab(""""value":([0-9.]+)""").map(_.toDouble)
-          val oldN = grab(""""n_queries":([0-9]+)""").map(_.toInt)
-          val oldSf = grab(""""sf":"([^"]+)"""")
-          // a leg at a DIFFERENT sf (scale sweeps) never touches the
-          // canonical file — only same-sf legs compete, and they win
-          // by growing the surface or by a lower total, and ONLY when
-          // faultless: a throttled/partially-failed first leg after a
-          // surface change must not become the committed quiet best
-          // either (r13 ADVICE — the surface-changed branch previously
-          // replaced unconditionally)
-          nFailed == 0 && oldSf.contains(sfDir) && (
-            oldTotal.isEmpty || oldN.isEmpty ||
-              oldN.get != mins.size ||
-              total < oldTotal.get)
-        }
-      if (replace) Files.writeString(fullPath, line(fullQs) + "\n")
-    } catch { case _: Throwable => () }
-    // stdout: drop fastest entries until the line fits the 2000-char
-    // driver tail capture with headroom for sbt's trailing lines.
-    // spark.stop() runs FIRST so no straggler WARN/progress line can
-    // land on stdout after the JSON and push its start off the tail
-    // window (BENCH_r07.json parsed as null exactly this way — r7
-    // VERDICT item 8); the JSON is then the last thing this JVM prints.
+    try Files.writeString(Paths.get("BENCH_LAST.json"), line(fullQs) + "\n")
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] BENCH_LAST.json not written: $e")
+    }
+    // stdout: drop fastest entries until the line fits the 1400-char
+    // budget. spark.stop() runs FIRST so no straggler WARN/progress line
+    // can land on stdout after the JSON and push its start off a
+    // tail capture
     val n = (bySlowest.length to 1 by -1)
       .find(k => line(toJson(bySlowest.take(k))).length <= 1400)
       .getOrElse(1)
-    // stop() can itself throw on a wedged box — the JSON tail line must
-    // still print (the BENCH file write above is already guarded)
+    // stop() can itself throw on a wedged box — the JSON line must
+    // still print
     try spark.stop()
     catch { case scala.util.control.NonFatal(_) => () }
     println(line(toJson(bySlowest.take(n))))

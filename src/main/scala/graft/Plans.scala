@@ -2,61 +2,28 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Dev/audit main: dump `explain("formatted")` for the headline queries
-  * to PLANS.md — the physical-plan evidence that pushdown, pruning,
+/** Dev/audit main: dump `explain("formatted")` for the SparkEntry
+  * queries — the physical-plan evidence that pushdown, pruning,
   * broadcast, partial aggregation, and codegen engage as designed.
+  *
+  *   runMain graft.Plans                          every query → PLANS.md
+  *   runMain graft.Plans <outDir> <tag> <query...>  <outDir>/<query>_<tag>.txt
+  *
+  * A query whose plan dump itself fails is recorded as `PLANFAIL: ...`
+  * rather than aborting the run.
   */
 object Plans {
-  private val headline = Seq(
-    "agg_group_sums", "scan_parquet_pruned", "filter_comparison",
-    "join_inner_broadcast", "join_inner_shuffle", "join_multiway",
-    "join_bucketed", "join_skew_salted", "sort_limit_topk",
-    "topk_per_group", "win_running_sum", "stream_tumbling",
-    "dedup_minhash", "dedup_simhash", "dedup_embedding_cosine",
-    "dedup_cc_clusters", "agg_pivot", "source_minhash_sim",
-    "sim_search_topk", "ann_lsh_topk", "ann_ivf_topk",
-    "dedup_ngram_jaccard", "sample_hash", "shuffle_global",
-    "pack_token_budget", "mix_weighted", "merge_upsert",
-    "scd2_intervals", "sql_exists_subquery", "sql_scalar_subquery",
-    "sql_not_in_subquery", "join_range_binned", "table_checksum",
-    "ts_gap_fill", "ts_locf_ffill", "profile_columns",
-    "text_pii_scrub", "ts_sessionize", "ts_streaks",
-    "contamination_ngram", "dedup_incremental", "snapshot_diff",
-    "sql_exists_or", "agg_skew_kurt", "cluster_zorder",
-    "text_repetition_filter", "sample_stratified", "join_dpp",
-    "dedup_near_canonical", "text_df_quality", "source_range",
-    "ts_multi_grain_rollup", "agg_percentile_cont", "ann_ivf_built_topk",
-    "dedup_ngram_prefix", "mix_temperature", "ts_resample_ohlc",
-    "text_len_trim", "sql_recursive_cte", "scan_schema_evolution",
-    "sql_lateral_topk", "fn_variant", "mm_wav_meta",
-    "text_heavy_hitters", "text_tfidf_topterms", "agg_bitmap_distinct",
-    "fn_xml", "ts_ewma", "fn_collation", "join_skew_aqe",
-    "mm_feature_extract", "mm_frame_sample", "text_lm_score",
-    "dedup_url_canonical", "text_chunk_windows", "text_bm25_topk",
-    "emb_quantize_int8", "ts_outlier_mad", "join_runtime_bloom",
-    "ann_pq_topk", "graph_edges_topk", "graph_triangle_count",
-    "graph_pagerank", "graph_bfs_hops", "ts_interpolate_linear",
-    "stream_foreachbatch_upsert", "fn_interval_arith",
-    "ts_funnel_steps", "graph_link_predict",
-    "dedup_bloom_prefilter", "emb_mrl_topk", "dedup_chunk_global",
-    "join_asof_nearest", "text_quality_topfrac",
-    "dedup_semantic", "text_classifier_score", "text_url_blocklist",
-    "mm_phash_dedup", "join_asof_tolerance", "profile_observe",
-    "sql_udf_create", "sql_pipe_syntax", "sql_parameterized",
-    "contamination_embedding", "mix_repeat_by_quality",
-    "table_time_travel", "table_vacuum", "mm_png_meta",
-    "ts_outlier_sampled", "dedup_ngram_capped", "join_asof_native",
-    "pack_balanced_bins", "sample_split", "table_schema_merge",
-    "ts_holt_linear", "fn_try_arith", "ts_session_window",
-    "scan_parquet_bloom", "profile_drift", "scan_csv_permissive",
-    "ts_cum_distinct", "scan_path_filtered", "join_null_safe",
-    "set_intersect_all", "set_except_all", "fn_array_higher_order",
-    "table_restore", "mm_audio_features", "graph_degree_hist",
-    "scan_text_wholetext", "join_asof_native_fwd", "text_ccnet_buckets",
-    "emb_norm_stats", "agg_collect_set", "fn_string_pad_trim",
-    "agg_variance_exact")
+  private def explain(spark: SparkSession, sfDir: String, name: String): String =
+    try SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        s"PLANFAIL: ${e.getClass.getName}: ${e.getMessage}\n"
+    }
 
   def main(args: Array[String]): Unit = {
+    require(args.isEmpty || args.length >= 3,
+      "usage: Plans [outDir tag query...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = SparkSession.builder()
       .master("local[4]")
@@ -65,39 +32,34 @@ object Plans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sb = new StringBuilder
-    sb ++= "# PLANS — formatted physical plans of the headline queries\n\n"
-    sb ++= s"Auto-generated by `graft.Plans` at $sfDir. Things to check\n"
-    sb ++= "per plan: `PushedFilters`/`ReadSchema` on scans (pushdown +\n"
-    sb ++= "pruning), `BroadcastHashJoin` on dim joins, partial+final\n"
-    sb ++= "`HashAggregate`, `TakeOrderedAndProject` for top-k, no\n"
-    sb ++= "`CartesianProduct` in the LSH bucket joins, no `Exchange`\n"
-    sb ++= "under the bucketed join. Build-step queries (cc labels, gram\n"
-    sb ++= "tables, IVF centroids, layout rewrites) show their READ-side\n"
-    sb ++= "plan — the once-per-JVM artifact build runs before the dump\n"
-    sb ++= "(its shape is documented in the operator scaladocs).\n"
-    // r9: dump EVERY query, not a hand-maintained headline list — the
-    // list had drifted to 136 of 243 (r8 VERDICT item 8). Headline
-    // names first (stable review order for the long-tracked plans),
-    // then every remaining key alphabetically. A query whose plan
-    // dump itself fails is recorded as such rather than aborting the
-    // whole file.
-    val rest = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(headline.contains)
-    (headline ++ rest).foreach { name =>
-      sb ++= s"\n## $name\n\n```\n"
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        sb ++= df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          sb ++= s"PLANFAIL: ${e.getClass.getName}: ${e.getMessage}\n"
+    if (args.isEmpty) {
+      val names = SparkEntry.queries.keys.toSeq.sorted
+      val sb = new StringBuilder
+      sb ++= "# PLANS — formatted physical plans of every query\n\n"
+      sb ++= s"Auto-generated by `graft.Plans` at $sfDir. Things to check\n"
+      sb ++= "per plan: `PushedFilters`/`ReadSchema` on scans (pushdown +\n"
+      sb ++= "pruning), `BroadcastHashJoin` on dim joins, partial+final\n"
+      sb ++= "`HashAggregate`, `TakeOrderedAndProject` for top-k, no\n"
+      sb ++= "`CartesianProduct` in the LSH bucket joins, no `Exchange`\n"
+      sb ++= "under the bucketed join. Build-step queries (cc labels, gram\n"
+      sb ++= "tables, IVF centroids, layout rewrites) show their READ-side\n"
+      sb ++= "plan — the once-per-JVM artifact build runs before the dump\n"
+      sb ++= "(its shape is documented in the operator scaladocs).\n"
+      names.foreach { name =>
+        sb ++= s"\n## $name\n\n```\n${explain(spark, sfDir, name)}```\n"
       }
-      sb ++= "```\n"
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println(s"wrote PLANS.md (${names.size} plans)")
+    } else {
+      val outDir = Paths.get(args(0))
+      val tag = args(1)
+      Files.createDirectories(outDir)
+      args.drop(2).foreach { name =>
+        val out = outDir.resolve(s"${name}_$tag.txt")
+        Files.writeString(out, explain(spark, sfDir, name))
+        println(s"wrote $out")
+      }
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${headline.size + rest.size} plans)")
     spark.stop()
   }
 }

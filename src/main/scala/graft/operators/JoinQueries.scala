@@ -19,35 +19,10 @@ import org.apache.spark.sql.types._
   */
 object JoinQueries {
 
-  /** One cached AQE-off child session per parent session for the
-    * native as-of queries (r9): `newSession()` + conf + fresh
-    * session-state per invocation cost ~0.15 s of the operator's
-    * bench time; the child is a fixed execution environment, so build
-    * it once. WeakHashMap keyed by the PARENT so a stopped session's
-    * entry is collectable (the SqlQueries.views pattern).
-    */
-  private val asofSessions =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.SparkSession]
-  private def asofSession(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    asofSessions.synchronized {
-      var c = asofSessions.get(s)
-      if (c == null) {
-        c = s.newSession()
-        c.conf.set("spark.sql.adaptive.enabled", "false")
-        asofSessions.put(s, c)
-      }
-      c
-    }
-
-  /** Cached fixed-conf child sessions for the conf-demo joins (r14 —
-    * the asofSession/replaySession pattern applied to the two
-    * remaining per-invocation `newSession()` sites in bench-hot
-    * paths): join_skew_aqe and join_runtime_bloom each rebuilt
-    * SessionState on every call (~0.15 s of pure fixed cost, paid
-    * twice per bench leg). The child is a fixed execution environment
-    * keyed by a profile name; neither query registers views or UDFs,
+  /** Cached fixed-conf child sessions for the conf-demo joins:
+    * join_skew_aqe and join_runtime_bloom would otherwise rebuild
+    * SessionState on every call (~0.15 s of pure fixed cost). The
+    * child is a fixed execution environment keyed by a profile name; neither query registers views or UDFs,
     * so sharing one across invocations cannot collide. WeakHashMap
     * keyed by the PARENT so a stopped session's entries are
     * collectable.
@@ -270,19 +245,19 @@ object JoinQueries {
     // lateral-join SQL spelling of the same semantics — a window/
     // lateral spelling and a custom physical operator must hash to
     // the same result, the dedup_ngram double-entry pattern applied
-    // to a whole-operator Catalyst extension. Runs on a child session
-    // with AQE off: the exec fails fast (r9 alignment guard) rather
-    // than walk partitionings AQE re-planned independently.
+    // to a whole-operator Catalyst extension. AsofJoinApi runs it on
+    // its cached AQE-off child of the caller's session: the exec fails
+    // fast (alignment guard) rather than walk partitionings AQE
+    // re-planned independently.
     "join_asof_native" -> ((s, d) => {
-      val s2 = asofSession(s)
-      val ev = events(s2, d)
+      val ev = events(s, d)
         .select(col("event_id"), col("user_id"), col("ts_us"))
-      val signups = events(s2, d)
+      val signups = events(s, d)
         .filter(col("event_type") === "signup")
         .select(col("user_id").as("s_user_id"),
           col("ts_us").as("last_signup_us"),
           col("event_id").as("signup_event_id"))
-      graft.plans.AsofJoinApi.asofJoin(s2, ev, signups,
+      graft.plans.AsofJoinApi.asofJoin(s, ev, signups,
           leftKeyCol = "user_id", rightKeyCol = "s_user_id",
           leftTimeCol = "ts_us", rightTimeCol = "last_signup_us",
           rightTiebreak = Seq("signup_event_id"))
@@ -297,15 +272,14 @@ object JoinQueries {
     // belongs to the key), same declared requirements, same O(1)
     // state, same payload contract (r9).
     "join_asof_native_fwd" -> ((s, d) => {
-      val s2 = asofSession(s)
-      val ev = events(s2, d)
+      val ev = events(s, d)
         .select(col("event_id"), col("user_id"), col("ts_us"))
-      val signups = events(s2, d)
+      val signups = events(s, d)
         .filter(col("event_type") === "signup")
         .select(col("user_id").as("s_user_id"),
           col("ts_us").as("next_signup_us"),
           col("event_id").as("signup_event_id"))
-      graft.plans.AsofJoinApi.asofJoin(s2, ev, signups,
+      graft.plans.AsofJoinApi.asofJoin(s, ev, signups,
           leftKeyCol = "user_id", rightKeyCol = "s_user_id",
           leftTimeCol = "ts_us", rightTimeCol = "next_signup_us",
           rightTiebreak = Seq("signup_event_id"), forward = true)
@@ -324,15 +298,14 @@ object JoinQueries {
     // long: the consumed candidate's time). AsofJoinNativeSpec proves
     // row-identity of nearest_us against the window spelling.
     "join_asof_native_nearest" -> ((s, d) => {
-      val s2 = asofSession(s)
-      val ev = events(s2, d)
+      val ev = events(s, d)
         .select(col("event_id"), col("user_id"), col("ts_us"))
-      val signups = events(s2, d)
+      val signups = events(s, d)
         .filter(col("event_type") === "signup")
         .select(col("user_id").as("s_user_id"),
           col("ts_us").as("nearest_signup_us"),
           col("event_id").as("signup_event_id"))
-      graft.plans.AsofJoinApi.asofJoin(s2, ev, signups,
+      graft.plans.AsofJoinApi.asofJoin(s, ev, signups,
           leftKeyCol = "user_id", rightKeyCol = "s_user_id",
           leftTimeCol = "ts_us", rightTimeCol = "nearest_signup_us",
           rightTiebreak = Seq("signup_event_id"), nearest = true)
@@ -463,22 +436,26 @@ object JoinQueries {
     // PlanShapeSpec asserts the executed plan actually split
     // (skew=true on the SMJ).
     "join_skew_aqe" -> ((s, d) => {
-      // Skew thresholds DERIVED from the fact table's input bytes
-      // (r15, r14 VERDICT task 2 / guide §2 scale-adaptive partition
-      // sizing — were fixed 2 KB/4 KB since r6): the hot key owns ~90%
-      // of the fact's shuffle bytes, so a threshold at 0.1% of the
-      // fact's on-disk size sits orders of magnitude below the hot
-      // partition at every scale (the split always fires where the
-      // demo needs it) while scaling up with the input so the
+      // Skew thresholds DERIVED from the fact table's input bytes: the
+      // hot key owns ~90% of the fact's shuffle bytes, so a threshold at
+      // 0.1% of the fact's on-disk size sits orders of magnitude below
+      // the hot partition at every scale (the split always fires where
+      // the demo needs it) while scaling up with the input so the
       // advisory size — and with it the reducer-task count — stays
-      // proportionate at any corpus size instead of exploding tiny
-      // tasks; capped at the 256 MB production default, where this
-      // conf profile converges to stock AQE. Derived values join the
+      // proportionate at any corpus size; capped at the 256 MB
+      // production default, where this conf profile converges to stock
+      // AQE. The threshold compares ON-DISK fact bytes (full-width,
+      // compressed parquet) with SHUFFLE bytes (the narrow l_orderkey/
+      // l_quantity/skew_key projection): it holds only while the hot
+      // partition's shuffle bytes exceed 0.1% of the file, which the
+      // narrow projection clears by a wide margin (PlanShapeSpec pins
+      // skew=true). The advisory size has a 2 KB floor so the smallest
+      // fixtures do not split the hot partition into sub-KB reducers.
+      // However small the advisory size, the hot partition splits into
+      // at most 16 reducer tasks, one per map chunk below: AQE splits a
+      // skewed partition by whole map outputs. Derived values join the
       // session-cache key so two scales in one JVM never share a
-      // mis-sized profile. Measured (TaskProbe, 32 cpus, sf0.1): the
-      // r14 constants were NOT in fact task-exploded (join stage 18
-      // tasks, bounded by the 16 map chunks) — this change makes that
-      // boundedness a derived property instead of a lucky constant.
+      // mis-sized profile.
       val thrBytes = math.min(256L << 20, math.max(1024L,
         graft.ParquetMeta.byteSize(s"$d/lineitem.parquet") / 1024))
       val s2 = confSession(s, s"skew_aqe_$thrBytes") { c =>
@@ -489,7 +466,7 @@ object JoinQueries {
           "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
           thrBytes.toString)
         c.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-          math.max(512L, thrBytes / 2).toString)
+          math.max(2048L, thrBytes / 2).toString)
         c.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         c.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
       }
@@ -498,10 +475,10 @@ object JoinQueries {
         .withColumn("skew_key",
           when(col("l_orderkey") % 100 < 90, 0L)
             .otherwise(col("l_orderkey") % 100))
-      // 4 partitions, not defaultParallelism: 100 dim rows spread over
-      // 32 core-count partitions were 32 near-empty scan tasks + 32
-      // tiny shuffle writes per invocation (TaskProbe) — pure
-      // scheduling overhead at any core count (r15)
+      // 4 partitions, not defaultParallelism: the dim's scan and
+      // shuffle-write task count must not grow with the core count —
+      // 100 rows spread over one partition per core are that many
+      // near-empty tasks, pure scheduling overhead
       val dim = s2.range(0, 100, 1, 4)
         .select(col("id").as("skew_key"),
           format_string("k%03d", col("id")).as("label"))

@@ -397,9 +397,10 @@ object AsofJoinApi {
     * so on a default-configured session (AQE on) the guard fires
     * almost every run (ADVICE r9). Executing the as-of plan on an
     * AQE-off child makes the public facade safe on any session —
-    * callers whose session already has AQE off (the fixture path) are
-    * returned as-is. WeakHashMap keyed by the parent so a stopped
-    * session's child is collectable.
+    * callers whose session already has AQE off are returned as-is.
+    * The fixture operators (`join_asof_native*`) pass the caller's
+    * session and so share this one child. WeakHashMap keyed by the
+    * parent so a stopped session's child is collectable.
     */
   private val execSessions =
     new java.util.WeakHashMap[SparkSession, SparkSession]

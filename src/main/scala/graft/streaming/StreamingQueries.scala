@@ -349,9 +349,9 @@ object StreamingQueries {
     * checkpoint-resume queries and StatefulRestartSpec, which manage
     * their own epochs.
     */
-  /** One cached replay child session per (parent, provider) — the
-    * asofSession pattern: the child is a fixed execution environment
-    * (2 shuffle partitions, optional RocksDB provider), so rebuilding
+  /** One cached replay child session per (parent, provider): the
+    * child is a fixed execution environment (2 shuffle partitions,
+    * optional RocksDB provider), so rebuilding
     * SessionState per replay invocation was pure fixed cost. Memory
     * sink table names are per-operator, so sharing one session across
     * replays cannot collide.

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Parallel, timeout-guarded variant of oracle_check.py for LARGE
-fixtures (the sf1 leg).  Same driver-faithful compare (columns sorted
-by name, every cell stringified, exact string equality — see
-oracle_check.py's docstring for why no normalization is allowed), but:
+fixtures (the sf1 leg).  Same driver-faithful compare, fixture views
+and verify_failures.json handling, imported from oracle_check.py (see
+its docstring for why no normalization is allowed), but:
 
   - each oracle query runs in its OWN worker process with a wall-clock
     timeout (default 600 s), so the handful of deliberately-quadratic
@@ -25,43 +25,17 @@ import sys
 import time
 from pathlib import Path
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+from oracle_check import compare, connect, verify_failures
 
 
 def run_one(args):
     sf_dir, out_dir, name, sql = args
-    import duckdb
-    import pyarrow.parquet as pq
     t0 = time.time()
     try:
-        con = duckdb.connect()
+        con = connect(sf_dir)
         con.execute("SET threads=4")
-        for t in TABLES:
-            p = Path(sf_dir, f"{t}.parquet")
-            src = f"{p}/*.parquet" if p.is_dir() else str(p)
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{src}')")
-        sdf = pq.read_table(f"{out_dir}/{name}").to_pandas()
-        odf = con.sql(sql).df()
-        dt = time.time() - t0
-        if sorted(sdf.columns) != sorted(odf.columns):
-            return name, dt, (f"SCHEMA: spark={sorted(sdf.columns)} "
-                              f"oracle={sorted(odf.columns)}")
-        sdf = sdf[sorted(sdf.columns)]
-        odf = odf[sorted(odf.columns)]
-        if len(sdf) != len(odf):
-            return name, dt, f"ROWS: spark={len(sdf)} oracle={len(odf)}"
-        a = sdf.astype(str).values.tolist()
-        b = odf.astype(str).values.tolist()
-        for i, (ra, rb) in enumerate(zip(a, b)):
-            if ra != rb:
-                for j, (ca, cb) in enumerate(zip(ra, rb)):
-                    if ca != cb:
-                        return name, dt, (
-                            f"VALUE: row {i} col {sdf.columns[j]}: "
-                            f"spark={ca!r} oracle={cb!r}")
-        return name, dt, "OK"
+        verdict = compare(con, out_dir, name, sql) or "OK"
+        return name, time.time() - t0, verdict
     except Exception as e:
         return name, time.time() - t0, \
             f"ERROR: {type(e).__name__}: {str(e)[:300]}"
@@ -83,15 +57,19 @@ def main():
     args = ap.parse_args()
 
     oracle = json.loads(Path(args.out_dir, "oracle_sql.json").read_text())
+    failed = verify_failures(args.out_dir)
     if args.only:
         keep = set(args.only.split(","))
         oracle = {k: v for k, v in oracle.items() if k in keep}
+        failed = {k: v for k, v in failed.items() if k in keep}
     dumped = {p.name for p in Path(args.out_dir).iterdir() if p.is_dir()}
 
     jobs = []
     results = {}
     for name in sorted(oracle):
-        if name not in dumped:
+        if name in failed:
+            results[name] = (0.0, f"VERIFY: {failed[name]}")
+        elif name not in dumped:
             results[name] = (0.0, "MISSING_SPARK_OUTPUT")
         else:
             jobs.append((args.sf_dir, args.out_dir, name, oracle[name]))
@@ -165,12 +143,17 @@ def main():
         dt, v = results[name]
         if v not in ("OK", "TIMEOUT"):
             print(f"FAIL {name}: {v}")
+    for name in sorted(set(failed) - set(oracle)):
+        print(f"FAIL {name}: VERIFY: {failed[name]}")
     print(f"\n{n_ok}/{len(oracle)} OK, {n_to} TIMEOUT (oracle-side), "
           f"{len(oracle) - n_ok - n_to} FAIL")
     # exit codes: 0 = everything compared green; 2 = no divergence but
     # some oracles timed out (NOT a pass — a hung oracle can hide a
     # regression as easily as a quadratic CTE; raise --timeout and
-    # re-run the timed-out names with --only); 1 = real divergence
+    # re-run the timed-out names with --only); 1 = real divergence or
+    # a query graft.Verify could not dump
+    if failed:
+        sys.exit(1)
     if n_ok == len(oracle):
         sys.exit(0)
     sys.exit(2 if n_ok + n_to == len(oracle) else 1)
