@@ -10,20 +10,26 @@ import java.nio.file.{Files, Paths}
   *   runMain graft.Plans <outDir> <tag> <query...>  <outDir>/<query>_<tag>.txt
   *
   * A query whose plan dump itself fails is recorded as `PLANFAIL: ...`
-  * rather than aborting the run.
+  * rather than aborting the run. A name that is not a query is a usage
+  * error: it fails before the session is built and writes no file.
   */
 object Plans {
-  private def explain(spark: SparkSession, sfDir: String, name: String): String =
-    try SparkEntry.queries(name)(spark, sfDir).queryExecution
+  private def explain(spark: SparkSession, sfDir: String, name: String): String = {
+    val q = SparkEntry.queries(name)
+    try q(spark, sfDir).queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode)
     catch {
       case scala.util.control.NonFatal(e) =>
         s"PLANFAIL: ${e.getClass.getName}: ${e.getMessage}\n"
     }
+  }
 
   def main(args: Array[String]): Unit = {
-    require(args.isEmpty || args.length >= 3,
-      "usage: Plans [outDir tag query...]")
+    val usage = "usage: Plans [outDir tag query...]"
+    require(args.isEmpty || args.length >= 3, usage)
+    val unknown = args.drop(2).filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"$usage; unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = SparkSession.builder()
       .master("local[4]")

@@ -189,20 +189,13 @@ object AggQueries {
 
     // Explicit grouping sets via SQL (the one §2 operator that is
     // SQL-only in the public Dataset API).
-    "agg_grouping_sets" -> ((s, d) => {
-      // view name scoped by input dir like every other d-dependent
-      // artifact key: a fixed name would let concurrent invocations at
-      // different scale factors replace each other's view between
-      // registration and analysis (r7 review)
-      val view = "graft_lineitem_gs_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      lineitem(s, d).createOrReplaceTempView(view)
+    "agg_grouping_sets" -> ((s, d) =>
       s.sql(
         s"""SELECT grouping_id() AS gid, l_returnflag, l_linestatus,
            |  count(1) AS n, CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-           |FROM $view
+           |FROM ${view(s, d, "lineitem")}
            |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-           |ORDER BY gid, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)
-    }),
+           |ORDER BY gid, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)),
 
     // Post-aggregation filter (HAVING).
     "agg_having" -> ((s, d) =>

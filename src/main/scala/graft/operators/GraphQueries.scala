@@ -102,7 +102,7 @@ object GraphQueries {
         .drop("rn")
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    parquet(s, dir)
   }
 
   /** Symmetrized distinct edge set (x, y) — BOTH directions of every
@@ -187,7 +187,7 @@ object GraphQueries {
         labels.write.mode("overwrite").parquet(dir)
       } finally und.unpersist()
     }
-    s.read.parquet(dir)
+    parquet(s, dir)
   }
 
   /** Peel rounds / threshold of the k-core build (see `graph_kcore`). */
@@ -237,7 +237,7 @@ object GraphQueries {
       und.groupBy(col("x")).agg(count(lit(1)).as("core_degree"))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    parquet(s, dir)
   }
 
   val queries: Map[String, Q] = Map(

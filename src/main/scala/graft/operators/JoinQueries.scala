@@ -19,29 +19,6 @@ import org.apache.spark.sql.types._
   */
 object JoinQueries {
 
-  /** Cached fixed-conf child sessions for the conf-demo joins:
-    * join_skew_aqe and join_runtime_bloom would otherwise rebuild
-    * SessionState on every call (~0.15 s of pure fixed cost). The
-    * child is a fixed execution environment keyed by a profile name; neither query registers views or UDFs,
-    * so sharing one across invocations cannot collide. WeakHashMap
-    * keyed by the PARENT so a stopped session's entries are
-    * collectable.
-    */
-  private val confSessions =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, org.apache.spark.sql.SparkSession]]
-  private def confSession(s: org.apache.spark.sql.SparkSession, key: String)(
-      init: org.apache.spark.sql.SparkSession => Unit): org.apache.spark.sql.SparkSession =
-    confSessions.synchronized {
-      var m = confSessions.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map
-          .empty[String, org.apache.spark.sql.SparkSession]
-        confSessions.put(s, m)
-      }
-      m.getOrElseUpdate(key, { val c = s.newSession(); init(c); c })
-    }
-
   val queries: Map[String, Q] = Map(
     // Fact ⋈ broadcast dims (customer⋈nation⋈region).
     "join_inner_broadcast" -> ((s, d) =>
@@ -458,7 +435,11 @@ object JoinQueries {
       // mis-sized profile.
       val thrBytes = math.min(256L << 20, math.max(1024L,
         graft.ParquetMeta.byteSize(s"$d/lineitem.parquet") / 1024))
-      val s2 = confSession(s, s"skew_aqe_$thrBytes") { c =>
+      // one fixed-conf child session per (caller, profile): rebuilding
+      // SessionState per call is pure fixed cost, and nothing registers
+      // views or UDFs on the child, so every call can share it
+      val s2 = graft.SessionMemo(s, ("join_conf", s"skew_aqe_$thrBytes")) {
+        val c = s.newSession()
         c.conf.set("spark.sql.adaptive.enabled", "true")
         c.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         c.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
@@ -469,6 +450,7 @@ object JoinQueries {
           math.max(2048L, thrBytes / 2).toString)
         c.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         c.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        c
       }
       val fact = lineitem(s2, d)
         .select(col("l_orderkey"), col("l_quantity"))
@@ -567,7 +549,7 @@ object JoinQueries {
           when(col("n_nationkey") === 0, "A").otherwise("R").as("flag"),
           when(col("n_nationkey") === 0, "returned").otherwise("refunded")
             .as("label"))
-      s.read.parquet(dir)
+      parquet(s, dir)
         .join(dim, col("l_returnflag") === col("flag"))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_rows"),
@@ -590,13 +572,15 @@ object JoinQueries {
     // exactly when the join must shuffle. Plan-asserted in
     // PlanShapeSpec (might_contain on the fact scan's filter).
     "join_runtime_bloom" -> ((s, d) => {
-      val s2 = confSession(s, "runtime_bloom") { c =>
+      val s2 = graft.SessionMemo(s, ("join_conf", "runtime_bloom")) {
+        val c = s.newSession()
         c.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         c.conf.set(
           "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
           "0")
         c.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         c.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        c
       }
       val dim = orders(s2, d)
         .filter(col("o_orderpriority") === "1-URGENT" &&

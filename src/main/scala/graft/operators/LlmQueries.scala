@@ -234,7 +234,7 @@ object LlmQueries {
         pairs.unpersist()
       }
     }
-    s.read.parquet(dir)
+    parquet(s, dir)
   }
 
   /** (doc_id, gram) over distinct word n-grams per doc, materialized
@@ -262,7 +262,7 @@ object LlmQueries {
           .as("gram"))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    parquet(s, dir)
   }
 
   private def bigramTable(s: SparkSession, d: String): DataFrame =

@@ -202,7 +202,7 @@ object SimilarityQueries {
           size(col("grams")).cast("long").as("n_grams"))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    parquet(s, dir)
   }
 
   /** Exact verification of candidate (doc_a, doc_b) pairs: join back
@@ -673,7 +673,7 @@ object SimilarityQueries {
             .select(col("j").as("i"), col("i").as("j"), col("mv")))
           .write.mode("overwrite").parquet(dir)
       }
-      val m = s.read.parquet(dir)
+      val m = parquet(s, dir)
       // Five power-iteration rounds on ONE bounded task (r10): the
       // matrix is d² rows BY CONSTRUCTION (corpus-independent), and
       // the previous dataframe spelling launched ~15 tiny shuffle

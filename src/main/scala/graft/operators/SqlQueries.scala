@@ -1,11 +1,11 @@
 package graft.operators
 
 import graft.Tables._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** SURVEY.md §2.N — the SQL text API: `spark.sql` over registered temp
-  * views, exercising the subquery forms Catalyst must decorrelate into
+/** SURVEY.md §2.N — the SQL text API: `spark.sql` over the dir-scoped
+  * temp views `Tables.view` registers per call, exercising the
+  * subquery forms Catalyst must decorrelate into
   * joins (a user of the engine writes these as SQL, not DataFrame
   * calls; the reference snapshot `/root/reference/README.md:1-2`
   * declares an analytics pipeline, and SQL text is the lingua franca).
@@ -23,73 +23,29 @@ import org.apache.spark.sql.functions._
   */
 object SqlQueries {
 
-  /** Dir suffixes registered per session. WEAK session keys — a strong
-    * key would pin every session ever benched in memory (r7 ADVICE);
-    * when a session is collected its entry (and its session-scoped
-    * views) vanish together.
-    */
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.util.HashSet[String]]()
-
-  /** Register the fixture tables this category's SQL references as
-    * session temp views bound to `d`, and return the dir suffix the
-    * caller splices into view names. View names are SCOPED BY INPUT DIR
-    * (like every other d-dependent artifact key): with a fixed name,
-    * two invocations on the same session with different input dirs
-    * could interleave registration and leave a mixed view set behind a
-    * stale cache entry — silently wrong results (r7 ADVICE, the same
-    * concurrency class agg_grouping_sets fixed in r7). The
-    * check+register+record runs in one synchronized block, so a
-    * concurrent second caller blocks until the views exist rather than
-    * racing past the cache check.
-    */
-  private def views(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    registered.synchronized {
-      var dirs = registered.get(s)
-      if (dirs == null) {
-        dirs = new java.util.HashSet[String]()
-        registered.put(s, dirs)
-      }
-      if (dirs.add(sfx)) {
-        customer(s, d).createOrReplaceTempView("customer_v_" + sfx)
-        orders(s, d).createOrReplaceTempView("orders_v_" + sfx)
-        nation(s, d).createOrReplaceTempView("nation_v_" + sfx)
-        part(s, d).createOrReplaceTempView("part_v_" + sfx)
-        lineitem(s, d).createOrReplaceTempView("lineitem_v_" + sfx)
-        events(s, d).createOrReplaceTempView("events_v_" + sfx)
-      }
-    }
-    sfx
-  }
-
   val queries: Map[String, Q] = Map(
     // Correlated EXISTS: customers holding at least one big-ticket
     // order. Catalyst rewrites to a left SEMI join on c_custkey.
-    "sql_exists_subquery" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_exists_subquery" -> ((s, d) =>
       s.sql(s"""
         SELECT c_custkey, c_name
-        FROM customer_v_$v c
+        FROM ${view(s, d, "customer")} c
         WHERE EXISTS (
-          SELECT 1 FROM orders_v_$v o
+          SELECT 1 FROM ${view(s, d, "orders")} o
           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000.0)
-        ORDER BY c_custkey""")
-    }),
+        ORDER BY c_custkey""")),
 
     // Correlated scalar subquery in the SELECT list: per-nation
     // customer count. Catalyst decorrelates to a left OUTER join
     // against the pre-aggregated inner side (count per key), with the
     // empty-group-becomes-0 coalesce the rewrite must preserve.
-    "sql_scalar_subquery" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_scalar_subquery" -> ((s, d) =>
       s.sql(s"""
         SELECT n_nationkey, n_name,
-          (SELECT count(*) FROM customer_v_$v c
+          (SELECT count(*) FROM ${view(s, d, "customer")} c
            WHERE c.c_nationkey = n.n_nationkey) AS n_cust
-        FROM nation_v_$v n
-        ORDER BY n_nationkey""")
-    }),
+        FROM ${view(s, d, "nation")} n
+        ORDER BY n_nationkey""")),
 
     // NOT IN subquery: parts never shipped in bulk (quantity > 45 —
     // every part ships at SOME quantity in the fixture, so the inner
@@ -98,15 +54,13 @@ object SqlQueries {
     // the whole NOT IN collapses to empty, so the physical plan must
     // check it; the DataFrame API has no direct spelling for this
     // operator (left_anti is the NOT EXISTS semantics, not NOT IN).
-    "sql_not_in_subquery" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_not_in_subquery" -> ((s, d) =>
       s.sql(s"""
         SELECT p_partkey, p_name
-        FROM part_v_$v
+        FROM ${view(s, d, "part")}
         WHERE p_partkey NOT IN (
-          SELECT l_partkey FROM lineitem_v_$v WHERE l_quantity > 45.0)
-        ORDER BY p_partkey""")
-    }),
+          SELECT l_partkey FROM ${view(s, d, "lineitem")} WHERE l_quantity > 45.0)
+        ORDER BY p_partkey""")),
 
     // Correlated LATERAL subquery with ORDER BY + LIMIT: each
     // customer's top-2 orders by price — the per-row-subquery spelling
@@ -117,18 +71,16 @@ object SqlQueries {
     // the window spelling and requires exact agreement. Tie order
     // (price DESC, o_orderkey) is total, so the top-2 sets are
     // engine-deterministic.
-    "sql_lateral_topk" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_lateral_topk" -> ((s, d) =>
       s.sql(s"""
         SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        FROM customer_v_$v c,
+        FROM ${view(s, d, "customer")} c,
         LATERAL (
-          SELECT o_orderkey, o_totalprice FROM orders_v_$v o
+          SELECT o_orderkey, o_totalprice FROM ${view(s, d, "orders")} o
           WHERE o.o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
         ) t
-        ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""")
-    }),
+        ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""")),
 
     // WITH RECURSIVE (Spark 4's recursive CTE execution): generate the
     // dense daily calendar spanning the event feed by recursion, then
@@ -150,12 +102,12 @@ object SqlQueries {
     // executes well). The IS NOT NULL anchor guard makes an EMPTY
     // feed produce an empty calendar instead of a NULL row.
     "sql_recursive_cte" -> ((s, d) => {
-      val v = views(s, d)
+      val ev = view(s, d, "events")
       s.sql(s"""
         WITH RECURSIVE bounds AS (
           SELECT min(ts_us div 86400000000) AS d0,
                  max(ts_us div 86400000000) AS d1
-          FROM events_v_$v
+          FROM $ev
         ), starts AS (
           SELECT explode(sequence(d0, d1, 30)) AS blk0, d1
           FROM bounds WHERE d0 IS NOT NULL
@@ -165,7 +117,7 @@ object SqlQueries {
           SELECT c.day + 1, c.blk_end FROM cal c WHERE c.day < c.blk_end
         ), daily AS (
           SELECT ts_us div 86400000000 AS day, count(*) AS n
-          FROM events_v_$v GROUP BY 1
+          FROM $ev GROUP BY 1
         )
         SELECT c.day, coalesce(d.n, CAST(0 AS BIGINT)) AS n
         FROM cal c LEFT JOIN daily d ON c.day = d.day
@@ -179,17 +131,15 @@ object SqlQueries {
     // family, ExistenceJoin: a left join variant that materializes the
     // match as a boolean column the filter then consumes. Still ONE
     // key-partitioned join at any scale, never per-row re-execution.
-    "sql_exists_or" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_exists_or" -> ((s, d) =>
       s.sql(s"""
         SELECT c_custkey, c_name
-        FROM customer_v_$v c
+        FROM ${view(s, d, "customer")} c
         WHERE EXISTS (
-          SELECT 1 FROM orders_v_$v o
+          SELECT 1 FROM ${view(s, d, "orders")} o
           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000.0)
           OR c.c_acctbal < 0.0
-        ORDER BY c_custkey""")
-    }),
+        ORDER BY c_custkey""")),
 
     // SQL-defined scalar function (Spark 4 SQL UDF — CREATE FUNCTION
     // ... RETURN expr): business logic shared as a CATALOG object, not
@@ -200,7 +150,6 @@ object SqlQueries {
     // function boundary must be a pure naming layer with zero
     // numeric effect.
     "sql_udf_create" -> ((s, d) => {
-      val v = views(s, d)
       // the function name needs no dir scope: its body is d-independent,
       // so concurrent re-registration is idempotent same-content
       s.sql("""
@@ -214,7 +163,7 @@ object SqlQueries {
           CAST(sum(graft_disc_price(l_extendedprice, l_discount))
             AS DOUBLE) AS sum_disc,
           count(*) AS n_rows
-        FROM lineitem_v_$v
+        FROM ${view(s, d, "lineitem")}
         GROUP BY l_returnflag ORDER BY l_returnflag""")
     }),
 
@@ -225,8 +174,7 @@ object SqlQueries {
     // — the "same query over N tables" template a pipeline scheduler
     // emits. The oracle inlines both bindings by hand: parameter
     // passing must have zero semantic effect.
-    "sql_parameterized" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_parameterized" -> ((s, d) =>
       s.sql(
         """SELECT o_orderpriority, count(*) AS n_orders,
           |  CAST(sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS DOUBLE)
@@ -234,25 +182,22 @@ object SqlQueries {
           |FROM IDENTIFIER(:tbl)
           |WHERE o_totalprice > :floor
           |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-        Map("tbl" -> s"orders_v_$v", "floor" -> 150000.0))
-    }),
+        Map("tbl" -> view(s, d, "orders"), "floor" -> 150000.0))),
 
     // SQL pipe syntax (Spark 4): the |>-chained relational form —
     // each stage consumes the previous result top-to-bottom, the way
     // the engine's own DataFrame API composes. Same plan as the
     // classic spelling (the parser desugars stages into the identical
     // logical tree), proven by the oracle being the classic GROUP BY.
-    "sql_pipe_syntax" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_pipe_syntax" -> ((s, d) =>
       s.sql(s"""
-        FROM lineitem_v_$v
+        FROM ${view(s, d, "lineitem")}
         |> WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         |> AGGREGATE count(*) AS n_rows,
              CAST(sum(CAST(l_quantity AS DECIMAL(18, 2))) AS DOUBLE)
                AS sum_qty
            GROUP BY l_returnflag, l_linestatus
-        |> ORDER BY l_returnflag, l_linestatus""")
-    }),
+        |> ORDER BY l_returnflag, l_linestatus""")),
 
     // GROUP BY ALL (r9): the analyzer infers the grouping set from the
     // non-aggregate select items — the DuckDB-pioneered shorthand
@@ -260,16 +205,14 @@ object SqlQueries {
     // both engines, so this operator is oracle-paired on the literal
     // feature, not a desugared equivalent. The plan is the ordinary
     // partial+final hash aggregate (syntax layer only).
-    "sql_group_by_all" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_group_by_all" -> ((s, d) =>
       s.sql(s"""
         SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
           CAST(sum(CAST(l_quantity AS DECIMAL(18, 2))) AS DOUBLE)
             AS sum_qty
-        FROM lineitem_v_$v
+        FROM ${view(s, d, "lineitem")}
         GROUP BY ALL
-        ORDER BY ALL""")
-    }),
+        ORDER BY ALL""")),
 
     // Inline VALUES table (r9): a literal lookup/decode table spliced
     // into the query text and joined against a fixture table — the
@@ -277,18 +220,16 @@ object SqlQueries {
     // (status-code decodes, enum labels). Catalyst plans the VALUES as
     // a LocalRelation, so the join broadcasts it for free; at 100 TB
     // the fact side streams map-side against the in-plan literal dim.
-    "sql_values_inline" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_values_inline" -> ((s, d) =>
       s.sql(s"""
         SELECT v.rk, v.zone, count(*) AS n_nations
-        FROM nation_v_$v n
+        FROM ${view(s, d, "nation")} n
         JOIN (SELECT * FROM VALUES
             (0, 'alpha'), (1, 'beta'), (2, 'gamma'),
             (3, 'delta'), (4, 'epsilon') AS t(rk, zone)) v
           ON n.n_regionkey = v.rk
         GROUP BY v.rk, v.zone
-        ORDER BY v.rk""")
-    }),
+        ORDER BY v.rk""")),
 
     // DISTINCT ON semantics (r9): one argmax row per key — DuckDB has
     // the literal `DISTINCT ON (key) ... ORDER BY key, tiebreak`
@@ -298,17 +239,15 @@ object SqlQueries {
     // hash-partitioned window, no global sort: at 100 TB this is a
     // single shuffle on o_custkey + per-partition sort, and the rn=1
     // filter collapses each group before any downstream exchange.
-    "sql_distinct_on" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_distinct_on" -> ((s, d) =>
       s.sql(s"""
         SELECT o_custkey, o_orderkey, top_price FROM (
           SELECT o_custkey, o_orderkey, o_totalprice AS top_price,
             row_number() OVER (PARTITION BY o_custkey
               ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-          FROM orders_v_$v)
+          FROM ${view(s, d, "orders")})
         WHERE rn = 1
-        ORDER BY o_custkey""")
-    }),
+        ORDER BY o_custkey""")),
 
     // FILTER clause (r9): the ANSI per-aggregate predicate — one scan,
     // many differently-filtered aggregates (the pivot-without-pivot
@@ -316,8 +255,7 @@ object SqlQueries {
     // engines. Catalyst folds each FILTER into the aggregate's
     // conditional update, so the plan stays ONE partial+final hash
     // aggregate over one scan — no per-aggregate passes at any scale.
-    "sql_filter_clause" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_filter_clause" -> ((s, d) =>
       s.sql(s"""
         SELECT l_returnflag,
           count(*) AS n_all,
@@ -325,10 +263,9 @@ object SqlQueries {
           count(*) FILTER (WHERE l_discount > 0.05) AS n_discounted,
           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
             FILTER (WHERE l_tax > 0.04) AS DOUBLE) AS taxed_price
-        FROM lineitem_v_$v
+        FROM ${view(s, d, "lineitem")}
         GROUP BY l_returnflag
-        ORDER BY l_returnflag""")
-    }),
+        ORDER BY l_returnflag""")),
 
     // Join-strategy hint surface (r9): the /*+ BROADCAST */ comment
     // hint — the knob users reach for when statistics mislead the
@@ -337,19 +274,17 @@ object SqlQueries {
     // the hinted plan actually broadcasts while the value surface
     // stays identical. Per-nation order revenue through a 25-row dim
     // the hint pins to the build side.
-    "sql_join_hint" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_join_hint" -> ((s, d) =>
       s.sql(s"""
         SELECT /*+ BROADCAST(n) */ n.n_name,
           count(*) AS n_orders,
           CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
             AS revenue
-        FROM orders_v_$v o
-        JOIN customer_v_$v c ON o.o_custkey = c.c_custkey
-        JOIN nation_v_$v n ON c.c_nationkey = n.n_nationkey
+        FROM ${view(s, d, "orders")} o
+        JOIN ${view(s, d, "customer")} c ON o.o_custkey = c.c_custkey
+        JOIN ${view(s, d, "nation")} n ON c.c_nationkey = n.n_nationkey
         GROUP BY n.n_name
-        ORDER BY n.n_name""")
-    }),
+        ORDER BY n.n_name""")),
 
     // Named WINDOW clause (r9): define the frame spec once, reference
     // it from several window functions — the de-duplication feature
@@ -358,8 +293,7 @@ object SqlQueries {
     // because all three share one named spec, Catalyst plans ONE
     // Window node over one (o_custkey) sort — the clause is not just
     // sugar, it is how users guarantee the single-shuffle plan.
-    "sql_named_window" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_named_window" -> ((s, d) =>
       s.sql(s"""
         SELECT o_custkey, o_orderkey,
           row_number() OVER w AS rn,
@@ -368,11 +302,10 @@ object SqlQueries {
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
             AS BIGINT) AS run_cents,
           lag(o_orderkey) OVER w AS prev_order
-        FROM orders_v_$v
+        FROM ${view(s, d, "orders")}
         WINDOW w AS (PARTITION BY o_custkey
                      ORDER BY o_orderdate, o_orderkey)
-        ORDER BY o_custkey, rn""")
-    }),
+        ORDER BY o_custkey, rn""")),
 
     // ORDER BY ALL (r9): the companion of GROUP BY ALL — sort by
     // every select-list column left to right, the ad-hoc-analysis
@@ -381,16 +314,14 @@ object SqlQueries {
     // columns are non-null (the engines disagree on default NULL
     // placement, so a null would be an oracle trap, stated here so
     // nobody "simplifies" the projection later).
-    "sql_order_by_all" -> ((s, d) => {
-      val v = views(s, d)
+    "sql_order_by_all" -> ((s, d) =>
       s.sql(s"""
         SELECT c_mktsegment, c_nationkey, count(*) AS n,
           CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
             AS bal_cents
-        FROM customer_v_$v
+        FROM ${view(s, d, "customer")}
         GROUP BY ALL
-        ORDER BY ALL""")
-    })
+        ORDER BY ALL"""))
   )
 
   val oracle: Map[String, String] = Map(

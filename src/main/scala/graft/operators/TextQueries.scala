@@ -56,7 +56,7 @@ object TextQueries {
         .agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    parquet(s, dir)
   }
 
   private def lmVocab(s: org.apache.spark.sql.SparkSession,
@@ -68,7 +68,7 @@ object TextQueries {
         .agg(countDistinct(col("w")).as("vocab"))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    parquet(s, dir)
   }
 
   /** Documents plus the integer score of the top-fraction quality
@@ -104,7 +104,7 @@ object TextQueries {
     graft.TempDirs.writeOnce("lm_scores" + d) {
       lmScores(s, d).write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    parquet(s, dir)
   }
 
   /** Per-doc bigram-LM scores (doc_id, n_bigrams, bits_mbits) —

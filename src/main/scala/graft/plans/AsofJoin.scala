@@ -392,37 +392,30 @@ object AsofJoinApi {
   }
 
   /** One cached AQE-off child session per caller session. The exec's
-    * alignment guard (r9) requires the two shuffle stages to land on
+    * alignment guard requires the two shuffle stages to land on
     * IDENTICAL partitionings; AQE coalesces each stage independently,
-    * so on a default-configured session (AQE on) the guard fires
-    * almost every run (ADVICE r9). Executing the as-of plan on an
-    * AQE-off child makes the public facade safe on any session —
-    * callers whose session already has AQE off are returned as-is.
-    * The fixture operators (`join_asof_native*`) pass the caller's
-    * session and so share this one child. WeakHashMap keyed by the
-    * parent so a stopped session's child is collectable.
+    * so on a default-configured session (AQE on) the guard would fire
+    * almost every run. Executing the as-of plan on an AQE-off child
+    * makes the public facade safe on any session — callers whose
+    * session already has AQE off are returned as-is. The fixture
+    * operators (`join_asof_native*`) pass the caller's session and so
+    * share this one child.
     */
-  private val execSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]
   private def aqeOffSession(s: SparkSession): SparkSession =
     if (s.conf.get("spark.sql.adaptive.enabled", "true") == "false") s
-    else execSessions.synchronized {
-      var c = execSessions.get(s)
-      if (c == null) {
-        c = s.newSession()
-        // inherit the caller's RUNTIME confs (newSession() only copies
-        // builder-time conf, so e.g. a caller's spark.sql.shuffle
-        // .partitions or ANSI toggle would otherwise be silently
-        // dropped inside the as-of pipeline — r10 review), THEN pin
-        // AQE off. Snapshot is taken at child creation; conf changes
-        // the caller makes later are deliberately not tracked.
-        s.conf.getAll.foreach { case (k, v) =>
-          try c.conf.set(k, v)
-          catch { case _: org.apache.spark.sql.AnalysisException => () }
-        }
-        c.conf.set("spark.sql.adaptive.enabled", "false")
-        execSessions.put(s, c)
+    else graft.SessionMemo(s, "asof_aqe_off") {
+      val c = s.newSession()
+      // inherit the caller's RUNTIME confs (newSession() only copies
+      // builder-time conf, so e.g. a caller's spark.sql.shuffle
+      // .partitions or ANSI toggle would otherwise be silently
+      // dropped inside the as-of pipeline), THEN pin AQE off.
+      // Snapshot is taken at child creation; conf changes the caller
+      // makes later are deliberately not tracked.
+      s.conf.getAll.foreach { case (k, v) =>
+        try c.conf.set(k, v)
+        catch { case _: org.apache.spark.sql.AnalysisException => () }
       }
+      c.conf.set("spark.sql.adaptive.enabled", "false")
       c
     }
 

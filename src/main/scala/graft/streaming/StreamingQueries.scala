@@ -331,103 +331,65 @@ object StreamingQueries {
     dir
   }
 
-  /** Run a FILE-SOURCE streaming pipeline to completion (Trigger
-    * .AvailableNow terminates when the backlog drains) into a memory
-    * sink. Unlike the MemoryStream replays this never collects the
-    * input to the driver — the scale path, where the "stream" is a
-    * directory an upstream job appends to.
-    *
-    * NO maxFilesPerTrigger (r10): under AvailableNow in Spark 4.1 the
-    * option produced a dead EMPTY batch 0 followed by ALL files in
-    * batch 1 — an extra ~0.5 s of trigger/state-commit overhead per
-    * replay with zero actual file splitting (instrumented with a
-    * StreamingQueryListener; `durationMs` put ~0.45 s of addBatch on
-    * the 0-row batch). Every pipeline routed through here is
-    * chunking-independent by contract (monotone Update emissions or
-    * Complete mode), so batch granularity was never load-bearing;
-    * cross-batch state persistence is exercised by the two-pass
-    * checkpoint-resume queries and StatefulRestartSpec, which manage
-    * their own epochs.
+  /** One replay child session per (parent, rocksdb?, shuffle
+    * partitions, no-data batches): the child is a fixed execution
+    * environment, and rebuilding SessionState per replay invocation would
+    * be pure fixed cost. Memory sink table names are per invocation, so
+    * sharing one session across replays cannot collide. The partition
+    * count is part of the key because stream_stream_join's
+    * 4-store-per-partition join wants 4 partitions while the keyed
+    * replays' optimum is 2, and a shared session's conf cannot serve
+    * both without racing.
     */
-  /** One cached replay child session per (parent, provider): the
-    * child is a fixed execution environment (2 shuffle partitions,
-    * optional RocksDB provider), so rebuilding
-    * SessionState per replay invocation was pure fixed cost. Memory
-    * sink table names are per-operator, so sharing one session across
-    * replays cannot collide.
-    */
-  // keyed by the PARENT session itself, value = children keyed by
-  // (rocksdb?, shuffle partitions): a WeakHashMap key must be
-  // externally referenced to survive, and a (session, flag) tuple key
-  // is owned only by the map — it would be collected at the next GC
-  // and silently degrade the cache back to one session per call
-  // (caught in the r10 self-review). The partition count joined the
-  // key in r11: stream_stream_join's 4-store-per-partition join wants
-  // 4 partitions while the keyed replays' optimum is 2, and a shared
-  // session's conf cannot serve both without racing.
-  private val replaySessions =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(Boolean, Int, Boolean), SparkSession]]
   private def replaySession(s0: SparkSession, rocksDb: Boolean,
                             partitions: Int = 2,
                             noDataBatches: Boolean = true): SparkSession =
-    replaySessions.synchronized {
-      var byFlag = replaySessions.get(s0)
-      if (byFlag == null) {
-        byFlag = scala.collection.mutable.Map
-          .empty[(Boolean, Int, Boolean), SparkSession]
-        replaySessions.put(s0, byFlag)
-      }
-      var s = byFlag.getOrElse((rocksDb, partitions, noDataBatches), null)
-      if (s == null) {
-        s = s0.newSession()
-        // 2 shuffle partitions, not 4 (r10): state store instances are
-        // per (stateful operator, partition) and the replays' key
-        // counts need no more parallelism; results are key-grouped
-        // aggregates, partitioning-invariant by construction (the
-        // invariance the adversarial-repartition specs pin). r11
-        // probed 1 partition: WORSE (replay-9 total 9.95 → 10.91 s —
-        // the data-proportional states, stream_dedup's 600k ids above
-        // all, lose more to serial execution than the saved state
-        // store open/commit returns). 2 is the measured optimum.
-        s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-        // most replays provably gain nothing from the trailing no-data
-        // micro-batch (Update/Complete modes, or append operators that
-        // emit on arrival — dedup, inner stream-stream join): it only
-        // advances the watermark and pays a full state-store
-        // open/commit cycle per stateful partition (probe: 0.2-0.7 s).
-        // Queries whose OUTPUT is produced by watermark movement
-        // (timer expiry, append-mode windowed aggs) must keep it.
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-          noDataBatches.toString)
-        if (rocksDb) { // transformWithState requires RocksDB
-          s.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          // ONE shared RocksDB block cache + write-buffer manager
-          // across every instance on the executor (r13 VERDICT task 5
-          // — "one shared provider" in the form Spark actually
-          // exposes): without bounded memory each tws replay's store
-          // instances allocate private caches; with it they share a
-          // single LRU arena sized far above these replays' KB-scale
-          // states, so the setting only dedups allocations — it can
-          // never evict a working set at this scale
-          s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-            ".boundedMemoryUsage", "true")
-          s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-            ".maxMemoryUsageMB", "256")
-          // changelog checkpointing: each commit uploads the batch's
-          // delta instead of zipping the full RocksDB instance — the
-          // production default, and it shaves the per-batch commit
-          s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-            ".changelogCheckpointing.enabled", "true")
-          // every commit otherwise COUNTS the whole store to report
-          // numTotalStateRows — an O(state) scan paid per batch for a
-          // progress metric none of these replays read (r11 floor cut;
-          // the standard production toggle for large stateful queries)
-          s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-            ".trackTotalNumberOfRows", "false")
-        }
-        byFlag.put((rocksDb, partitions, noDataBatches), s)
+    graft.SessionMemo(s0, ("replay", rocksDb, partitions, noDataBatches)) {
+      val s = s0.newSession()
+      // 2 shuffle partitions by default, not 4: state store instances
+      // are per (stateful operator, partition) and the replays' key
+      // counts need no more parallelism; results are key-grouped
+      // aggregates, partitioning-invariant by construction (the
+      // invariance the adversarial-repartition specs pin). 1 partition
+      // measured slower (replay total 9.95 → 10.91 s — the
+      // data-proportional states, stream_dedup's 600k ids above all,
+      // lose more to serial execution than the saved state store
+      // open/commit returns). 2 is the measured optimum.
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      // most replays provably gain nothing from the trailing no-data
+      // micro-batch (Update/Complete modes, or append operators that
+      // emit on arrival — dedup, inner stream-stream join): it only
+      // advances the watermark and pays a full state-store
+      // open/commit cycle per stateful partition (probe: 0.2-0.7 s).
+      // Queries whose OUTPUT is produced by watermark movement
+      // (timer expiry, append-mode windowed aggs) must keep it.
+      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
+        noDataBatches.toString)
+      if (rocksDb) { // transformWithState requires RocksDB
+        s.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        // ONE shared RocksDB block cache + write-buffer manager
+        // across every instance on the executor: without bounded
+        // memory each tws replay's store instances allocate private
+        // caches; with it they share a single LRU arena sized far
+        // above these replays' KB-scale states, so the setting only
+        // dedups allocations — it can never evict a working set at
+        // this scale
+        s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
+          ".boundedMemoryUsage", "true")
+        s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
+          ".maxMemoryUsageMB", "256")
+        // changelog checkpointing: each commit uploads the batch's
+        // delta instead of zipping the full RocksDB instance — the
+        // production default, and it shaves the per-batch commit
+        s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
+          ".changelogCheckpointing.enabled", "true")
+        // every commit otherwise COUNTS the whole store to report
+        // numTotalStateRows — an O(state) scan paid per batch for a
+        // progress metric none of these replays read (the standard
+        // production toggle for large stateful queries)
+        s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
+          ".trackTotalNumberOfRows", "false")
       }
       s
     }
@@ -503,6 +465,24 @@ object StreamingQueries {
   private def deleteTree(dir: String): Unit =
     graft.TempDirs.deleteRecursively(java.nio.file.Paths.get(dir))
 
+  /** Run a FILE-SOURCE streaming pipeline to completion (Trigger
+    * .AvailableNow terminates when the backlog drains) into a memory
+    * sink. Unlike the MemoryStream replays this never collects the
+    * input to the driver — the scale path, where the "stream" is a
+    * directory an upstream job appends to.
+    *
+    * NO maxFilesPerTrigger: under AvailableNow in Spark 4.1 the
+    * option produced a dead EMPTY batch 0 followed by ALL files in
+    * batch 1 — an extra ~0.5 s of trigger/state-commit overhead per
+    * replay with zero actual file splitting (instrumented with a
+    * StreamingQueryListener; `durationMs` put ~0.45 s of addBatch on
+    * the 0-row batch). Every pipeline routed through here is
+    * chunking-independent by contract (monotone Update emissions or
+    * Complete mode), so batch granularity was never load-bearing;
+    * cross-batch state persistence is exercised by the two-pass
+    * checkpoint-resume queries and StatefulRestartSpec, which manage
+    * their own epochs.
+    */
   private def runFileStream(s0: SparkSession, name: String, dir: String,
                             mode: OutputMode, rocksDb: Boolean = false,
                             partitions: Int = 2,

@@ -24,7 +24,8 @@ class SqlSyntaxSpec extends SparkSpecBase {
 
   test("sql_pipe_syntax optimizes to the classic spelling's plan") {
     val pipe = SparkEntry.queries("sql_pipe_syntax")(spark, sfDir)
-    // view names are scoped by input dir (SqlQueries.views, r8)
+    // sql_pipe_syntax registers lineitem_v_<dir> through Tables.view,
+    // which scopes view names by input dir
     val v = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val classic = spark.sql(s"""
       SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
