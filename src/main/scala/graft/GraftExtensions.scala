@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
@@ -34,10 +34,11 @@ import graft.functions.{CountMinAgg, DotProductExpr, HllRegistersAgg,
   *   SELECT graft_cms(key) ... GROUP BY day               -- 4x1024
   *                                                        -- Count-Min
   *
-  * Registration is additive metadata on the session — no planner
-  * behavior changes, so every Catalyst rule and strategy continues to
-  * apply (the expressions participate in whole-stage codegen exactly
-  * as their DataFrame spellings do).
+  * Function registration is additive metadata: the expressions take
+  * part in whole-stage codegen exactly as their DataFrame spellings do.
+  * The planner additions are the as-of join strategy and the
+  * `SmallFinalSort` optimizer rule; `GraftExtensions.install` puts the
+  * same two on a session built without this extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -63,10 +64,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator extension (r8): the native as-of join's planner
-    // strategy, so extension users can plan graft.plans.AsofJoin
-    // without touching experimental.extraStrategies
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    ext.injectOptimizerRule(_ => graft.plans.SmallFinalSort)
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       info("graft_dot"),
@@ -127,4 +126,24 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           intLiteral("graft_misra_gries", children(1)))
       }))
   }
+}
+
+object GraftExtensions {
+
+  /** Puts the engine's planner additions on a session built without the
+    * extension, once per session. The engine's readers (`Tables.parquet`,
+    * `SnapshotTable`) and the as-of join's child session call it, so
+    * every plan over engine inputs gets them. Runs inside one
+    * `SessionMemo` init, so concurrent callers never race the
+    * read-modify-write of the experimental lists.
+    */
+  private[graft] def install(s: SparkSession): Unit =
+    SessionMemo(s, "planner_additions") {
+      val e = s.experimental
+      if (!e.extraStrategies.contains(graft.plans.AsofJoinStrategy))
+        e.extraStrategies = e.extraStrategies :+ graft.plans.AsofJoinStrategy
+      if (!e.extraOptimizations.contains(graft.plans.SmallFinalSort))
+        e.extraOptimizations = e.extraOptimizations :+ graft.plans.SmallFinalSort
+      java.lang.Boolean.TRUE
+    }
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The engine's one per-session cache: a weakly-keyed map from a
   * `SparkSession` to a concurrent key → value map. It holds the parquet
-  * schemas `Tables.parquet` resolves and the fixed-conf child sessions
-  * of the join, streaming-replay and as-of modules.
+  * schemas `Tables.parquet` resolves, the SQL views `Tables.view`
+  * registers, the once-per-session planner install, and the fixed-conf
+  * child sessions of the join, streaming-replay and as-of modules.
   *
   * Invariants:
   *  - A value never references the session it is keyed on, so a session
@@ -37,4 +38,9 @@ private[graft] object SessionMemo {
     }
     m.computeIfAbsent(key, _ => init).asInstanceOf[V]
   }
+
+  /** The value stored for `key`, without computing one. */
+  def get[V <: AnyRef](s: SparkSession, key: Any): Option[V] =
+    bySession.synchronized(Option(bySession.get(s)))
+      .flatMap(m => Option(m.get(key))).map(_.asInstanceOf[V])
 }

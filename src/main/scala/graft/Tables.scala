@@ -29,9 +29,12 @@ object Tables {
     * never a DataFrame, so every call still lists the files, every
     * action scans their bytes, and each call gets fresh attribute ids.
     * The key carries `TempDirs.fingerprintOf(path)`, so a path
-    * rewritten with a different file set is resolved again.
+    * rewritten with a different file set is resolved again. Every read
+    * of an engine input passes here, so this is where a plain session
+    * gets the engine's planner additions (`GraftExtensions.install`).
     */
   private[graft] def parquet(s: SparkSession, path: String): DataFrame = {
+    GraftExtensions.install(s)
     val schema = SessionMemo(s, ("parquet", path, TempDirs.fingerprintOf(path))) {
       s.read.parquet(path).schema
     }
@@ -41,14 +44,20 @@ object Tables {
   /** Registers `name` at `d` as the session temp view `<name>_v_<d>` and
     * returns the view name, for operators written as SQL text. The name
     * is scoped by input dir, so calls on different dirs never replace
-    * each other's view, and a call on the same dir replaces it with an
-    * equal one. `events` goes through its timestamp-deriving reader.
+    * each other's view. A view is registered once per (session, dir,
+    * name, `TempDirs.fingerprintOf`): a later call on an unchanged input
+    * builds no relation and keeps the view, and a rewritten input is
+    * registered again. The frame is built outside the memo's init, which
+    * must not call `SessionMemo` itself. `events` goes through its
+    * timestamp-deriving reader.
     */
   private[graft] def view(s: SparkSession, d: String, name: String): String = {
     val v = s"${name}_v_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-    (if (name == "events") events(s, d) else table(s, d, name))
-      .createOrReplaceTempView(v)
-    v
+    val key = ("view", v, TempDirs.fingerprintOf(s"$d/$name.parquet"))
+    SessionMemo.get[String](s, key).getOrElse {
+      val df = if (name == "events") events(s, d) else table(s, d, name)
+      SessionMemo(s, key) { df.createOrReplaceTempView(v); v }
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")

@@ -362,9 +362,8 @@ case class AsofJoinExec(
 /** DataFrame-facing constructor: resolves the named columns against
   * the two inputs' analyzed plans and surfaces the custom node as an
   * ordinary DataFrame. The session must have `AsofJoinStrategy`
-  * installed (GraftExtensions does, and `AsofJoinApi.ensureStrategy`
-  * covers plain sessions via `experimental.extraStrategies` — the
-  * public API Spark exposes for exactly this). Like pandas
+  * installed: `GraftExtensions` injects it, and `asofJoin` puts it on
+  * its execution session through `GraftExtensions.install`. Like pandas
   * `merge_asof`, the result carries every left column plus every
   * right column (null-extended on no match) — rename overlapping
   * right columns before the call.
@@ -379,17 +378,6 @@ case class AsofJoinExec(
   * `.localCheckpoint()`) and continue from the materialized frame.
   */
 object AsofJoinApi {
-
-  /** Idempotent strategy install. Synchronized on this object: the
-    * read-modify-write of `extraStrategies` is not atomic, and two
-    * racing threads could otherwise duplicate the strategy or drop a
-    * concurrently added third-party strategy (ADVICE r8).
-    */
-  def ensureStrategy(s: SparkSession): Unit = synchronized {
-    val cur = s.experimental.extraStrategies
-    if (!cur.contains(AsofJoinStrategy))
-      s.experimental.extraStrategies = cur :+ AsofJoinStrategy
-  }
 
   /** One cached AQE-off child session per caller session. The exec's
     * alignment guard requires the two shuffle stages to land on
@@ -435,7 +423,7 @@ object AsofJoinApi {
       forward: Boolean = false,
       nearest: Boolean = false): DataFrame = {
     val s2 = aqeOffSession(s)
-    ensureStrategy(s2)
+    graft.GraftExtensions.install(s2)
     val lPlan = leftDf.queryExecution.analyzed
     val rPlan = rightDf.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String): Attribute =

@@ -202,10 +202,14 @@ class PlanShapeSpec extends SparkSpecBase {
   }
 
   test("shuffle_global is one range-partitioned sort") {
-    val p = plan("shuffle_global")
-    assert(p.contains("rangepartitioning"), p)
-    assert(p.indexOf("Exchange") == p.lastIndexOf("Exchange"),
-      s"expected exactly one Exchange:\n$p")
+    // a threshold below the fixture size keeps SmallFinalSort off, so
+    // this checks the range-partitioned sort that large inputs get
+    withConf("spark.sql.autoBroadcastJoinThreshold", "1") {
+      val p = plan("shuffle_global")
+      assert(p.contains("rangepartitioning"), p)
+      assert(p.indexOf("Exchange") == p.lastIndexOf("Exchange"),
+        s"expected exactly one Exchange:\n$p")
+    }
   }
 
   test("pack_token_budget shuffles once on the shard key") {

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,6 +20,48 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `f` with the session conf `key` set to `value`, then restores it. */
+  def withConf[T](key: String, value: String)(f: => T): T = {
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  /** (Spark jobs, stages) this thread starts while `f` runs. Listener
+    * events arrive asynchronously but in order, so once a marker job
+    * started after `f` is seen, every job and stage `f` started has been
+    * seen too.
+    */
+  def workDuring(f: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"work_during_${System.nanoTime}"
+    val (jobs, stages) = (new AtomicInteger, new AtomicInteger)
+    val drained = new CountDownLatch(1)
+    def probe(p: java.util.Properties) =
+      Option(p).map(_.getProperty("graft.probe")).orNull
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = probe(e.properties)
+        if (p == tag) jobs.incrementAndGet()
+        else if (p == tag + "_end") drained.countDown()
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (probe(e.properties) == tag) stages.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.probe", tag)
+      f
+      sc.setLocalProperty("graft.probe", tag + "_end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (jobs.get, stages.get)
+    } finally {
+      sc.setLocalProperty("graft.probe", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   override def beforeAll(): Unit = {
     super.beforeAll()

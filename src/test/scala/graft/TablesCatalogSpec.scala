@@ -1,52 +1,24 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{Callable, CountDownLatch, CyclicBarrier, Executors, TimeUnit}
+import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The session catalog: `Tables.table` reads exactly what a fresh
   * `spark.read.parquet` reads, resolves an unchanged path once per
-  * session and a rewritten one again; `SessionMemo` runs one init per
-  * (session, key) and keeps nothing from a failed one.
+  * session and a rewritten one again; `Tables.view` registers an
+  * unchanged input once and a rewritten one again; `SessionMemo` runs
+  * one init per (session, key) and keeps nothing from a failed one.
   */
 class TablesCatalogSpec extends SparkSpecBase {
 
   private val fixtureTables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Spark jobs this thread starts while `f` runs. Listener events arrive
-    * asynchronously but in order, so once a marker job started after `f`
-    * is seen, every job `f` started has been seen too.
-    */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"tables_catalog_${System.nanoTime}"
-    val seen = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties).map(_.getProperty("graft.probe")).orNull
-        if (p == tag) seen.incrementAndGet()
-        else if (p == tag + "_end") drained.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.probe", tag)
-      f
-      sc.setLocalProperty("graft.probe", tag + "_end")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      seen.get
-    } finally {
-      sc.setLocalProperty("graft.probe", null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsDuring(f: => Unit): Int = workDuring(f)._1
 
   test("every fixture table reads like a fresh spark.read.parquet") {
     fixtureTables.foreach { t =>
@@ -77,6 +49,26 @@ class TablesCatalogSpec extends SparkSpecBase {
       val t = Tables.table(spark, dir.toString, "t")
       assert(t.columns.toSeq == Seq("b", "c"))
       assert(t.collect().map(_.getString(0)).sorted.toSeq == Seq("0", "1", "2"))
+    } finally TempDirs.deleteRecursively(dir)
+  }
+
+  test("Tables.view registers once per input and again after a rewrite") {
+    val dir = Files.createTempDirectory("tables_view")
+    val path = s"$dir/t.parquet"
+    val s = spark.newSession()
+    def registered(v: String) =
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.catalog.getRawTempView(v).get
+    try {
+      spark.range(3).toDF("a").write.parquet(path)
+      val v = Tables.view(s, dir.toString, "t")
+      val first = registered(v)
+      assert(jobsDuring(assert(Tables.view(s, dir.toString, "t") == v)) == 0)
+      assert(registered(v) eq first, "an unchanged input replaced the view")
+      spark.range(5).toDF("a").write.mode("overwrite").parquet(path)
+      assert(Tables.view(s, dir.toString, "t") == v)
+      assert(!(registered(v) eq first), "a rewritten input kept the old view")
+      assert(s.table(v).count() == 5)
     } finally TempDirs.deleteRecursively(dir)
   }
 
