@@ -36,9 +36,9 @@ import graft.functions.{CountMinAgg, DotProductExpr, HllRegistersAgg,
   *
   * Function registration is additive metadata: the expressions take
   * part in whole-stage codegen exactly as their DataFrame spellings do.
-  * The planner additions are the as-of join strategy and the
-  * `SmallFinalSort` optimizer rule; `GraftExtensions.install` puts the
-  * same two on a session built without this extension.
+  * The extension also injects the as-of join strategy. The
+  * `SmallFinalSort` optimizer rule reaches every session, with or
+  * without the extension, through `GraftExtensions.install`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -65,7 +65,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.SmallFinalSort)
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       info("graft_dot"),
@@ -130,17 +129,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** Puts the engine's planner additions on a session built without the
-    * extension, once per session. The engine's readers (`Tables.parquet`,
-    * `SnapshotTable`) and the as-of join's child session call it, so
-    * every plan over engine inputs gets them. Runs inside one
-    * `SessionMemo` init, so concurrent callers never race the
+  /** Puts the engine's planner additions on `s`, once per session: the
+    * `SmallFinalSort` rule, and the as-of join strategy unless the
+    * session's planner already has it from the extension. The engine's
+    * read path (`Tables.parquet`) and the as-of join's child session
+    * call it, so every plan over engine inputs gets them. The additions
+    * stay on the caller's session (README, Library API). Runs inside
+    * one `SessionMemo` init, so concurrent callers never race the
     * read-modify-write of the experimental lists.
     */
   private[graft] def install(s: SparkSession): Unit =
     SessionMemo(s, "planner_additions") {
       val e = s.experimental
-      if (!e.extraStrategies.contains(graft.plans.AsofJoinStrategy))
+      val planner = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner
+      if (!planner.strategies.contains(graft.plans.AsofJoinStrategy))
         e.extraStrategies = e.extraStrategies :+ graft.plans.AsofJoinStrategy
       if (!e.extraOptimizations.contains(graft.plans.SmallFinalSort))
         e.extraOptimizations = e.extraOptimizations :+ graft.plans.SmallFinalSort

@@ -30,8 +30,9 @@ object Tables {
     * action scans their bytes, and each call gets fresh attribute ids.
     * The key carries `TempDirs.fingerprintOf(path)`, so a path
     * rewritten with a different file set is resolved again. Every read
-    * of an engine input passes here, so this is where a plain session
-    * gets the engine's planner additions (`GraftExtensions.install`).
+    * of an engine input passes here, so this is where a session gets
+    * the engine's planner additions (`GraftExtensions.install`), which
+    * then stay on it.
     */
   private[graft] def parquet(s: SparkSession, path: String): DataFrame = {
     GraftExtensions.install(s)

@@ -173,20 +173,12 @@ object SnapshotTable {
     }
   }
 
-  /** Every read of a table version starts here, so the reading session
-    * has the engine's planner additions (`GraftExtensions.install`).
-    */
-  private def reader(spark: SparkSession) = {
-    graft.GraftExtensions.install(spark)
-    spark.read
-  }
-
   /** Read one table version (`VERSION AS OF v`); None = latest. */
   def read(spark: SparkSession, root: String,
       versionAsOf: Option[Long] = None): DataFrame = {
     val v = versionAsOf.orElse(latestVersion(root)).getOrElse(
       throw new IllegalStateException(s"snapshot table $root has no commits"))
-    reader(spark).parquet(manifestFiles(root, v): _*)
+    spark.read.parquet(manifestFiles(root, v): _*)
   }
 
   /** Read one version with parquet schema merging across its file set
@@ -201,7 +193,7 @@ object SnapshotTable {
       versionAsOf: Option[Long] = None): DataFrame = {
     val v = versionAsOf.orElse(latestVersion(root)).getOrElse(
       throw new IllegalStateException(s"snapshot table $root has no commits"))
-    reader(spark).option("mergeSchema", "true")
+    spark.read.option("mergeSchema", "true")
       .parquet(manifestFiles(root, v): _*)
   }
 
@@ -316,8 +308,8 @@ object SnapshotTable {
       root: String, fromV: Long, toV: Long): DataFrame = {
     val files = incrementalFiles(root, fromV, toV)
     if (files.isEmpty)
-      reader(spark).parquet(manifestFiles(root, toV): _*).limit(0)
-    else reader(spark).parquet(files: _*)
+      spark.read.parquet(manifestFiles(root, toV): _*).limit(0)
+    else spark.read.parquet(files: _*)
   }
 
   def restore(root: String, v: Long): Long = {

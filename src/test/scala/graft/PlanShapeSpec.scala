@@ -202,9 +202,9 @@ class PlanShapeSpec extends SparkSpecBase {
   }
 
   test("shuffle_global is one range-partitioned sort") {
-    // a threshold below the fixture size keeps SmallFinalSort off, so
-    // this checks the range-partitioned sort that large inputs get
-    withConf("spark.sql.autoBroadcastJoinThreshold", "1") {
+    // without SmallFinalSort, as for inputs above its gate: this checks
+    // the range-partitioned sort that large inputs get
+    withoutSmallFinalSort {
       val p = plan("shuffle_global")
       assert(p.contains("rangepartitioning"), p)
       assert(p.indexOf("Exchange") == p.lastIndexOf("Exchange"),

@@ -97,4 +97,17 @@ class QuickstartDocSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sig.length == 3 &&
       sig.forall(_.getSeq[Long](1).length == 16))
   }
+
+  test("the engine's planner additions reach the extension session once each") {
+    val dir = Files.createTempDirectory("quickstart_install")
+    try {
+      spark.range(3).write.parquet(s"$dir/t")
+      Tables.parquet(spark, s"$dir/t")
+      Tables.parquet(spark, s"$dir/t")
+    } finally TempDirs.deleteRecursively(dir)
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    assert(state.planner.strategies.count(_ == graft.plans.AsofJoinStrategy) == 1)
+    // the extension injects no optimizer rule: this is the rule's one path
+    assert(spark.experimental.extraOptimizations == Seq(graft.plans.SmallFinalSort))
+  }
 }

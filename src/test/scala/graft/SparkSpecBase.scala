@@ -21,11 +21,16 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  /** Runs `f` with the session conf `key` set to `value`, then restores it. */
-  def withConf[T](key: String, value: String)(f: => T): T = {
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try f finally spark.conf.set(key, prev)
+  /** Runs `f` with `graft.plans.SmallFinalSort` taken off the session,
+    * then puts it back: the once-per-session install has already run,
+    * so an engine read inside `f` does not add the rule again.
+    */
+  def withoutSmallFinalSort[T](f: => T): T = {
+    GraftExtensions.install(spark)
+    val e = spark.experimental
+    val prev = e.extraOptimizations
+    e.extraOptimizations = prev.filterNot(_ == graft.plans.SmallFinalSort)
+    try f finally e.extraOptimizations = prev
   }
 
   /** (Spark jobs, stages) this thread starts while `f` runs. Listener

@@ -9,15 +9,16 @@ Usage:
 The dumps come from `runMain graft.Plans <outDir> <tag> <query...>`.
 Parts of a formatted plan that change between runs of one build are
 replaced by fixed tokens: expression ids (`#n`), `plan_id=n`, the random
-suffix of `TempDirs.scoped` directories, UUIDs, RDD ids, and lambda and
-object hashes. In diff mode every query that differs after that prints
+suffix of `TempDirs.scoped` directories, UUIDs, RDD ids, the JVM-wide
+counters in lambda variable and common-expression names (`lambda x_17`,
+`_common_expr_2`), and lambda and object hashes. In diff mode every query that differs after that prints
 its unified diff; the last line counts queries compared, differing, and
 present under one tag only. Exit status 1 when any query differs or is
 unpaired.
 
-Not normalized: `profile_columns`' Expand column order follows
-expression-id hashes, so its plan can differ between two runs of one
-build.
+Not normalized: an Expand's column order follows expression-id hashes
+(`profile_columns`, `agg_chi2_contingency`), so such a plan can differ
+between two runs of one build.
 """
 import difflib
 import re
@@ -31,6 +32,8 @@ RULES = [
     (re.compile(r"(graft_[A-Za-z0-9_]*?)\d+(?=[/\]\s,.)]|$)"), r"\1<n>"),
     (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"),
      "<uuid>"),
+    (re.compile(r"(lambda \w+?)_\d+(?=#)"), r"\1_<n>"),
+    (re.compile(r"_common_expr_\d+"), "_common_expr_<n>"),
     (re.compile(r"\$\$Lambda[$/\w]*"), "$$Lambda"),
     (re.compile(r"@[0-9a-f]{4,16}\b"), "@<hash>"),
     (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[<n>]"),
