@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import java.nio.file.{Files, Paths}
 
-/** Whole-surface timing run: times one `count()` action per SparkEntry
+/** Whole-surface timing run: times one full-plan action per SparkEntry
   * query. `perfbench/run.py` is the benchmark gate; this main only checks
   * that every query runs at the chosen scale and how long each takes.
   *
@@ -50,6 +51,16 @@ object Bench {
       (steal, f.sum)
     } catch { case _: Throwable => (0L, 0L) }
 
+  /** Runs the whole physical plan, root sort included, and discards the
+    * rows. `count()` would plan an aggregate over the query, which drops
+    * the root sort; a `noop` write plans a V2 write, under which
+    * `SmallFinalSort` keeps the range exchange that readers never get.
+    */
+  private def drain(df: DataFrame): Unit = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val calibPre = spinNsPerOp()
@@ -74,7 +85,7 @@ object Bench {
     // timings measure the queries, not session startup. NonFatal only:
     // a fatal JVM error must abort the run here, not resurface as bogus
     // timings later
-    try SparkEntry.entry(spark).count()
+    try drain(SparkEntry.entry(spark))
     catch { case scala.util.control.NonFatal(_) => () }
     val runsPerQuery = 2
     // a run whose action THREW records its elapsed time NEGATED — the
@@ -85,7 +96,7 @@ object Bench {
       case (name, fn) =>
         name -> (1 to runsPerQuery).map { _ =>
           val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
+          val ok = try { drain(fn(spark, sfDir)); true }
                    catch { case _: Throwable => false }
           val dt = (System.nanoTime() - t0) / 1e9
           if (ok) dt else -dt

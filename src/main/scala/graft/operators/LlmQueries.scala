@@ -151,16 +151,15 @@ object LlmQueries {
     * `dedup_near_canonical` (the corpus materialization).
     *
     * This is a BUILD step, not a pure plan: min-label propagation
-    * iterates to an exact fixpoint with one tiny `count()` action per
-    * extra round (each round is one join over the edge list, which is
-    * ∝ the near-dup PAIR count — orders of magnitude smaller than the
-    * corpus at any scale). The build runs once per (JVM, input dir)
-    * and lands the label table as a parquet artifact; queries then
-    * read the artifact — the same offline-build/online-read split as
-    * `BuildIvfIndex`, and the shape a 100 TB pipeline would use (a
-    * label table is a corpus artifact, rebuilt when the corpus
-    * changes, not per query). Every intermediate cache is released
-    * once the artifact is written — nothing persists beyond the build.
+    * (`GraphQueries.componentLabels`) iterates to an exact fixpoint
+    * with one tiny `count()` action per extra round (each round is one
+    * join over the edge list, which is ∝ the near-dup PAIR count —
+    * orders of magnitude smaller than the corpus at any scale). The
+    * build runs once per (JVM, input dir) and lands the label table as
+    * a parquet artifact; queries then read the artifact — the same
+    * offline-build/online-read split as `BuildIvfIndex`, and the shape
+    * a 100 TB pipeline would use (a label table is a corpus artifact,
+    * rebuilt when the corpus changes, not per query).
     *
     * A cloned session (shared context, own SQLConf) scopes a small
     * shuffle-partition count to the propagation stage, exactly the
@@ -172,67 +171,11 @@ object LlmQueries {
     graft.TempDirs.writeOnce("cc_labels" + d) {
       val cc = s.newSession()
       cc.conf.set("spark.sql.shuffle.partitions", "8")
-      // persist: the pair set is referenced by BOTH union branches of
-      // the edge list and by every propagation round — without it the
-      // whole near-dup discovery subplan re-executes once per round
-      // (Spark does no cross-branch common-subplan reuse).
       val pairs = SimilarityQueries.ngramCandidatePairs(cc, d)
         .select(col("doc_a"), col("doc_b"))
-        .persist()
-      val edges = pairs
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      val verts = edges.select(col("src").as("v")).distinct()
-      // self-loops keep each vertex's own label in the min
-      val withSelf = edges
-        .union(verts.select(col("v").as("src"), col("v").as("dst")))
-      def propagate(l: DataFrame): DataFrame =
-        withSelf.join(l, col("dst") === col("v"))
-          .groupBy(col("src"))
-          .agg(min(col("label")).as("label"))
-          .select(col("src").as("v"), col("label"))
-      // 4 lazy rounds (enough for every observed fixture diameter),
-      // then iterate TO FIXPOINT with per-round persisted labels — the
-      // result matches the oracle's full transitive closure at ANY
-      // cluster diameter, not just up to an unrolled constant, while
-      // lineage stays linear (each materialized round reads the
-      // previous one's cache, never re-deriving the discovery
-      // subplan). The changed count per extra round is one tiny
-      // label-table join, so the safety cap is generous: a diameter
-      // beyond 100 in a near-dup graph means the blocking broke, and
-      // failing loudly beats silently wrong clusters.
-      // try/finally so a mid-build Spark failure (shuffle fetch,
-      // executor loss) cannot leak persisted blocks into the shared
-      // context cache across writeOnce retries (r7 review) — the
-      // finally covers every exit path, and unpersist on an
-      // already-released frame is a no-op
-      var labels = verts.select(col("v"), col("v").as("label"))
-      try {
-        for (_ <- 1 to 4) labels = propagate(labels)
-        labels = labels.persist()
-        var changed = -1L
-        var rounds = 4
-        while (changed != 0 && rounds < 100) {
-          val next = propagate(labels).persist()
-          try {
-            changed = next.as("n")
-              .join(labels.as("p"), col("n.v") === col("p.v"))
-              .filter(col("n.label") =!= col("p.label"))
-              .count()
-          } catch { case t: Throwable => next.unpersist(); throw t }
-          labels.unpersist()
-          labels = next
-          rounds += 1
-        }
-        if (changed != 0)
-          throw new IllegalStateException(
-            s"dedup_cc_clusters: labels not converged after $rounds rounds")
-        labels.select(col("v").as("doc_id"), col("label").as("cluster_id"))
-          .write.mode("overwrite").parquet(dir)
-      } finally {
-        labels.unpersist()
-        pairs.unpersist()
-      }
+      GraphQueries.componentLabels(pairs, "dedup_cc_clusters")(
+        _.select(col("v").as("doc_id"), col("label").as("cluster_id"))
+          .write.mode("overwrite").parquet(dir))
     }
     parquet(s, dir)
   }

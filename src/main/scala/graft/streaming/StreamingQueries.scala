@@ -4,7 +4,7 @@ import graft.Tables._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 /** SURVEY.md §2.I — Structured Streaming over `events`.
   *
@@ -16,9 +16,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
   * windowed shape is a batch query over `events` (DuckDB-oracle-checked)
   * and is replayed through a real micro-batch execution — every replay
   * streams from a parquet FILE source written distributed and once per
-  * JVM (as of r4 no replay collects the feed to the driver; queries
-  * needing controlled watermark epochs run multiple AvailableNow
-  * passes against one checkpoint). Event times are µs-truncated
+  * JVM (no replay collects the feed to the driver; queries needing
+  * controlled watermark epochs run multiple AvailableNow passes
+  * against one checkpoint). Event times are µs-truncated
   * throughout (SURVEY.md §1.3).
   *
   * Scale notes: all stateful ops key by user/window — state is bounded
@@ -27,7 +27,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
   */
 object StreamingQueries {
 
-  /** µs-domain event row used for deterministic MemoryStream replay. */
+  /** µs-domain event row: the schema of every replay source. */
   case class Ev(event_id: Long, ts_us: Long, user_id: Long,
                 event_type: String, value: Double)
 
@@ -38,9 +38,9 @@ object StreamingQueries {
                  event_type: String, value: Double,
                  ts_ts: java.sql.Timestamp)
 
-  /** Projected timer-input row (r14, guide §2.3): only the columns the
-    * inactivity fold reads, plus the watermark timestamp — the timers
-    * replay's analogue of the running_sum projection discipline.
+  /** Projected timer-input row: only the columns the inactivity fold
+    * reads, plus the watermark timestamp — the timers replay's
+    * analogue of the running_sum projection discipline.
     */
   case class EvT(ts_us: Long, user_id: Long, value: Double,
                  ts_ts: java.sql.Timestamp)
@@ -65,7 +65,7 @@ object StreamingQueries {
     }
   }
 
-  /** Event-time-TIMER processor (r9): per-user inactivity close. Each
+  /** Event-time-TIMER processor: per-user inactivity close. Each
     * input batch folds (n, cents, max event ms) into ValueState and
     * moves the user's single inactivity timer to maxSeen + 30 min
     * (delete-then-register — at most one live timer per key); when the
@@ -84,7 +84,7 @@ object StreamingQueries {
           Encoders.scalaLong), TTLConfig.NONE)
     private def timerAt(maxMs: Long): Long = maxMs + 30L * 60 * 1000
     // input is the projected EvT (ts_us, user_id, value + the watermark
-    // column) — event_id/event_type never reached the fold (r14, §2.3)
+    // column) — event_id/event_type never reach the fold
     override def handleInputRows(user: Long, rows: Iterator[EvT],
                                  timers: TimerValues): Iterator[(Long, Long, Long)] = {
       var (n, c, m) =
@@ -110,7 +110,7 @@ object StreamingQueries {
     }
   }
 
-  /** Initial-state processor (r9): warm-start migration — state is
+  /** Initial-state processor: warm-start migration — state is
     * BOOTSTRAPPED from a batch table before the first micro-batch
     * (handleInitialState), then the stream increments on top. The
     * ×1000 weighting makes the bootstrap's contribution provably
@@ -126,10 +126,10 @@ object StreamingQueries {
     override def handleInitialState(user: Long, init: Long,
                                     timers: TimerValues): Unit =
       score.update(init * 1000L)
-    // input is the projected user_id alone (r14, guide §2.3): the
-    // processor only COUNTS rows, so shipping whole Ev rows through
-    // the groupByKey shuffle and the typed encoder was 5× the bytes
-    // for zero information — the running_sum projection discipline
+    // input is the projected user_id alone: the processor only COUNTS
+    // rows, so shipping whole Ev rows through the groupByKey shuffle
+    // and the typed encoder would be 5× the bytes for zero information
+    // — the running_sum projection discipline
     override def handleInputRows(user: Long, rows: Iterator[Long],
                                  timers: TimerValues): Iterator[(Long, Long)] = {
       val s = (if (score.exists()) score.get() else 0L) + rows.size
@@ -138,7 +138,7 @@ object StreamingQueries {
     }
   }
 
-  /** ListState processor (r9): per-user bounded recent-items
+  /** ListState processor: per-user bounded recent-items
     * retention — the serving-state shape ("last N events per
     * entity"). State = the top-3 (ts, event_id) pairs so far; the
     * top-k merge is associative, so the final state is
@@ -155,9 +155,9 @@ object StreamingQueries {
       st = getHandle.getListState[(Long, Long)]("recent",
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
         TTLConfig.NONE)
-    // input is the projected (user_id, ts_us, event_id) triple (r14,
-    // guide §2.3): event_type/value never reached the top-3 merge, so
-    // the full-Ev shuffle and encode was pure overhead
+    // input is the projected (user_id, ts_us, event_id) triple:
+    // event_type/value never reach the top-3 merge, so a full-Ev
+    // shuffle and encode would be pure overhead
     override def handleInputRows(user: Long, rows: Iterator[(Long, Long, Long)],
                                  timers: TimerValues): Iterator[(Long, Seq[Long])] = {
       val existing = if (st.exists()) st.get().toSeq else Seq.empty
@@ -168,7 +168,7 @@ object StreamingQueries {
     }
   }
 
-  /** MapState processor (r9): per-user event_type → count map — the
+  /** MapState processor: per-user event_type → count map — the
     * keyed-sub-state surface of the Spark 4 API (ValueState and timer
     * coverage live in RunningCents / InactivityClose). Each batch
     * folds its rows into the map and re-emits the FULL updated map as
@@ -182,15 +182,15 @@ object StreamingQueries {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       m = getHandle.getMapState[String, Long]("type_counts",
         Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-    // input is the projected (user_id, event_type) pair (r14, guide
-    // §2.3): the fold reads only the type column
+    // input is the projected (user_id, event_type) pair: the fold
+    // reads only the type column
     override def handleInputRows(user: Long, rows: Iterator[(Long, String)],
                                  timers: TimerValues): Iterator[(Long, String, Long)] = {
       // fold the batch locally FIRST, then touch MapState once per
-      // distinct type: the r11 probe put map_counts' addBatch at
-      // 1.3 s because the old per-row containsKey/getValue/updateValue
-      // triple paid 3 RocksDB ops per input row — state traffic should
-      // scale with |keys touched|, never with row count (the same
+      // distinct type: a per-row containsKey/getValue/updateValue
+      // triple pays 3 RocksDB ops per input row (measured: 1.3 s of
+      // addBatch) — state traffic should scale with |keys touched|,
+      // never with row count (the same
       // map-side-combine principle as every batch aggregate here)
       val local = scala.collection.mutable.Map.empty[String, Long]
       rows.foreach { e =>
@@ -206,11 +206,10 @@ object StreamingQueries {
     }
   }
 
-  /** TTL processor (r13): per-user event count in a ValueState whose
+  /** TTL processor: per-user event count in a ValueState whose
     * entries EXPIRE `ttlMs` of processing time after their last
     * update — `TTLConfig`, the retention-bound knob every production
-    * stateful job sets first (the §2.I surface the r12 verdict ranked
-    * top of the remaining API gaps). Each emission carries the PRIOR
+    * stateful job sets first. Each emission carries the PRIOR
     * state the batch found alongside the updated total, so expiry is
     * observable in the output: a batch that runs after the TTL has
     * passed finds prior = 0, and a processor (or engine) that ignored
@@ -224,7 +223,7 @@ object StreamingQueries {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       n = getHandle.getValueState[Long]("n", Encoders.scalaLong,
         TTLConfig(java.time.Duration.ofMillis(ttlMs)))
-    // input is the projected user_id alone — the fold only counts (r14)
+    // input is the projected user_id alone — the fold only counts
     override def handleInputRows(user: Long, rows: Iterator[Long],
                                  timers: TimerValues): Iterator[(Long, Long, Long)] = {
       val prior = if (n.exists()) n.get() else 0L
@@ -240,9 +239,9 @@ object StreamingQueries {
     */
   private[graft] def statefulCountPipe(ds: Dataset[Ev]): DataFrame = {
     import ds.sparkSession.implicits._
-    // project to the grouping key BEFORE groupByKey (r14, guide §2.3):
-    // the fold only counts rows, so the full-Ev scan/encode/shuffle was
-    // 5× the bytes for zero information (the running_sum discipline)
+    // project to the grouping key BEFORE groupByKey: the fold only
+    // counts rows, so a full-Ev scan/encode/shuffle would be 5× the
+    // bytes for zero information (the running_sum discipline)
     ds.select(col("user_id")).as[Long]
       .groupByKey(identity)
       .flatMapGroupsWithState[Long, (Long, Long)](
@@ -261,7 +260,7 @@ object StreamingQueries {
     import ds.sparkSession.implicits._
     implicit val outEnc: Encoder[(Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    // project BEFORE groupByKey (r12): a typed groupByKey lambda is
+    // project BEFORE groupByKey: a typed groupByKey lambda is
     // opaque to the optimizer, so grouping raw Ev rows scans, encodes
     // and shuffles all 5 columns when the processor reads 2 — the
     // relational select restores column pruning at the parquet scan
@@ -275,44 +274,6 @@ object StreamingQueries {
       .toDF("user_id", "cents_running")
   }
 
-
-  // source chunk layouts that the CHECKPOINTED sink depends on are
-  // written once per JVM via TempDirs.writeOnce: rewriting them with
-  // fresh part file names would make the checkpoint see "new" files
-  // and reprocess — the exactly-once guarantee is per stable input file
-  private def writeOnce(key: String)(w: => Unit): Unit =
-    graft.TempDirs.writeOnce(key)(w)
-
-  /** Run ONE Trigger.AvailableNow pass of a file-source pipeline into a
-    * checkpointed parquet sink: consumes whatever files under `srcDir`
-    * the checkpoint has not seen yet as a single micro-batch, runs the
-    * trailing no-data batch (watermark advancement + append-mode window
-    * emission), and terminates. Calling it again after MORE files land
-    * in `srcDir` resumes from the same checkpoint with the recovered
-    * watermark — which makes micro-batch boundaries exactly as
-    * controllable as the MemoryStream feeds this replaced, with no
-    * driver-side collect anywhere (r3's `evSet` fed these replays
-    * through a whole-table `collect()` — a scale-killer flagged in
-    * VERDICT r3).
-    */
-  private def runFilePass(s0: SparkSession, srcDir: String, outDir: String)(
-      pipe: Dataset[Ev] => DataFrame): Unit = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    import s.implicits._
-    val src = s.readStream
-      .schema(Encoders.product[Ev].schema)
-      .parquet(srcDir)
-      .as[Ev]
-    val q = pipe(src)
-      .writeStream.format("parquet")
-      .option("path", s"$outDir/data")
-      .option("checkpointLocation", s"$outDir/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-  }
 
   /** Plain two-file event layout for file-source replays (written once
     * per JVM, distributed write — never through the driver). Queries
@@ -394,37 +355,33 @@ object StreamingQueries {
       s
     }
 
-  /** Memory-sink names must be unique per INVOCATION now that replays
+  /** Memory-sink names must be unique per INVOCATION because replays
     * share a session: a fixed name would make two concurrent runs of
     * one operator collide on the StreamingQueryManager ("query with
     * that name is already active") or swap the memory table under an
-    * in-flight read (r10 review).
+    * in-flight read.
     */
   private val replaySeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Partition count for the SMALL-KEYED stateful replays. The
-    * hypothesis that 1 partition beats 2 by saving a state-store
-    * lifecycle was A/B'd same-binary: family second-pass totals 13.9 s
-    * (parts=1) vs 12.4 s (parts=2) — the serial 100k-row addBatch fold
-    * loses more than the saved open/commit returns. Results are
-    * key-grouped aggregates, partitioning-invariant by construction,
-    * so the count is pure cost either way.
+  /** Partition count for the SMALL-KEYED stateful replays. 1 partition
+    * measured slower than 2 (family second-pass totals 13.9 s vs
+    * 12.4 s): the serial 100k-row addBatch fold loses more than the
+    * saved state-store open/commit returns. Results are key-grouped
+    * aggregates, partitioning-invariant by construction, so the count
+    * is pure cost either way.
     */
   private val keyedParts = 2
 
-  /** Consolidated checkpoint root for the replay family (r11 verdict
-    * #2): one RAM-filesystem base instead of a per-query temp dir on
-    * the disk-backed /tmp. Every replay lifecycle pays an offset-log
+  /** Checkpoint root of the memory-sink replays: a RAM filesystem
+    * instead of the disk-backed /tmp. Every replay pays an offset-log
     * write, a commit-log write and (RocksDB) a changelog upload into
     * its checkpoint — on ext4 those are fsync-bound, on tmpfs they are
-    * memory writes. Each invocation still gets its OWN subdir (offsets
-    * are per-query state; reusing one across runs would mark batch 0
+    * memory writes. Each invocation gets its OWN subdir (offsets are
+    * per-query state; reusing one across runs would mark batch 0
     * committed and starve the next run's memory sink), deleted in the
     * same `finally` that stops the query, so the root never
-    * accumulates. Production checkpoints go to durable storage by
-    * definition — this root only serves the bench/verify replays,
-    * and the parquet-sink restart queries keep their durable-disk
-    * checkpoints (exactly-once across restart is their SEMANTICS).
+    * accumulates. The parquet-sink replays keep their durable-disk
+    * checkpoints: exactly-once across restart is their semantics.
     * Falls back to Spark's temp-checkpoint path when /dev/shm is
     * absent.
     */
@@ -432,15 +389,14 @@ object StreamingQueries {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (java.nio.file.Files.isDirectory(shm) &&
         java.nio.file.Files.isWritable(shm)) {
-      // PER-PROCESS base (r12 review): replaySeq restarts at 1 in
-      // every JVM, so a fixed base would make a crashed run's leftover
-      // checkpoint (its finally-delete never ran) or a concurrent
-      // second JVM silently REUSE the same path — Spark would restore
-      // the stale offset/commit log and starve or corrupt the memory
-      // sink. pid + JVM start nanos make the base unique per process;
-      // stale siblings from crashed runs are swept once per JVM when
-      // older than 6h (best-effort — a concurrent sweep racing a
-      // live run older than that cannot happen inside one bench run).
+      // PER-PROCESS base: replaySeq restarts at 1 in every JVM, so a
+      // fixed base would make a crashed run's leftover checkpoint (its
+      // finally-delete never ran) or a concurrent second JVM silently
+      // REUSE the same path — Spark would restore the stale
+      // offset/commit log and starve or corrupt the memory sink.
+      // pid + JVM start nanos make the base unique per process; stale
+      // siblings from crashed runs are swept once per JVM when older
+      // than 6h.
       val root = java.nio.file.Paths.get("/dev/shm/graft_ckpt")
       try {
         java.nio.file.Files.createDirectories(root)
@@ -462,23 +418,59 @@ object StreamingQueries {
     } else None
   }
 
-  private def deleteTree(dir: String): Unit =
-    graft.TempDirs.deleteRecursively(java.nio.file.Paths.get(dir))
+  /** The replay source: the parquet files under `dir` as a stream of
+    * `Ev` rows. `maxFilesPerTrigger` caps the files per micro-batch;
+    * without it Trigger.AvailableNow takes every file in one batch.
+    */
+  private def eventStream(s: SparkSession, dir: String,
+                          maxFilesPerTrigger: Option[Int] = None): Dataset[Ev] = {
+    import s.implicits._
+    val r = s.readStream.schema(Encoders.product[Ev].schema)
+    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n.toLong))
+    r.parquet(dir).as[Ev]
+  }
 
-  /** Run a FILE-SOURCE streaming pipeline to completion (Trigger
-    * .AvailableNow terminates when the backlog drains) into a memory
-    * sink. Unlike the MemoryStream replays this never collects the
-    * input to the driver — the scale path, where the "stream" is a
-    * directory an upstream job appends to.
+  /** Run the streaming frame `df` to completion (Trigger.AvailableNow
+    * terminates when the backlog drains) into a memory sink under a
+    * per-invocation name and checkpoint, and return the sink's rows.
+    * The checkpoint is deleted and the query stopped on every exit
+    * path. The sink's temp view is dropped before returning: the
+    * replay session outlives every invocation, so leaving `name_N`
+    * views behind would pin every replay's result rows in driver
+    * memory for the parent session's lifetime. The returned frame's
+    * plan already holds the resolved memory-sink relation, so it stays
+    * readable after the drop.
+    */
+  private def memorySink(name: String, mode: OutputMode, df: DataFrame): DataFrame = {
+    val s = df.sparkSession
+    val uname = s"${name}_${replaySeq.incrementAndGet()}"
+    val writer = df.writeStream.format("memory").queryName(uname)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+    val ckpt = ckptBase.map(b => s"$b/$uname")
+    ckpt.foreach(c => writer.option("checkpointLocation", c))
+    val q = writer.start()
+    try q.awaitTermination() finally {
+      q.stop()
+      ckpt.foreach(c =>
+        graft.TempDirs.deleteRecursively(java.nio.file.Paths.get(c)))
+    }
+    val out = s.table(uname)
+    s.catalog.dropTempView(uname)
+    out
+  }
+
+  /** Replay the parquet event files under `dir` through `pipe` into a
+    * memory sink, on the replay session for (`rocksDb`, `partitions`,
+    * `noDataBatches`).
     *
     * NO maxFilesPerTrigger: under AvailableNow in Spark 4.1 the
     * option produced a dead EMPTY batch 0 followed by ALL files in
     * batch 1 — an extra ~0.5 s of trigger/state-commit overhead per
-    * replay with zero actual file splitting (instrumented with a
-    * StreamingQueryListener; `durationMs` put ~0.45 s of addBatch on
-    * the 0-row batch). Every pipeline routed through here is
-    * chunking-independent by contract (monotone Update emissions or
-    * Complete mode), so batch granularity was never load-bearing;
+    * replay with zero actual file splitting. Every pipeline routed
+    * through here is chunking-independent by contract (monotone
+    * Update emissions, Complete mode, or a single batch before any
+    * watermark movement), so batch granularity is never load-bearing;
     * cross-batch state persistence is exercised by the two-pass
     * checkpoint-resume queries and StatefulRestartSpec, which manage
     * their own epochs.
@@ -489,33 +481,42 @@ object StreamingQueries {
                             noDataBatches: Boolean = true)(
                              pipe: Dataset[Ev] => DataFrame): DataFrame = {
     val s = replaySession(s0, rocksDb, partitions, noDataBatches)
-    import s.implicits._
-    val uname = s"${name}_${replaySeq.incrementAndGet()}"
-    val src = s.readStream
-      .schema(Encoders.product[Ev].schema)
-      .parquet(dir)
-      .as[Ev]
-    val writer = pipe(src)
-      .writeStream.format("memory").queryName(uname).outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val ckpt = ckptBase.map(b => s"$b/$uname")
-    ckpt.foreach(c => writer.option("checkpointLocation", c))
-    val q = writer.start()
-    try q.awaitTermination() finally {
-      q.stop()
-      ckpt.foreach(deleteTree)
-    }
-    // un-register the per-invocation memory table right away (ADVICE
-    // r10): the cached replay session outlives every invocation, so
-    // leaving name_N views behind accumulates every replay's result
-    // rows in driver memory for the parent session's lifetime. The
-    // returned DataFrame's plan already holds the resolved memory-sink
-    // relation, so dropping the catalog name doesn't invalidate it —
-    // it just stops the catalog pinning the rows once the caller lets
-    // the DataFrame go.
-    val out = s.table(uname)
-    s.catalog.dropTempView(uname)
-    out
+    memorySink(name, mode, pipe(eventStream(s, dir)))
+  }
+
+  /** Run ONE Trigger.AvailableNow pass of the streaming frame `df` into
+    * the checkpointed parquet sink `$outDir/data` + `$outDir/ckpt`: it
+    * consumes whatever source files the checkpoint has not seen yet,
+    * runs the trailing no-data batch if the session enables it, and
+    * terminates. Calling it again after MORE files land in the source
+    * resumes from the same checkpoint with the recovered watermark, so
+    * micro-batch boundaries are fully controllable with no driver-side
+    * collect. The source files must be written once per JVM
+    * (`TempDirs.writeOnce`): rewriting them with fresh part-file names
+    * would make the checkpoint see "new" files and reprocess them —
+    * exactly-once holds per stable input file.
+    */
+  private def parquetSink(df: DataFrame, outDir: String): Unit = {
+    val q = df.writeStream.format("parquet")
+      .option("path", s"$outDir/data")
+      .option("checkpointLocation", s"$outDir/ckpt")
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+  }
+
+  /** The rows a `parquetSink` committed under `outDir`, read with an
+    * explicit schema from a pre-created dir: a replay that emits
+    * nothing commits no sink file (or even creates the path), and the
+    * contract for a degenerate input is an empty result, not a
+    * missing-path error.
+    */
+  private def sinkRows(s: SparkSession, outDir: String,
+                       schema: String): DataFrame = {
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$outDir/data"))
+    s.read.schema(schema).parquet(s"$outDir/data")
   }
 
   val queries: Map[String, Q] = Map(
@@ -548,7 +549,7 @@ object StreamingQueries {
           col("n"), col("sum_val"))
         .orderBy(col("user_id"), col("sess_start_us"))),
 
-    // ---- real streaming executions (MemoryStream micro-batches) ----
+    // ---- real streaming executions (file-source micro-batches) ----
 
     // Late-data handling: every 50th event (by id) is held back to a
     // second replay pass; by then the watermark has passed most of
@@ -572,7 +573,7 @@ object StreamingQueries {
     "stream_watermark_late" -> ((s, d) => {
       val srcDir = graft.TempDirs.scoped("wmlate_src", d)
       val outDir = graft.TempDirs.scoped("wmlate_out", d)
-      writeOnce("wmlate" + d) {
+      graft.TempDirs.writeOnce("wmlate" + d) {
         // a PRIOR failed build (writeOnce records the key only on
         // success) may have left a half-committed checkpoint; resuming
         // against it would replay the rewritten source files as late
@@ -583,37 +584,34 @@ object StreamingQueries {
         val ev = events(s, d)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))
-        def pipe(ds: Dataset[Ev]): DataFrame =
-          ds.withColumn("ts", timestamp_micros(col("ts_us")))
-            .withWatermark("ts", "10 minutes")
-            .groupBy(window(col("ts"), "1 hour").as("w"))
-            .agg(count(lit(1)).as("n"))
-            .select(unix_micros(col("w.start")).as("win_start_us"), col("n"))
+        // no-data batches stay on: the append-mode windows are emitted
+        // by the trailing batch's watermark advance
+        val rs = replaySession(s, rocksDb = false, partitions = 4,
+          noDataBatches = true)
+        def pass(): Unit = parquetSink(eventStream(rs, srcDir)
+          .withColumn("ts", timestamp_micros(col("ts_us")))
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window(col("ts"), "1 hour").as("w"))
+          .agg(count(lit(1)).as("n"))
+          .select(unix_micros(col("w.start")).as("win_start_us"), col("n")),
+          outDir)
         // one file per pass => one data micro-batch per pass: the
         // watermark cannot advance mid-set and drop on-time rows
         ev.filter(col("event_id") % 50 =!= 0).repartition(1)
           .write.mode("overwrite").parquet(srcDir)
-        runFilePass(s, srcDir, outDir)(pipe)
+        pass()
         ev.filter(col("event_id") % 50 === 0).repartition(1)
           .write.mode("append").parquet(srcDir)
-        runFilePass(s, srcDir, outDir)(pipe)
+        pass()
       }
-      // schema-explicit read of a pre-created dir: an EMPTY event feed
-      // means the sink never commits a file (or even creates the
-      // path), and the degenerate-input contract is an empty result,
-      // not a missing-path error
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$outDir/data"))
-      s.read.schema("win_start_us BIGINT, n BIGINT")
-        .parquet(s"$outDir/data")
+      sinkRows(s, outDir, "win_start_us BIGINT, n BIGINT")
         .select(col("win_start_us"), col("n"))
         .orderBy(col("win_start_us"))
     }),
 
     // Stateful streaming dedup over a FILE source: the doubled event
     // set is written as two parquet chunk files (a distributed write —
-    // no driver collect anywhere on this path, unlike the MemoryStream
-    // replays), streamed back one file per micro-batch, and
+    // no driver collect anywhere on this path), streamed back, and
     // dropDuplicatesWithinWatermark keeps exactly one copy of each
     // event. The watermark delay exceeds the fixture's event-time span,
     // so no row is ever late-dropped regardless of which chunk file a
@@ -635,8 +633,8 @@ object StreamingQueries {
       }
       runFileStream(s, "graft_sink_dedup", dir, OutputMode.Append(),
           noDataBatches = false) { ds =>
-        // project to the dedup key + the downstream count column (r14,
-        // guide §2.3): user_id/value never reach the state or the
+        // project to the dedup key + the downstream count column:
+        // user_id/value never reach the state or the
         // type-count, so they only fattened the dedup shuffle and the
         // memory sink. Duplicate rows are byte-identical, so the
         // surviving (event_id → event_type) pairs are unchanged.
@@ -652,10 +650,8 @@ object StreamingQueries {
     // Arbitrary stateful per-user running aggregate via
     // flatMapGroupsWithState; the per-user count is monotone, so the max
     // over all Update-mode emissions is the final total — oracle-paired
-    // against the batch GROUP BY.
-    // File-source replay (no driver collect): per-user counts are
-    // monotone, so the max over Update-mode emissions is the final
-    // total regardless of which file a micro-batch picks first.
+    // against the batch GROUP BY, regardless of which file a
+    // micro-batch picks first.
     "stream_stateful_count" -> ((s, d) => {
       val out = runFileStream(s, "graft_sink_state", plainEventsDir(s, d),
         OutputMode.Update(), partitions = keyedParts,
@@ -665,7 +661,7 @@ object StreamingQueries {
         .orderBy(col("user_id"))
     }),
 
-    // COMPLETE-mode leaderboard (r9): the third output mode —
+    // COMPLETE-mode leaderboard: the third output mode —
     // stream_sink_parquet appends, stream_stateful_count updates, this
     // RE-EMITS the full aggregate every micro-batch (the live-dashboard
     // contract: each refresh replaces the whole board). The memory
@@ -694,9 +690,8 @@ object StreamingQueries {
     // watermark needed — the canonical "enrich the feed" shape). The
     // user->nation mapping is a synthetic FK (user_id % 25) since the
     // fixtures carry no user dim; oracle-paired against the identical
-    // batch join. Replays from a parquet FILE source (one file per
-    // micro-batch, no driver collect — the scale path, like
-    // stream_dedup); the pipe is stateless, so the result is
+    // batch join. Replays from a parquet FILE source (no driver
+    // collect — the scale path, like stream_dedup); the pipe is stateless, so the result is
     // chunking-independent by construction.
     "stream_static_join" -> ((s, d) => {
       runFileStream(s, "graft_sink_enrich", plainEventsDir(s, d),
@@ -712,16 +707,7 @@ object StreamingQueries {
         .orderBy(col("n_name"))
     }),
 
-    // Checkpointed parquet FILE SINK with exactly-once semantics: the
-    // event chunks stream in one file per micro-batch and land in a
-    // parquet sink under a real checkpoint. Because the source layout
-    // is written ONCE per JVM and the checkpoint + sink live in stable
-    // scoped dirs, re-invoking this query re-starts the stream against
-    // the same checkpoint: the restart finds no unprocessed files and
-    // the sink is byte-identical — the exactly-once restart contract,
-    // asserted in StreamingParitySpec. (This is the production sink
-    // shape; the memory sinks elsewhere are test harness only.)
-    // CDC upsert sink via foreachBatch (r6): maintain a keyed serving
+    // CDC upsert sink via foreachBatch: maintain a keyed serving
     // table ("latest state per user") from a changelog feed — THE
     // production pattern for landing a stream into a table format that
     // has no streaming MERGE of its own. Each micro-batch reduces to
@@ -734,25 +720,21 @@ object StreamingQueries {
     // associative, commutative max, so the final table is provably
     // independent of file pickup order and micro-batch chunking
     // (maxFilesPerTrigger=1 keeps MULTIPLE real merge rounds — the
-    // versioned-merge semantics this operator exists to exercise, so
-    // the option stays here even though the shared replay harness
-    // dropped it). State
-    // versions are serving-table-sized (|keys| rows), not feed-sized;
+    // versioned-merge semantics this operator exists to exercise).
+    // State versions are serving-table-sized (|keys| rows), not feed-sized;
     // at 100 TB the same loop lands on a MERGE-capable table format
     // (the §2.M boundary) instead of full-snapshot rewrites.
     "stream_foreachbatch_upsert" -> ((s0, d) => {
       val srcDir = graft.TempDirs.scoped("fbusrc", d)
-      writeOnce("fbusrc" + d) {
+      graft.TempDirs.writeOnce("fbusrc" + d) {
         events(s0, d)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))
           .repartition(4, pmod(col("event_id"), lit(4)))
           .write.mode("overwrite").parquet(srcDir)
       }
-      // cached replay session (r14 — this and stream_sink_parquet were
-      // the last two replays paying a fresh SessionState rebuild per
-      // invocation; the durable checkpoint/sink dirs are scoped paths,
-      // untouched by which session runs the query)
+      // the durable checkpoint/sink dirs are scoped paths, untouched
+      // by which session runs the query
       val s = replaySession(s0, rocksDb = false, partitions = 4,
         noDataBatches = false)
       val outDir = graft.TempDirs.scoped("fbuout", d)
@@ -776,10 +758,7 @@ object StreamingQueries {
         .select(col("user_id"), col("m.last_ts_us").as("last_ts_us"),
           col("m.last_event_id").as("last_event_id"),
           col("m.last_value").as("last_value"))
-      val q = s.readStream
-        .schema(Encoders.product[Ev].schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
+      val q = eventStream(s, srcDir, maxFilesPerTrigger = Some(1)).toDF()
         .writeStream
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           val latest = reduceLatest(batch
@@ -792,7 +771,7 @@ object StreamingQueries {
           // overwrite — reading and overwriting the same v$batchId dir
           // would either throw (cannot overwrite a path being read /
           // partial files) or silently drop keys, and nothing would
-          // ever clear the poisoned state (r7 review)
+          // ever clear the poisoned state
           val merged = versions().filter(_ < batchId).maxOption match {
             case Some(v) =>
               reduceLatest(s.read.parquet(s"$dataRoot/v$v")
@@ -803,47 +782,38 @@ object StreamingQueries {
           ()
         }
         .option("checkpointLocation", s"$outDir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       try q.awaitTermination() finally q.stop()
       s.read.parquet(s"$dataRoot/v${versions().max}")
         .orderBy(col("user_id"))
     }),
 
+    // Checkpointed parquet FILE SINK with exactly-once semantics: the
+    // event chunks stream in one file per micro-batch and land in a
+    // parquet sink under a real checkpoint. Because the source layout
+    // is written ONCE per JVM and the checkpoint + sink live in stable
+    // scoped dirs, re-invoking this query re-starts the stream against
+    // the same checkpoint: the restart finds no unprocessed files and
+    // the sink is byte-identical — the exactly-once restart contract,
+    // asserted in StreamingParitySpec. (This is the production sink
+    // shape; the memory sinks elsewhere are test harness only.)
     "stream_sink_parquet" -> ((s0, d) => {
-      // the shared once-per-JVM source layout (identical content and
-      // chunking to a private staging — r7 review dropped the
-      // duplicate rewrite); writeOnce stability is exactly the
-      // never-rewritten property the checkpointed sink needs
+      // the shared once-per-JVM source layout: writeOnce stability is
+      // exactly the never-rewritten property the checkpointed sink needs
       val srcDir = plainEventsDir(s0, d)
-      // cached replay session (r14, see stream_foreachbatch_upsert)
       val s = replaySession(s0, rocksDb = false, partitions = 4,
         noDataBatches = false)
-      import s.implicits._
       val outDir = graft.TempDirs.scoped("sinkout", d)
-      val q = s.readStream
-        .schema(Encoders.product[Ev].schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir).as[Ev]
+      parquetSink(eventStream(s, srcDir, maxFilesPerTrigger = Some(1))
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"),
           (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-            * 100).cast("long").as("cents"))
-        .writeStream.format("parquet")
-        .option("path", s"$outDir/data")
-        .option("checkpointLocation", s"$outDir/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      // schema-explicit read of a pre-created dir (see
-      // stream_watermark_late): a feed with no purchases commits no
-      // sink file, and the contract is an empty aggregate, not a
-      // missing-path error
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$outDir/data"))
-      s.read.schema("event_id BIGINT, user_id BIGINT, cents BIGINT")
-        .parquet(s"$outDir/data")
+            * 100).cast("long").as("cents")),
+        outDir)
+      // a feed with no purchases commits no sink file, and the
+      // contract is an empty aggregate
+      sinkRows(s, outDir, "event_id BIGINT, user_id BIGINT, cents BIGINT")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_purchases"),
           sum(col("cents")).as("sum_cents"))
@@ -868,7 +838,7 @@ object StreamingQueries {
     "stream_stream_join" -> ((s0, d) => {
       val clickDir = graft.TempDirs.scoped("ssj_clicks", d)
       val purchDir = graft.TempDirs.scoped("ssj_purch", d)
-      writeOnce("ssj" + d) {
+      graft.TempDirs.writeOnce("ssj" + d) {
         val ev = events(s0, d)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))
@@ -877,49 +847,31 @@ object StreamingQueries {
         ev.filter(col("event_type") === "purchase")
           .write.mode("overwrite").parquet(purchDir)
       }
-      // the CACHED replay session (r11, was a fresh newSession per
-      // invocation): rebuilding SessionState each run was ~0.4 s of
-      // pure fixed cost. Partitions stay at 4 — an A/B at 2 measured
-      // WORSE (the 40 k-row join work loses more parallelism than the
-      // halved 4-stores-per-partition lifecycle returns) — and the
-      // trailing watermark-eviction batch (probe: ~0.5-0.7 s of pure
-      // store opens, zero output for an inner join that emits on
-      // match) is disabled via noDataBatches = false. Unique sink
-      // name + drop, as runFileStream.
+      // Partitions stay at 4 — an A/B at 2 measured WORSE (the 40 k-row
+      // join work loses more parallelism than the halved
+      // 4-stores-per-partition lifecycle returns) — and the trailing
+      // watermark-eviction batch (probe: ~0.5-0.7 s of pure store
+      // opens, zero output for an inner join that emits on match) is
+      // disabled via noDataBatches = false.
       val s = replaySession(s0, rocksDb = false, partitions = 4,
         noDataBatches = false)
-      import s.implicits._
-      val uname = s"graft_sink_ssj_${replaySeq.incrementAndGet()}"
-      def side(dir: String): Dataset[Ev] = s.readStream
-        .schema(Encoders.product[Ev].schema)
-        .parquet(dir)
-        .as[Ev]
-      val clicks = side(clickDir)
+      val clicks = eventStream(s, clickDir)
         .withColumn("click_ts", timestamp_micros(col("ts_us")))
         .withWatermark("click_ts", "1 hour")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("click_ts"))
-      val purchases = side(purchDir)
+      val purchases = eventStream(s, purchDir)
         .withColumn("p_ts", timestamp_micros(col("ts_us")))
         .withWatermark("p_ts", "1 hour")
         .select(col("event_id").as("purchase_id"),
           col("user_id").as("p_user"), col("p_ts"))
-      val w = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"))
-        .select(col("user_id"), col("click_id"), col("purchase_id"))
-        .writeStream.format("memory").queryName(uname)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val ckpt = ckptBase.map(b => s"$b/$uname")
-      ckpt.foreach(c => w.option("checkpointLocation", c))
-      val q = w.start()
-      try q.awaitTermination() finally { q.stop(); ckpt.foreach(deleteTree) }
-      val out = s.table(uname)
+      memorySink("graft_sink_ssj", OutputMode.Append(),
+        clicks.join(purchases,
+            col("user_id") === col("p_user") &&
+              col("p_ts") >= col("click_ts") &&
+              col("p_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"))
+          .select(col("user_id"), col("click_id"), col("purchase_id")))
         .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
-      s.catalog.dropTempView(uname)
-      out
     }),
 
     // Same running-aggregate shape on the MODERN stateful API:
@@ -939,7 +891,7 @@ object StreamingQueries {
         .orderBy(col("user_id"))
     }),
 
-    // Initial state on transformWithState (r9): the state-MIGRATION
+    // Initial state on transformWithState: the state-MIGRATION
     // surface — per-user state bootstrapped from a BATCH table
     // (signup counts ×1000) before micro-batch 1, then the stream
     // (non-signup events, a disjoint staged source) increments on
@@ -982,7 +934,7 @@ object StreamingQueries {
         .orderBy(col("user_id"))
     }),
 
-    // ListState on transformWithState (r9): per-user last-3 events by
+    // ListState on transformWithState: per-user last-3 events by
     // (event time, id) on RocksDB — bounded per-key retention, the
     // feature-serving/session-replay state shape. The top-k merge is
     // associative (chunking-independent final state) and emissions
@@ -1005,8 +957,8 @@ object StreamingQueries {
       }
       // Lexicographic MAX picks the final (complete) emission per user;
       // the array is then flattened to a comma-joined string because the
-      // driver comparator hashes scalar columns only (r9 lesson: a raw
-      // ArrayType column kills the pandas sort/factorize path).
+      // driver comparator hashes scalar columns only (a raw ArrayType
+      // column breaks the pandas sort/factorize path).
       out.groupBy(col("user_id"))
         .agg(max(col("top3")).as("top3_arr"))
         .select(col("user_id"),
@@ -1015,7 +967,7 @@ object StreamingQueries {
         .orderBy(col("user_id"))
     }),
 
-    // MapState on transformWithState (r9): per-user event_type →
+    // MapState on transformWithState: per-user event_type →
     // count map on RocksDB — the keyed-sub-state API surface (one
     // state row per (grouping key, map key) in the store, so a
     // user's map never materializes except when iterated). Replayed
@@ -1040,7 +992,7 @@ object StreamingQueries {
         .orderBy(col("user_id"), col("event_type"))
     }),
 
-    // Event-time TIMERS on transformWithState (r9): per-user
+    // Event-time TIMERS on transformWithState: per-user
     // inactivity close — totals are EMITTED BY THE WATERMARK passing
     // the user's 30-min inactivity timer, not by rows arriving (the
     // session-timeout/SLA-alarm primitive; TimeMode.EventTime +
@@ -1056,46 +1008,30 @@ object StreamingQueries {
     // open (their timer is beyond the final watermark): exactly the
     // semantics a live pipeline has, and the oracle reproduces the
     // threshold in ms watermark arithmetic.
-    "stream_tws_timers" -> ((s0, d) => {
-      // cached RocksDB replay session (r11, was a fresh newSession per
-      // invocation — a pure SessionState-rebuild cost); this is the
-      // one replay that MUST keep no-data micro-batches: its output is
-      // produced by the trailing batch's watermark advance firing the
-      // inactivity timers, not by rows arriving
-      val s = replaySession(s0, rocksDb = true, partitions = keyedParts)
-      import s.implicits._
-      implicit val outEnc: Encoder[(Long, Long, Long)] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong)
-      val uname = s"graft_sink_timers_${replaySeq.incrementAndGet()}"
-      val src = s.readStream
-        .schema(Encoders.product[Ev].schema)
-        .parquet(plainEventsDir(s0, d))
-        // project to the fold's columns before the typed boundary
-        // (r14, guide §2.3) — event_id/event_type never reach the
-        // inactivity aggregate
-        .select(col("ts_us"), col("user_id"), col("value"))
-        .withColumn("ts_ts", timestamp_micros(col("ts_us")))
-        .withWatermark("ts_ts", "10 minutes")
-        .as[EvT]
-      val w = src.groupByKey(_.user_id)
-        .transformWithState(new InactivityClose, TimeMode.EventTime(),
-          OutputMode.Append())
-        .toDF("user_id", "n_events", "sum_cents")
-        .writeStream.format("memory").queryName(uname)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val ckpt = ckptBase.map(b => s"$b/$uname")
-      ckpt.foreach(c => w.option("checkpointLocation", c))
-      val q = w.start()
-      try q.awaitTermination() finally { q.stop(); ckpt.foreach(deleteTree) }
-      val out = s.table(uname).orderBy(col("user_id"))
-      s.catalog.dropTempView(uname)
-      out
+    "stream_tws_timers" -> ((s, d) => {
+      // the one memory-sink replay that MUST keep no-data micro-batches:
+      // its output is produced by the trailing batch's watermark advance
+      // firing the inactivity timers, not by rows arriving
+      runFileStream(s, "graft_sink_timers", plainEventsDir(s, d),
+          OutputMode.Append(), rocksDb = true, partitions = keyedParts) { ds =>
+        import ds.sparkSession.implicits._
+        implicit val outEnc: Encoder[(Long, Long, Long)] =
+          Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+            Encoders.scalaLong)
+        // project to the fold's columns before the typed boundary —
+        // event_id/event_type never reach the inactivity aggregate
+        ds.select(col("ts_us"), col("user_id"), col("value"))
+          .withColumn("ts_ts", timestamp_micros(col("ts_us")))
+          .withWatermark("ts_ts", "10 minutes")
+          .as[EvT]
+          .groupByKey(_.user_id)
+          .transformWithState(new InactivityClose, TimeMode.EventTime(),
+            OutputMode.Append())
+          .toDF("user_id", "n_events", "sum_cents")
+      }.orderBy(col("user_id"))
     }),
 
-    // State TTL on transformWithState (r13, r12 VERDICT task 5): the
-    // retention knob of production stateful jobs — ValueState entries
+    // State TTL on transformWithState: the retention knob of production stateful jobs — ValueState entries
     // expire 2 s of processing time after their update. Replay is two
     // AvailableNow passes against ONE checkpoint (the
     // stream_watermark_late epoch discipline): pass 1 streams the
@@ -1113,44 +1049,33 @@ object StreamingQueries {
     "stream_tws_ttl" -> ((s0, d) => {
       val srcDir = graft.TempDirs.scoped("ttl_src", d)
       val outDir = graft.TempDirs.scoped("ttl_out", d)
-      writeOnce("ttl" + d) {
+      graft.TempDirs.writeOnce("ttl" + d) {
         // wipe a half-committed retry's sink+checkpoint (the wmlate
         // rationale: resuming against one would double-count)
         graft.TempDirs.clearDir(outDir)
         val ev = events(s0, d)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))
-        def pass(): Unit = {
-          // noDataBatches = false is LOAD-BEARING here, not a perf
-          // trim: in TimeMode.ProcessingTime the operator's
-          // shouldRunAnotherBatch is always true (a later batch could
-          // expire more TTL state), so AvailableNow + no-data batches
-          // enabled loops FOREVER (observed: 1297 empty micro-batches
-          // before the r13 build killed it). TTL reads stay correct
-          // without cleanup batches — expiry is checked against the
-          // batch timestamp at state read, not applied by sweeps.
-          val s = replaySession(s0, rocksDb = true, partitions = 4,
-            noDataBatches = false)
-          import s.implicits._
-          implicit val outEnc: Encoder[(Long, Long, Long)] =
-            Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-              Encoders.scalaLong)
-          val src = s.readStream
-            .schema(Encoders.product[Ev].schema)
-            .parquet(srcDir)
-            .select(col("user_id")).as[Long] // count-only fold (r14)
-          val q = src.groupByKey(identity)
-            .transformWithState(new TtlPhaseCount(2000L),
-              TimeMode.ProcessingTime(), OutputMode.Append())
-            .toDF("user_id", "emitted_n", "prior")
-            .writeStream.format("parquet")
-            .option("path", s"$outDir/data")
-            .option("checkpointLocation", s"$outDir/ckpt")
-            .outputMode(OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination() finally q.stop()
-        }
+        // noDataBatches = false is LOAD-BEARING here, not a perf
+        // trim: in TimeMode.ProcessingTime the operator's
+        // shouldRunAnotherBatch is always true (a later batch could
+        // expire more TTL state), so AvailableNow + no-data batches
+        // enabled loops FOREVER (observed: 1297 empty micro-batches
+        // before the build was killed). TTL reads stay correct without
+        // cleanup batches — expiry is checked against the batch
+        // timestamp at state read, not applied by sweeps.
+        val s = replaySession(s0, rocksDb = true, partitions = 4,
+          noDataBatches = false)
+        import s.implicits._
+        implicit val outEnc: Encoder[(Long, Long, Long)] =
+          Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+            Encoders.scalaLong)
+        def pass(): Unit = parquetSink(eventStream(s, srcDir)
+          .select(col("user_id")).as[Long] // the fold only counts
+          .groupByKey(identity)
+          .transformWithState(new TtlPhaseCount(2000L),
+            TimeMode.ProcessingTime(), OutputMode.Append())
+          .toDF("user_id", "emitted_n", "prior"), outDir)
         ev.filter(col("event_id") % 2 === 0).repartition(1)
           .write.mode("overwrite").parquet(srcDir)
         pass()
@@ -1161,10 +1086,7 @@ object StreamingQueries {
           .write.mode("append").parquet(srcDir)
         pass()
       }
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$outDir/data"))
-      s0.read.schema("user_id BIGINT, emitted_n BIGINT, prior BIGINT")
-        .parquet(s"$outDir/data")
+      sinkRows(s0, outDir, "user_id BIGINT, emitted_n BIGINT, prior BIGINT")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_emissions"),
           sum(col("emitted_n")).as("sum_emitted"),
@@ -1189,7 +1111,7 @@ object StreamingQueries {
     // vs the boundary-flag row unspecified and DuckDB can split the
     // ties across two sessions — Spark's session_window never does
     // (same convention as the ts_sessionize / ts_session_window
-    // oracles; found by the r11 full-sf1 oracle sweep)
+    // oracles; found by a full-sf1 oracle sweep)
     "stream_session" ->
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS tus, CAST(value AS DECIMAL(18,2)) AS v FROM events

@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** dedup_cc_clusters runs 6 unrolled min-label-propagation rounds over
-  * the near-dup pair graph; this proves the result is EXACTLY the true
-  * connected components (driver-side union-find over the same collected
-  * pairs — independent algorithm), which implies the 6 rounds reached
-  * the fixpoint: any further round of a converged labeling is a no-op.
+/** dedup_cc_clusters runs min-label propagation to a fixpoint over the
+  * near-dup pair graph (`GraphQueries.componentLabels`); this proves the
+  * result is EXACTLY the true connected components (driver-side
+  * union-find over the same collected pairs — independent algorithm).
   */
 class ClusterConvergenceSpec extends SparkSpecBase {
 

@@ -150,4 +150,37 @@ class GraphSpec extends SparkSpecBase {
       assert(a == b)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
+
+  test("graph_wcc equals union-find over the 1-NN edges and leaves no cache behind") {
+    // a fresh copy of the fixtures: the label build runs once per
+    // (JVM, input dir), so only a new dir makes this call build it
+    val src = java.nio.file.Paths.get(sfDir)
+    val copy = java.nio.file.Files.createTempDirectory("graft_wcc_fixture")
+    try {
+      val ls = java.nio.file.Files.list(src)
+      try ls.forEach(f => java.nio.file.Files.copy(f, copy.resolve(f.getFileName)))
+      finally ls.close()
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val got = GraphQueries.queries("graph_wcc")(spark, copy.toString)
+        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(sc.getPersistentRDDs.keySet == before,
+        "the wcc build left cached relations in the shared context")
+      // union-find over each node's strongest edge, root = min id
+      val nn1 = edges.groupBy(_._1).values
+        .map(_.minBy { case (_, v, c) => (-c, v) }).toSeq
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElse(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      nn1.foreach { case (u, v, _) =>
+        val (ru, rv) = (find(u), find(v))
+        if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+      }
+      val nodes = nn1.flatMap { case (u, v, _) => Seq(u, v) }.distinct.sorted
+      val sizes = nodes.groupBy(find).view.mapValues(_.size.toLong).toMap
+      assert(got == nodes.map(n => (n, find(n), sizes(find(n)))))
+    } finally TempDirs.deleteRecursively(copy)
+  }
 }

@@ -102,6 +102,22 @@ class StreamingParitySpec extends SparkSpecBase {
     assert(streamed.nonEmpty && streamed == batch)
   }
 
+  test("memory-sink replays stop their query and drop their sink view, twice over") {
+    for (name <- Seq("stream_stateful_count", "stream_stream_join",
+           "stream_tws_timers"); round <- 1 to 2) {
+      val out = run(name)
+      val s = out.sparkSession
+      assert(s.streams.active.isEmpty,
+        s"$name (run $round) left a streaming query active")
+      val views = s.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("graft_sink_"))
+      assert(views.isEmpty,
+        s"$name (run $round) left sink views: ${views.mkString(", ")}")
+      assert(out.collect().nonEmpty,
+        s"$name (run $round) returned no rows after its view was dropped")
+    }
+  }
+
   test("stream_watermark_late: emitted windows contain on-time rows only") {
     val sink = run("stream_watermark_late").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
