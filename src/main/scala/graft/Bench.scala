@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
   *
   * Each query runs TWICE back to back and the MIN is reported: run 1
   * absorbs every one-time cost — Janino whole-stage-codegen compilation,
-  * the `TempDirs.writeOnce` layout / artifact builds, parquet footer
+  * the `TempDirs.once` layout / artifact builds, parquet footer
   * caching — so run 2 measures the query, not the setup.
   *
   * A caller may capture only the last 2000 chars of stdout, so the stdout

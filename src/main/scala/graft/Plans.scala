@@ -12,6 +12,12 @@ import java.nio.file.{Files, Paths}
   * A query whose plan dump itself fails is recorded as `PLANFAIL: ...`
   * rather than aborting the run. A name that is not a query is a usage
   * error: it fails before the session is built and writes no file.
+  *
+  * The committed PLANS.md is in normalized form, so its diff shows plan
+  * changes, not expression-id churn. Refresh it in two steps:
+  *
+  *   runMain graft.Plans
+  *   python3 tools/plan_norm.py PLANS.md > PLANS.norm && mv PLANS.norm PLANS.md
   */
 object Plans {
   private def explain(spark: SparkSession, sfDir: String, name: String): String = {

@@ -42,6 +42,14 @@ object Tables {
     s.read.schema(schema).parquet(path)
   }
 
+  /** `df` written once per JVM as overwrite-parquet into
+    * `TempDirs.once(kind, d)`, read back through `parquet`. `df` is
+    * built only when the artifact is.
+    */
+  private[graft] def artifact(s: SparkSession, kind: String, d: String)(
+      df: => DataFrame): DataFrame =
+    parquet(s, TempDirs.once(kind, d)(df.write.mode("overwrite").parquet(_)))
+
   /** Registers `name` at `d` as the session temp view `<name>_v_<d>` and
     * returns the view name, for operators written as SQL text. The name
     * is scoped by input dir, so calls on different dirs never replace

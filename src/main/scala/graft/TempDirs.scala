@@ -5,25 +5,28 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
-/** Per-JVM scoped temp directories for queries that materialize an
-  * intermediate layout (bucketed tables, multi-file scans, partitioned
-  * sinks, stream source chunks).
+/** Directories for what queries write to disk, one primitive per
+  * lifetime. Every directory is keyed on (kind, input dir), so different
+  * scale factors never share one.
   *
-  * One directory per (kind, input-dir) key, reused across repeated
-  * Verify/Bench/test invocations in the same JVM — round 2 created a
-  * fresh `Files.createTempDirectory` on EVERY query invocation with no
-  * cleanup, accumulating /tmp garbage across harness runs. A shutdown
-  * hook removes everything this JVM created. Writers use
-  * `mode("overwrite")`, so reuse is idempotent.
+  *  - `scoped(kind, d)`: per-call scratch. The same directory comes back
+  *    on every call in this JVM; writers overwrite it on each call
+  *    (`mode("overwrite")`), and a shutdown hook removes it.
+  *  - `once(kind, d)(build)`: a per-JVM build into `scoped(kind, d)`.
+  *    The build runs at most once per key, always into an empty
+  *    directory, and later calls only get the path. Use it for layouts
+  *    and artifacts that later calls read (a checkpointed stream needs
+  *    its source files never rewritten, a snapshot table its versions).
+  *    `Tables.artifact` is the one-DataFrame case.
+  *  - `durableOnce(kind, d, fingerprint)(build)`: a cross-JVM build at a
+  *    fixed path, for artifacts the DuckDB oracle reads after this JVM
+  *    exits.
   */
 object TempDirs {
 
   private val dirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** package-visible (r12 review): three near-identical recursive
-    * deletes had grown — this is THE one implementation.
-    */
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
@@ -32,31 +35,43 @@ object TempDirs {
       finally s.close()
     }
 
-  /** Stable directory for `kind` scoped to input dir `d` (different
-    * scale factors must not share layouts).
-    */
-  def scoped(kind: String, d: String): String = {
-    val key = s"${kind}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+  private def keyOf(kind: String, d: String): String =
+    s"${kind}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+
+  private def dirFor(key: String): String =
     dirs.getOrElseUpdate(key, {
       val p = Files.createTempDirectory(s"graft_$key")
       sys.addShutdownHook(deleteRecursively(p))
       p.toString
     })
+
+  /** Stable per-JVM directory for `kind` scoped to input dir `d`. */
+  def scoped(kind: String, d: String): String = dirFor(keyOf(kind, d))
+
+  /** `scoped(kind, d)`, built by `build` once per JVM. The once-flag is
+    * keyed on the directory's own key. The build runs under
+    * `writeOnce`'s per-key lock and starts from an emptied directory,
+    * so a retry after a failed build never resumes against what the
+    * failed one left (a half-committed checkpoint, or snapshot commits
+    * that would shift every later version). A multi-directory build
+    * uses subdirectories of the one directory.
+    */
+  def once(kind: String, d: String)(build: String => Unit): String = {
+    val key = keyOf(kind, d)
+    val dir = dirFor(key)
+    writeOnce(key) { clearDir(dir); build(dir) }
+    dir
   }
 
   /** Deterministic DURABLE path for artifacts the DuckDB oracle reads
-    * AFTER this JVM exits (the driver runs Verify, then the oracle
-    * compare in a separate process): no random suffix, no shutdown
-    * deletion hook. Writers must use `mode("overwrite")` so a later
-    * JVM against regenerated fixtures replaces stale content, and the
-    * harness runs one process per fixture dir at a time (driver and
-    * local iteration are both sequential), so cross-JVM write races
-    * don't arise. Scoped per input dir like `scoped` — different
-    * scale factors never share artifacts.
+    * AFTER this JVM exits (Verify runs, then the oracle compare in a
+    * separate process): no random suffix, no shutdown deletion hook.
+    * Writers must use `mode("overwrite")` so a later JVM against
+    * regenerated fixtures replaces stale content; one process runs per
+    * fixture dir at a time, so cross-JVM write races don't arise.
     */
   def durable(kind: String, d: String): String = {
-    val key = s"${kind}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-    val p = java.nio.file.Paths.get("/tmp/graft_oracle", key)
+    val p = java.nio.file.Paths.get("/tmp/graft_oracle", keyOf(kind, d))
     Files.createDirectories(p)
     p.toString
   }
@@ -82,27 +97,13 @@ object TempDirs {
     }
   }
 
-  /** Cross-JVM write-once for a DURABLE artifact: build into
-    * `durable(kind, d)` only when the marker's recorded fingerprint
-    * differs from `fingerprint` (fixtures regenerated); otherwise the
-    * FIRST build is reused bit-identically by every later JVM. This is
-    * load-bearing for float-valued artifacts the oracle reads as input
-    * (the k-means centroids): their rebuild is deterministic per run
-    * but float-summation-order-sensitive, so a rebuild by any process
-    * between a Verify dump and its DuckDB compare would silently swap
-    * the oracle's input out from under the dumped result (r11 review).
-    * The marker is written AFTER a successful build (a parquet
-    * overwrite clears the dir, marker included, so a torn build can
-    * never present a valid marker); in-JVM mutual exclusion and
-    * build-failure retry come from `writeOnce`.
-    */
   /** Bumpable code-version per durable-artifact kind, folded into the
-    * marker fingerprint (r11 ADVICE): the content fingerprint covers
-    * only the FIXTURE, so a change to the code that derives the
-    * artifact (shingle width, hash choice, k-means rounds) would keep
-    * serving the stale /tmp artifact forever. Bump the kind's number
-    * whenever its build semantics change; unknown kinds get 0 so a
-    * new kind starts versioned without registration.
+    * marker fingerprint: the content fingerprint covers only the
+    * FIXTURE, so a change to the code that derives the artifact
+    * (shingle width, hash choice, k-means rounds) would keep serving
+    * the stale /tmp artifact forever. Bump the kind's number whenever
+    * its build semantics change; unknown kinds get 0 so a new kind
+    * starts versioned without registration.
     */
   private val artifactCodeVersion: Map[String, Int] = Map(
     "minhash_hsets" -> 1, // 5-word shingles -> xxhash64 digests
@@ -112,6 +113,20 @@ object TempDirs {
     "contain_grams" -> 1 // distinct 3-gram 60-bit md5-prefix digests
   )
 
+  /** Cross-JVM write-once for a DURABLE artifact: build into
+    * `durable(kind, d)` only when the marker's recorded fingerprint
+    * differs from `fingerprint` (fixtures regenerated); otherwise the
+    * FIRST build is reused bit-identically by every later JVM. This is
+    * load-bearing for float-valued artifacts the oracle reads as input
+    * (the k-means centroids): their rebuild is deterministic per run
+    * but float-summation-order-sensitive, so a rebuild by any process
+    * between a Verify dump and its DuckDB compare would silently swap
+    * the oracle's input out from under the dumped result. The marker
+    * is written AFTER a successful build (a parquet overwrite clears
+    * the dir, marker included, so a torn build can never present a
+    * valid marker); in-JVM mutual exclusion and build-failure retry
+    * come from `writeOnce`.
+    */
   def durableOnce(kind: String, d: String, fingerprint: String)(
       build: String => Unit): String = {
     val dir = durable(kind, d)
@@ -119,8 +134,7 @@ object TempDirs {
     val want =
       s"v${artifactCodeVersion.getOrElse(kind, 0)}:$fingerprint"
     writeOnce(s"durable_${kind}_$d") {
-      // CROSS-PROCESS exclusion (r12 — found by SnapshotMultiJvmSpec's
-      // stress, not hypothesized): writeOnce serializes threads of ONE
+      // cross-process exclusion: writeOnce serializes threads of ONE
       // JVM, so two processes both seeing a missing/stale marker would
       // build CONCURRENTLY — the second's mode("overwrite") deletes
       // the first's files mid-write, and a third process that already
@@ -149,10 +163,10 @@ object TempDirs {
       want: String, build: String => Unit): Unit = {
     val current =
       if (Files.exists(marker)) Files.readString(marker) else ""
-    // self-heal guard (r11 review): a matching marker only counts if
-    // the artifact's parquet files actually exist — a tmp cleaner
-    // (or manual rm) that removes the data but spares the marker
-    // must trigger a rebuild, not serve an empty glob forever
+    // a matching marker only counts if the artifact's parquet files
+    // actually exist — a tmp cleaner (or manual rm) that removes the
+    // data but spares the marker must trigger a rebuild, not serve an
+    // empty glob forever
     val hasData = {
       val s = Files.list(java.nio.file.Paths.get(dir))
       try s.iterator().asScala.exists(_.toString.endsWith(".parquet"))
@@ -164,12 +178,8 @@ object TempDirs {
     }
   }
 
-  /** Delete a directory's CONTENTS (keep the dir): build steps whose
-    * failure can leave half-committed state (streaming checkpoints)
-    * call this before a retry so `writeOnce`'s retry-on-failure never
-    * resumes against a poisoned artifact.
-    */
-  def clearDir(dir: String): Unit = {
+  /** Delete a directory's CONTENTS (keep the dir). */
+  private def clearDir(dir: String): Unit = {
     val p = java.nio.file.Paths.get(dir)
     if (Files.exists(p)) {
       val s = Files.list(p)
@@ -194,16 +204,15 @@ object TempDirs {
     * threads: acquiring `inner` while holding `outer` records the
     * edge. A later attempt to acquire in the INVERTED order is the
     * two-lock-cycle deadlock signature and dies loudly instead of
-    * hanging (r5 VERDICT item 7 — the acyclic-nesting rule was
-    * documented but unenforced).
+    * hanging.
     */
   private val nestingEdges =
     scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
 
-  /** Run `w` at most once per (JVM, key) — for source layouts that a
-    * checkpointed or layout-asserting consumer depends on, where a
-    * rewrite would present fresh part-file names and change observed
-    * behavior.
+  /** Run `w` at most once per (JVM, key). Callers go through `once`;
+    * the two direct callers need a flag that is not the directory's
+    * (a per-session catalog build) or a build that must not wipe its
+    * directory (an embedded database still open in this JVM).
     *
     * Mutual exclusion is per key: TrieMap.getOrElseUpdate alone is
     * atomic only in which RESULT is kept, not in running the thunk
@@ -211,20 +220,20 @@ object TempDirs {
     * against the same artifact dir (racing parquet overwrites or
     * streaming checkpoints). A per-key monitor makes the second
     * caller wait for the first build instead; a failed build stores
-    * nothing, so the next caller retries (same retry contract as
-    * before). Per-key locks avoid cross-key blocking, but nested
-    * writeOnce calls acquire monitors in nesting order — so nesting
-    * must stay ACYCLIC across the codebase (today it is
-    * one-directional: builds read sub-artifacts, never the reverse).
-    * The guard enforces it at runtime: before blocking on a key, the
-    * call records its (held, wanted) nesting edges and dies with a
-    * descriptive error if the wanted key was ever observed BELOW any
-    * currently-held key on another path — the two-lock cycle that
-    * would otherwise deadlock silently. Re-acquiring a key already
-    * held by this thread (self-nesting) is equally fatal: the monitor
-    * is reentrant, so the build block would re-enter itself.
+    * nothing, so the next caller retries. Per-key locks avoid
+    * cross-key blocking, but nested writeOnce calls acquire monitors
+    * in nesting order — so nesting must stay ACYCLIC across the
+    * codebase (today it is one-directional: builds read
+    * sub-artifacts, never the reverse). The guard enforces it at
+    * runtime: before blocking on a key, the call records its (held,
+    * wanted) nesting edges and dies with a descriptive error if the
+    * wanted key was ever observed BELOW any currently-held key on
+    * another path — the two-lock cycle that would otherwise deadlock
+    * silently. Re-acquiring a key already held by this thread
+    * (self-nesting) is equally fatal: the monitor is reentrant, so
+    * the build block would re-enter itself.
     */
-  def writeOnce(key: String)(w: => Unit): Unit = {
+  private[graft] def writeOnce(key: String)(w: => Unit): Unit = {
     val held = heldKeys.get()
     if (held.contains(key))
       throw new IllegalStateException(
@@ -234,9 +243,9 @@ object TempDirs {
     // check + record atomically: a bare check-then-put would let two
     // threads taking INVERTED orders for the first time both pass the
     // check before either records its edge, then deadlock silently —
-    // the exact hang this guard exists to turn into a loud error
-    // (r7 review). One monitor linearizes them: the second thread
-    // sees the first's edge and throws.
+    // the exact hang this guard exists to turn into a loud error. One
+    // monitor linearizes them: the second thread sees the first's
+    // edge and throws.
     nestingEdges.synchronized {
       held.foreach { outer =>
         if (nestingEdges.contains((key, outer)))

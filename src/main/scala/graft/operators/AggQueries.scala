@@ -83,8 +83,7 @@ object AggQueries {
   private def hllRegsDir(s: org.apache.spark.sql.SparkSession,
                          d: String): String = {
     import graft.functions.HllRegistersAgg
-    val dir = graft.TempDirs.scoped("hll_regs", d)
-    graft.TempDirs.writeOnce("hll_regs" + d) {
+    graft.TempDirs.once("hll_regs", d) { dir =>
       // sketch and exact in SEPARATE aggregates, joined on the 3-row
       // result: one agg mixing countDistinct with the imperative
       // sketch plans as the two-phase distinct rewrite whose FIRST
@@ -101,7 +100,6 @@ object AggQueries {
         .select(col("l_returnflag"), col("regs"), col("exact"))
         .coalesce(1).write.mode("overwrite").parquet(dir)
     }
-    dir
   }
 
   private def hllRegs(s: org.apache.spark.sql.SparkSession,

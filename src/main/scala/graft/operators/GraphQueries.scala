@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *   the dedup blocking buckets, SURVEY §2.K), so per-part pair count
   *   is bounded by a constant at any corpus size.
   * - The edge table is a build-once corpus artifact
-  *   (`TempDirs.writeOnce`, same offline-build/online-read split as
+  *   (`Tables.artifact`, same offline-build/online-read split as
   *   the cc-labels and IVF artifacts): three queries consume it, and
   *   a triangle join that referenced the raw subtree would otherwise
   *   re-run the pair stage once per self-join alias.
@@ -74,9 +74,8 @@ object GraphQueries {
     * parquet artifact. Columns: u, v, shared_parts (u → its K
     * strongest neighbors).
     */
-  private def edgesTopK(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.TempDirs.scoped("graph_edges", d)
-    graft.TempDirs.writeOnce("graph_edges" + d) {
+  private def edgesTopK(s: SparkSession, d: String): DataFrame =
+    artifact(s, "graph_edges", d) {
       val ps = lineitem(s, d)
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sup"))
         .distinct()
@@ -100,10 +99,7 @@ object GraphQueries {
       sym.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= K)
         .drop("rn")
-        .write.mode("overwrite").parquet(dir)
     }
-    parquet(s, dir)
-  }
 
   /** Symmetrized distinct edge set (x, y) — BOTH directions of every
     * top-k edge. Shared by BFS and link prediction so the two queries
@@ -153,7 +149,7 @@ object GraphQueries {
     * construction broke, and failing loudly beats silently wrong
     * components. Every cache (`pairs`, each round's labels) is
     * released on every exit path, so nothing stays in the shared
-    * CacheManager after the build, even across `writeOnce` retries.
+    * CacheManager after the build, even across build retries.
     */
   private[operators] def componentLabels(pairs: DataFrame, what: String)(
       write: DataFrame => Unit): Unit = {
@@ -201,9 +197,8 @@ object GraphQueries {
     * of the undirected best-match graph, materialized as a build-once
     * parquet artifact.
     */
-  private def wccLabels(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.TempDirs.scoped("graph_wcc", d)
-    graft.TempDirs.writeOnce("graph_wcc" + d) {
+  private def wccLabels(s: SparkSession, d: String): DataFrame =
+    parquet(s, graft.TempDirs.once("graph_wcc", d) { dir =>
       val cc = s.newSession()
       cc.conf.set("spark.sql.shuffle.partitions", "8")
       // best-match (1-NN) subgraph of the top-K artifact: each node
@@ -219,9 +214,7 @@ object GraphQueries {
         .select(col("u"), col("v"))
       componentLabels(nn1, "graph_wcc")(
         _.write.mode("overwrite").parquet(dir))
-    }
-    parquet(s, dir)
-  }
+    })
 
   /** Peel rounds / threshold of the k-core build (see `graph_kcore`). */
   private val KcoreRounds = 8
@@ -231,9 +224,8 @@ object GraphQueries {
     * `KcoreRounds` peels of the undirected top-K graph. Build-once
     * parquet artifact; per-round persist keeps lineage linear.
     */
-  private def kcoreNodes(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.TempDirs.scoped("graph_kcore", d)
-    graft.TempDirs.writeOnce("graph_kcore" + d) {
+  private def kcoreNodes(s: SparkSession, d: String): DataFrame =
+    artifact(s, "graph_kcore", d) {
       // localCheckpoint per round, NOT persist: each round references
       // und twice (degree count + edge filter), so without lineage
       // truncation the LOGICAL plan doubles per round — 2^rounds
@@ -268,10 +260,7 @@ object GraphQueries {
         round += 1
       }
       und.groupBy(col("x")).agg(count(lit(1)).as("core_degree"))
-        .write.mode("overwrite").parquet(dir)
     }
-    parquet(s, dir)
-  }
 
   val queries: Map[String, Q] = Map(
     // Weakly connected components (r9): min-label propagation to

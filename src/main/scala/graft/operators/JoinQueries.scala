@@ -487,21 +487,25 @@ object JoinQueries {
     // side — the 100 TB pattern for repeated fact-fact joins, where
     // one bucketed write amortizes over every later join on that key.
     // (Bucket-locality is asserted in PlanShapeSpec.) The bucketed
-    // build is an ARTIFACT — writeOnce per (session, sf), keyed by
-    // session identity because saveAsTable registration lives in the
-    // session's catalog: a fresh session (fresh catalog) rebuilds,
-    // while repeated invocations in one session measure what the
-    // pattern amortizes to — the zero-exchange read-side join.
+    // build is an ARTIFACT built once per (session, sf), not through
+    // `TempDirs.once`: saveAsTable registration lives in the session's
+    // catalog, so a fresh session (fresh catalog) rebuilds, while
+    // repeated invocations in one session measure what the pattern
+    // amortizes to — the zero-exchange read-side join.
     "join_bucketed" -> ((s, d) => {
       val wh = graft.TempDirs.scoped("bucketed", d)
       // catalog table names derived from the scoped dir PATH (not its
       // 32-bit hashCode, which can collide across paths and is
-      // negative for Int.MinValue — r7 review): unique per (JVM, sf),
-      // so concurrent sessions sharing a catalog never race on a
-      // fixed name
+      // negative for Int.MinValue): unique per (JVM, sf), so
+      // concurrent sessions sharing a catalog never race on a fixed
+      // name
       val tag = wh.replaceAll("[^A-Za-z0-9]", "_")
-      graft.TempDirs.writeOnce(
-          s"bucketed_${d}_${System.identityHashCode(s)}") {
+      // the session's flag key is a memoized UUID, not the 32-bit
+      // identityHashCode: two sessions sharing a hash would share the
+      // flag, and the second would skip its catalog registration
+      val sid = graft.SessionMemo(s, "join_bucketed_session_id")(
+        java.util.UUID.randomUUID().toString)
+      graft.TempDirs.writeOnce(s"bucketed_${d}_$sid") {
         // project to the needed columns before the bucketed write —
         // the write cost is the amortized index-build, keep it lean
         orders(s, d).select(col("o_orderkey"), col("o_orderstatus"))
@@ -533,8 +537,7 @@ object JoinQueries {
     // asserted in PlanShapeSpec (dynamicpruning expression + scan
     // metrics).
     "join_dpp" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("dppfact", d)
-      graft.TempDirs.writeOnce("dppfact" + d) {
+      val dir = graft.TempDirs.once("dppfact", d) { dir =>
         lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_returnflag"))

@@ -166,9 +166,8 @@ object LlmQueries {
     * knob a cluster job would set between the corpus-sized discovery
     * stage and the edge-sized iterative stage.
     */
-  private def ccLabels(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.TempDirs.scoped("cc_labels", d)
-    graft.TempDirs.writeOnce("cc_labels" + d) {
+  private def ccLabels(s: SparkSession, d: String): DataFrame =
+    parquet(s, graft.TempDirs.once("cc_labels", d) { dir =>
       val cc = s.newSession()
       cc.conf.set("spark.sql.shuffle.partitions", "8")
       val pairs = SimilarityQueries.ngramCandidatePairs(cc, d)
@@ -176,9 +175,7 @@ object LlmQueries {
       GraphQueries.componentLabels(pairs, "dedup_cc_clusters")(
         _.select(col("v").as("doc_id"), col("label").as("cluster_id"))
           .write.mode("overwrite").parquet(dir))
-    }
-    parquet(s, dir)
-  }
+    })
 
   /** (doc_id, gram) over distinct word n-grams per doc, materialized
     * once per (JVM, input dir) as a parquet artifact. Gram tables are
@@ -194,19 +191,15 @@ object LlmQueries {
     * rebuilt when the corpus changes, not per query).
     */
   private def gramTable(s: SparkSession, d: String, key: String,
-                        n: Int): DataFrame = {
-    val dir = graft.TempDirs.scoped(key, d)
-    graft.TempDirs.writeOnce(key + d) {
+                        n: Int): DataFrame =
+    artifact(s, key, d) {
       documents(s, d)
         .withColumn("toks", split(col("text"), " "))
         .select(col("doc_id"), explode(array_distinct(expr(
           s"transform(sequence(1, greatest(size(toks) - ${n - 1}, 1)), " +
             s"i -> concat_ws(' ', ${(0 until n).map(j => s"toks[i + ${j - 1}]").mkString(", ")}))")))
           .as("gram"))
-        .write.mode("overwrite").parquet(dir)
     }
-    parquet(s, dir)
-  }
 
   private def bigramTable(s: SparkSession, d: String): DataFrame =
     gramTable(s, d, "grams2", 2)

@@ -26,7 +26,7 @@ object MaintenanceQueries {
   private val farFuture = lit("9999-12-31").cast(DateType)
 
   /** The customer-row canonical string + 48-bit checksum triple shared
-    * by `table_checksum` and `table_compact` (r10 review: one
+    * by `table_checksum` and `table_compact` (one
     * definition, not three — a serialization change must not be able
     * to reach one operator and miss the other). `custChecksumSqlCte`
     * is the DuckDB mirror both oracles embed.
@@ -94,8 +94,7 @@ object MaintenanceQueries {
     // amortized over every later selective scan, exactly like the
     // bucketed-join write.
     "cluster_by_key" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("clustered", d)
-      graft.TempDirs.writeOnce("clustered" + d) {
+      val dir = graft.TempDirs.once("clustered", d) { dir =>
         lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
           .repartitionByRange(8, col("l_partkey"))
@@ -110,7 +109,7 @@ object MaintenanceQueries {
 
     // Small-files compaction: the layout-maintenance task every
     // long-lived 100 TB table needs, committed through the snapshot
-    // table's manifest log (r8 — see graft.sources.SnapshotTable). A
+    // table's manifest log (see graft.sources.SnapshotTable). A
     // degraded layout (64 tiny part files — what thousands of
     // executors or frequent micro-batch appends produce) lands as v1;
     // the compaction rewrite into 4 right-sized files commits as v2,
@@ -126,8 +125,7 @@ object MaintenanceQueries {
     // rewrite shape, same one-manifest commit.
     "compact_small_files" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val root = graft.TempDirs.scoped("snapcompact", d)
-      graft.TempDirs.writeOnce("snapcompact" + d) {
+      val root = graft.TempDirs.once("snapcompact", d) { root =>
         SnapshotTable.commit(root,
           events(s, d)
             .select(col("event_id"), col("ts_us"), col("user_id"),
@@ -146,8 +144,8 @@ object MaintenanceQueries {
         .orderBy(col("event_type"))
     }),
 
-    // Time travel (`VERSION AS OF n`) over the snapshot-commit log
-    // (r8): a three-version table built from a deterministic change
+    // Time travel (`VERSION AS OF n`) over the snapshot-commit log:
+    // a three-version table built from a deterministic change
     // log — v1 = initial load (doc_id % 3 = 0), v2 = MERGE upsert of
     // the % 5 batch (matched rows take the bumped n_chars, unmatched
     // insert), v3 = delete of the % 9 slice — then read AS OF
@@ -159,8 +157,7 @@ object MaintenanceQueries {
     // names — history depth costs nothing at read time.
     "table_time_travel" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val root = graft.TempDirs.scoped("snaptt", d)
-      graft.TempDirs.writeOnce("snaptt" + d) {
+      val root = graft.TempDirs.once("snaptt", d) { root =>
         val docs = documents(s, d)
           .select(col("doc_id"), col("source"), col("n_chars"))
         SnapshotTable.commit(root, docs.filter(col("doc_id") % 3 === 0))
@@ -178,7 +175,7 @@ object MaintenanceQueries {
         .orderBy(col("doc_id"))
     }),
 
-    // RESTORE / rollback through the snapshot log (r8): a bad deploy
+    // RESTORE / rollback through the snapshot log: a bad deploy
     // (v3 deletes too much) is rolled back by committing v2's file
     // set as v4 — history is PRESERVED (v3 stays time-travel-readable
     // for the incident review, unlike an overwrite) and no data
@@ -187,8 +184,7 @@ object MaintenanceQueries {
     // to v4 = v2's state while the log shows all four versions.
     "table_restore" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val root = graft.TempDirs.scoped("snaprst", d)
-      graft.TempDirs.writeOnce("snaprst" + d) {
+      val root = graft.TempDirs.once("snaprst", d) { root =>
         val docs = documents(s, d).select(col("doc_id"), col("n_chars"))
         SnapshotTable.commit(root, docs.filter(col("doc_id") % 3 === 0))
         SnapshotTable.commit(root, docs.filter(col("doc_id") % 6 === 0))
@@ -205,7 +201,7 @@ object MaintenanceQueries {
           lit(SnapshotTable.versions(root).length.toLong))
     }),
 
-    // SHALLOW CLONE through the snapshot log (r9): a dev/test copy of
+    // SHALLOW CLONE through the snapshot log: a dev/test copy of
     // a production table as ONE metadata commit — the clone's v1
     // manifest references the source's data files verbatim (zero data
     // copy at any table size), then diverges independently via its
@@ -219,15 +215,15 @@ object MaintenanceQueries {
     // SnapshotCommitSpec pins it).
     "table_clone" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val src = graft.TempDirs.scoped("snapclsrc", d)
-      val dst = graft.TempDirs.scoped("snapcldst", d)
-      graft.TempDirs.writeOnce("snapcl" + d) {
+      val root = graft.TempDirs.once("snapcl", d) { root =>
+        val (src, dst) = (s"$root/src", s"$root/dst")
         val docs = documents(s, d).select(col("doc_id"), col("n_chars"))
         SnapshotTable.commit(src, docs.filter(col("doc_id") % 2 === 0))
         SnapshotTable.cloneTo(src, 1L, dst)
         SnapshotTable.append(dst, docs.filter(col("doc_id") % 7 === 3))
         ()
       }
+      val (src, dst) = (s"$root/src", s"$root/dst")
       val srcFiles = SnapshotTable.manifestFiles(src, 1L).toSet
       val cloneFiles = SnapshotTable
         .manifestFiles(dst, SnapshotTable.latestVersion(dst).get).toSet
@@ -241,7 +237,7 @@ object MaintenanceQueries {
         .withColumn("shared_files_ok", lit(sharedOk))
     }),
 
-    // BRANCH-AND-MERGE through the snapshot log (r9): the dev-branch
+    // BRANCH-AND-MERGE through the snapshot log: the dev-branch
     // workflow one rung above table_clone — cut a branch (shallow
     // clone of v1), let BOTH sides advance (branch appends %7, the
     // mainline concurrently appends %5), then fold the branch's
@@ -256,9 +252,8 @@ object MaintenanceQueries {
     // no-op (spec-pinned).
     "table_branch_merge" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val src = graft.TempDirs.scoped("snapbrsrc", d)
-      val br = graft.TempDirs.scoped("snapbrdev", d)
-      graft.TempDirs.writeOnce("snapbr" + d) {
+      val root = graft.TempDirs.once("snapbr", d) { root =>
+        val (src, br) = (s"$root/src", s"$root/dev")
         val docs = documents(s, d).select(col("doc_id"), col("n_chars"))
         SnapshotTable.commit(src, docs.filter(col("doc_id") % 2 === 0))
         SnapshotTable.cloneTo(src, 1L, br)
@@ -267,6 +262,7 @@ object MaintenanceQueries {
         SnapshotTable.mergeFrom(src, br, 1L)
         ()
       }
+      val (src, br) = (s"$root/src", s"$root/dev")
       val srcV = SnapshotTable.latestVersion(src).get
       val brV = SnapshotTable.latestVersion(br).get
       val brFiles = SnapshotTable.manifestFiles(br, brV).toSet
@@ -280,7 +276,7 @@ object MaintenanceQueries {
         .withColumn("branch_files_shared_ok", lit(sharedOk))
     }),
 
-    // Retention / VACUUM over the snapshot-commit log (r8, closing
+    // Retention / VACUUM over the snapshot-commit log (closing
     // the boundary's last maintenance exclusion): a three-version
     // table (deterministic %3/%6/%12 slices at pinned file counts
     // 8/4/2) vacuumed to the newest two versions — v1's manifest and
@@ -295,8 +291,7 @@ object MaintenanceQueries {
     // metadata, no data read.
     "table_vacuum" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val root = graft.TempDirs.scoped("snapvac", d)
-      graft.TempDirs.writeOnce("snapvac" + d) {
+      val root = graft.TempDirs.once("snapvac", d) { root =>
         val docs = documents(s, d).select(col("doc_id"), col("n_chars"))
         SnapshotTable.commit(root,
           docs.filter(col("doc_id") % 3 === 0).repartition(8))
@@ -318,8 +313,8 @@ object MaintenanceQueries {
         .withColumn("n_live_files", lit(live.toLong))
     }),
 
-    // Additive schema evolution through the snapshot log (r8,
-    // narrowing the boundary's "ACID schema evolution" exclusion): v1
+    // Additive schema evolution through the snapshot log
+    // (narrowing the boundary's "ACID schema evolution" exclusion): v1
     // commits the narrow (doc_id, n_chars) slice, v2 APPENDS a slice
     // carrying a NEW quality column — the schema change rides the
     // same manifest commit as any data change, so readers flip
@@ -331,8 +326,7 @@ object MaintenanceQueries {
     // data; the evolution costs one append commit.
     "table_schema_merge" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val root = graft.TempDirs.scoped("snapse", d)
-      graft.TempDirs.writeOnce("snapse" + d) {
+      val root = graft.TempDirs.once("snapse", d) { root =>
         val docs = documents(s, d).select(col("doc_id"), col("n_chars"))
         SnapshotTable.commit(root, docs.filter(col("doc_id") % 4 === 1))
         SnapshotTable.append(root,
@@ -358,8 +352,8 @@ object MaintenanceQueries {
     // every engine.
     "table_checksum" -> ((s, d) => custChecksum(customer(s, d))),
 
-    // Small-file compaction through the PUBLIC library API (r10).
-    // Sibling of `compact_small_files` (r3/r8), deliberately not a
+    // Small-file compaction through the PUBLIC library API.
+    // Sibling of `compact_small_files`, deliberately not a
     // replacement — the two cover complementary halves of the
     // contract: compact_small_files hand-rolls a repartition rewrite
     // and its oracle pins the FILE COUNTS (64->4); this operator
@@ -373,12 +367,7 @@ object MaintenanceQueries {
     // partition packing makes exact counts conf-dependent.
     "table_compact" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val root = graft.TempDirs.scoped("snapcomp", d)
-      graft.TempDirs.writeOnce("snapcomp" + d) {
-        // a retried build after a partial failure must start from an
-        // empty root, or the re-run commits land at shifted versions
-        // (the clearDir retry contract)
-        graft.TempDirs.clearDir(root)
+      val root = graft.TempDirs.once("snapcomp", d) { root =>
         SnapshotTable.commit(root,
           customer(s, d).select(col("c_custkey"), col("c_name"),
             col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
@@ -394,7 +383,7 @@ object MaintenanceQueries {
         .orderBy(col("phase"))
     }),
 
-    // Incremental (CDC-style) read between two versions (r10): a
+    // Incremental (CDC-style) read between two versions: a
     // downstream consumer that processed up to v2 catches up by
     // scanning ONLY the files v3 added — manifest(to) minus
     // manifest(from), pure metadata arithmetic, zero data read outside
@@ -404,12 +393,7 @@ object MaintenanceQueries {
     // consumers ride a continuously-appended table without rescans.
     "table_incremental_read" -> ((s, d) => {
       import graft.sources.SnapshotTable
-      val root = graft.TempDirs.scoped("snapinc", d)
-      graft.TempDirs.writeOnce("snapinc" + d) {
-        // retry-safety: a half-built root (crash between commits)
-        // would otherwise shift every re-run commit's version and
-        // silently change which slice v3's delta is (r10 review)
-        graft.TempDirs.clearDir(root)
+      val root = graft.TempDirs.once("snapinc", d) { root =>
         val docs = documents(s, d).select(col("doc_id"), col("n_chars"))
         SnapshotTable.commit(root, docs.filter(col("doc_id") % 4 === 0))
         SnapshotTable.append(root, docs.filter(col("doc_id") % 4 === 1))
@@ -473,8 +457,7 @@ object MaintenanceQueries {
         .cast(LongType) / 7L).cast(LongType)
       val pkey = expr(
         "cast(cast(o_totalprice as decimal(18,2)) div 2000 as bigint)")
-      val dir = graft.TempDirs.scoped("zordered", d)
-      graft.TempDirs.writeOnce("zordered" + d) {
+      val dir = graft.TempDirs.once("zordered", d) { dir =>
         orders(s, d)
           // store the date as DATE: Spark writes TimestampType as
           // parquet INT96, which carries no usable min/max stats and

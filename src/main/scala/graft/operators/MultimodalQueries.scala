@@ -52,9 +52,8 @@ object MultimodalQueries {
     * payload) hashes to all-zero bands by definition — no row reads.
     */
   private def phashTable(s: org.apache.spark.sql.SparkSession,
-                         d: String): org.apache.spark.sql.DataFrame = {
-    val dir = graft.TempDirs.scoped("phash", d)
-    graft.TempDirs.writeOnce("phash" + d) {
+                         d: String): org.apache.spark.sql.DataFrame =
+    artifact(s, "phash", d) {
       val ss = s
       import ss.implicits._
       documents(s, d)
@@ -94,11 +93,7 @@ object MultimodalQueries {
           }
         }
         .toDF("doc_id", "b0", "b1", "b2", "b3")
-        .write.mode("overwrite").parquet(dir)
     }
-    s.read.schema("doc_id BIGINT, b0 BIGINT, b1 BIGINT, b2 BIGINT, b3 BIGINT")
-      .parquet(dir)
-  }
 
   /** Byte sum of one logical pixel row read through the decoder —
     * includes the stride padding (zeros), so the sum equals 3× the

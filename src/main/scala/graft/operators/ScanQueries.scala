@@ -39,7 +39,7 @@ object ScanQueries {
         .orderBy(col("event_id"))),
 
     // CSV round-trip: write with header + explicit schema read-back.
-    // Oracle-paired (r3): the round-tripped aggregate must equal DuckDB
+    // Oracle-paired: the round-tripped aggregate must equal DuckDB
     // reading the ORIGINAL parquet — lossless write+read, not rows>0.
     "scan_csv_roundtrip" -> ((s, d) => {
       val dir = graft.TempDirs.scoped("csv", d)
@@ -50,7 +50,7 @@ object ScanQueries {
         .orderBy(col("n_regionkey"))
     }),
 
-    // NESTED JSON ingestion (r8): the API-payload shape — a struct
+    // NESTED JSON ingestion: the API-payload shape — a struct
     // inside a struct plus an array — written as JSON lines and read
     // back under an explicit nested schema (inference is the
     // convenience path; production pins the schema), then flattened
@@ -58,8 +58,7 @@ object ScanQueries {
     // nested JSON round-trip is lossless down to array elements; the
     // oracle recomputes the flattened values from the base table.
     "scan_json_nested" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("jsonnested", d)
-      graft.TempDirs.writeOnce("jsonnested" + d) {
+      val dir = graft.TempDirs.once("jsonnested", d) { dir =>
         nation(s, d)
           .select(to_json(struct(
             col("n_nationkey").as("id"),
@@ -81,7 +80,7 @@ object ScanQueries {
         .orderBy(col("id"))
     }),
 
-    // WHOLE-FILE text ingestion (r8): `wholetext` reads one row per
+    // WHOLE-FILE text ingestion: `wholetext` reads one row per
     // FILE instead of one per line — the mode document corpora use
     // when files are the unit (a book, a transcript) and line
     // splitting would destroy them. Three deterministic single-file
@@ -94,8 +93,7 @@ object ScanQueries {
     // bounded files, the wrong tool for one huge file (documented
     // trade of the mode itself).
     "scan_text_wholetext" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("wholetext", d)
-      graft.TempDirs.writeOnce("wholetext" + d) {
+      val dir = graft.TempDirs.once("wholetext", d) { dir =>
         val ss = s
         import ss.implicits._
         Seq(0L, 1L, 2L).foreach { b =>
@@ -116,7 +114,7 @@ object ScanQueries {
         .orderBy(col("n_lines"), col("n_chars"))
     }),
 
-    // Recursive lake-directory ingestion with glob filtering (r8):
+    // Recursive lake-directory ingestion with glob filtering:
     // the messy-directory reality — data files nested at arbitrary
     // depths with NON-data droppings (logs, manifests, temp files)
     // interleaved. recursiveFileLookup walks every level (no
@@ -127,8 +125,7 @@ object ScanQueries {
     // input_file_name count = exactly the 3 planted parquet files,
     // decoys excluded). One listing + one narrow scan at any depth.
     "scan_path_filtered" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("lakedirs", d)
-      graft.TempDirs.writeOnce("lakedirs" + d) {
+      val dir = graft.TempDirs.once("lakedirs", d) { dir =>
         val ev = events(s, d).select(col("event_id"), col("user_id"),
           col("event_type"), col("value"))
         Seq(0L, 1L, 2L).foreach { b =>
@@ -156,7 +153,7 @@ object ScanQueries {
           moneySumD(col("value")).as("sum_value"))
     }),
 
-    // Parquet BLOOM-FILTER row-group pruning (r8): the needle-lookup
+    // Parquet BLOOM-FILTER row-group pruning: the needle-lookup
     // pruning path that min/max statistics cannot give. The layout is
     // written with the natural key clustering DESTROYED (rows ordered
     // by key hash) across 8 row groups, so every group's min/max
@@ -171,12 +168,11 @@ object ScanQueries {
     // time and turn full scans into single-group reads without
     // maintaining any sort order.
     "scan_parquet_bloom" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("pqbloom", d)
-      graft.TempDirs.writeOnce("pqbloom" + d) {
+      val dir = graft.TempDirs.once("pqbloom", d) { dir =>
         // SCALE-INVARIANT row-group count (~64 groups at any fixture
         // size): a fixed tiny block size made the sf1 build write
-        // thousands of groups — footer bloat on both sides (r8,
-        // measured 16.5 s cold). ~20 bytes/row of column data; the
+        // thousands of groups — footer bloat on both sides
+        // (measured 16.5 s cold). ~20 bytes/row of column data; the
         // metadata count is one cheap action inside the build.
         val nRows = lineitem(s, d).count()
         val block = math.max(16L * 1024L, nRows * 20L / 64L)
@@ -204,7 +200,7 @@ object ScanQueries {
           moneySumD(col("l_quantity")).as("sum_qty"))
     }),
 
-    // PERMISSIVE CSV ingest with corrupt-record accounting (r8): the
+    // PERMISSIVE CSV ingest with corrupt-record accounting: the
     // dirty-feed reality of crawl-scale ingestion — a deterministic
     // feed where every doc_id % 10 == 0 line is malformed (pipe
     // delimiter + non-numeric field), read under PERMISSIVE mode with
@@ -217,8 +213,7 @@ object ScanQueries {
     // one narrow text scan, per-line parse, no shuffle but the final
     // 1-row aggregate.
     "scan_csv_permissive" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("csvdirty", d)
-      graft.TempDirs.writeOnce("csvdirty" + d) {
+      val dir = graft.TempDirs.once("csvdirty", d) { dir =>
         val ss = s
         import ss.implicits._
         documents(s, d).select(col("doc_id"), col("n_chars"))
@@ -242,7 +237,7 @@ object ScanQueries {
           // parsed column set: CSV column pruning otherwise skips the
           // unreferenced first field, its failing cast never runs,
           // and the malformed lines sail through unflagged (found
-          // live in r8 — the subtle way PERMISSIVE accounting can
+          // in a live run — the subtle way PERMISSIVE accounting can
           // silently undercount quarantine)
           expr("bit_xor(CASE WHEN _corrupt IS NULL THEN doc_id END)")
             .as("id_xor"))
@@ -272,7 +267,7 @@ object ScanQueries {
         .orderBy(col("n_regionkey"))
     }),
 
-    // XML round-trip (r9): the remaining first-class Spark 4 file
+    // XML round-trip: the remaining first-class Spark 4 file
     // format (native XML source since 4.0 — XmlFileFormat is
     // service-registered, unlike avro). Row-level oracle against the
     // original parquet, same contract as the avro/jdbc round-trips.
@@ -287,7 +282,7 @@ object ScanQueries {
         .orderBy(col("n_nationkey"))
     }),
 
-    // Avro round-trip (r9): the row-oriented interchange format
+    // Avro round-trip: the row-oriented interchange format
     // (Kafka/streaming-ingest lingua franca). Spark 4 ships the full
     // AvroFileFormat inside spark-sql, but lookupDataSource
     // special-cases the short name "avro" with a deploy-the-module
@@ -306,12 +301,12 @@ object ScanQueries {
         .orderBy(col("n_nationkey"))
     }),
 
-    // JDBC round-trip (r9): the operational-database source/sink every
+    // JDBC round-trip: the operational-database source/sink every
     // batch ETL pipeline eventually lands in, exercised against the
     // EMBEDDED Derby engine that ships on the Spark classpath (no
     // external server in the sandbox — the operator is the jdbc
     // datasource write+read path itself: type mapping, overwrite DDL,
-    // partition-batched inserts). Staging writeOnce per (JVM, sf);
+    // partition-batched inserts). Staging once per (JVM, sf);
     // ROW-LEVEL oracle against the original parquet proves the
     // Spark→SQL-types→Spark round-trip lossless. At 100 TB a JDBC
     // table is a DIMENSION side: read once, broadcast — never the
@@ -324,6 +319,10 @@ object ScanQueries {
       System.setProperty("derby.stream.error.file", s"$dbDir/derby.log")
       val url = s"jdbc:derby:$dbDir/graftdb;create=true"
       val driver = "org.apache.derby.jdbc.EmbeddedDriver"
+      // writeOnce, not `TempDirs.once`: after a failed build the Derby
+      // database is still booted in this JVM, and a retry that wiped
+      // the dir would delete files under an open database. The
+      // overwrite-mode write replaces the table instead.
       graft.TempDirs.writeOnce("derbydb" + d) {
         nation(s, d).write.mode("overwrite").format("jdbc")
           .option("url", url).option("dbtable", "nation_rt")
@@ -338,7 +337,7 @@ object ScanQueries {
         .orderBy(col("n_nationkey"))
     }),
 
-    // Raw text-lines round-trip (r5): the remaining first-class Spark
+    // Raw text-lines round-trip: the remaining first-class Spark
     // source format (spark.read.text) — the shape of every
     // plain-text/WET crawl shard a training pipeline ingests. Document
     // texts are written as raw lines (fixture-verified newline-free,
@@ -346,11 +345,10 @@ object ScanQueries {
     // (group by leading token, count + char sum) must equal DuckDB
     // over the ORIGINAL parquet — lossless write+read, not rows>0.
     "scan_text_roundtrip" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("textsrc", d)
       // staging is an artifact, not the measured operator (the READ
-      // is): writeOnce per (JVM, sf) mirrors scan_binaryfile's guard —
-      // r8 bench re-paid this write inside every timed invocation
-      graft.TempDirs.writeOnce("textsrc" + d) {
+      // is): built once per (JVM, sf), like scan_binaryfile's staging,
+      // so no timed invocation re-pays the write
+      val dir = graft.TempDirs.once("textsrc", d) { dir =>
         documents(s, d).select(col("text"))
           .write.mode("overwrite").text(dir)
       }
@@ -363,7 +361,7 @@ object ScanQueries {
         .orderBy(col("tok0"))
     }),
 
-    // GZIP-compressed text round-trip (r9): the compression-codec leg
+    // GZIP-compressed text round-trip: the compression-codec leg
     // of the text path — real crawl shards (WET files) arrive gzipped,
     // and the reader must split/decompress per FILE (gzip is not
     // splittable: one file = one task, which is why crawl dumps ship
@@ -371,8 +369,7 @@ object ScanQueries {
     // aggregate and oracle as scan_text_roundtrip, so the codec layer
     // is proven transparent.
     "scan_text_gzip" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("textgz", d)
-      graft.TempDirs.writeOnce("textgz" + d) {
+      val dir = graft.TempDirs.once("textgz", d) { dir =>
         documents(s, d).select(col("text"))
           .write.mode("overwrite").option("compression", "gzip")
           .text(dir)
@@ -386,7 +383,7 @@ object ScanQueries {
         .orderBy(col("tok0"))
     }),
 
-    // binaryFile source (r6): Spark's whole-file reader — the
+    // binaryFile source: Spark's whole-file reader — the
     // ingestion path for multimodal corpora (images/audio/arbitrary
     // blobs land as one row per FILE with path/length/content, no
     // row-format assumption). Staging writes each document's text as
@@ -407,8 +404,7 @@ object ScanQueries {
     // binaryFile read, which is cluster-correct as-is; only the
     // test-harness synthesis is local-mode-scoped.
     "scan_binaryfile" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("binfilesrc", d)
-      graft.TempDirs.writeOnce("binfilesrc" + d) {
+      val dir = graft.TempDirs.once("binfilesrc", d) { dir =>
         documents(s, d).select(col("doc_id"), col("text"))
           .repartition(8)
           .foreachPartition {
@@ -463,7 +459,7 @@ object ScanQueries {
           moneySumD(col("l_quantity")).as("sum_qty"))
     }),
 
-    // Schema evolution (r4): a long-lived lake table accretes columns
+    // Schema evolution: a long-lived lake table accretes columns
     // over time — the old files lack the new column and a reader must
     // union the schemas, surfacing NULL for pre-evolution rows. The
     // layout: a v1 epoch (even order keys, 2 columns) and a v2 epoch
@@ -476,8 +472,7 @@ object ScanQueries {
     // orders table (the layout is a pure function of it), so the
     // merge path is value-proven, not just rows>0.
     "scan_schema_evolution" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("schema_evo", d)
-      graft.TempDirs.writeOnce("schema_evo" + d) {
+      val dir = graft.TempDirs.once("schema_evo", d) { dir =>
         val o = orders(s, d)
         o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_totalprice"))

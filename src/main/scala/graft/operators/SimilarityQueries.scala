@@ -184,9 +184,8 @@ object SimilarityQueries {
     * unchanged.
     */
   private[graft] def hashedGramTable(
-      s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val dir = graft.TempDirs.scoped("gram_sigs", d)
-    graft.TempDirs.writeOnce("gram_sigs" + d) {
+      s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    artifact(s, "gram_sigs", d) {
       documents(s, d)
         .withColumn("toks", split(col("text"), " "))
         // sorted ascending for the merge-walk intersect
@@ -200,10 +199,7 @@ object SimilarityQueries {
         .select(col("doc_id"),
           expr("n_chars div 8").as("len_bkt"), col("grams"),
           size(col("grams")).cast("long").as("n_grams"))
-        .write.mode("overwrite").parquet(dir)
     }
-    parquet(s, dir)
-  }
 
   /** Exact verification of candidate (doc_a, doc_b) pairs: join back
     * both hash-sorted gram arrays, ONE codegen'd merge-walk intersect
@@ -312,11 +308,10 @@ object SimilarityQueries {
     * consumer of the pair stage at once.
     */
   /** Corpus size for the stage pick, read from the signature
-    * artifact's parquet FOOTERS on every invocation (r15 — replaces
-    * the r14 TrieMap memo the verdict flagged as cross-invocation
-    * caching of a data-derived value; see ParquetMeta). The artifact
-    * is built by `hashedGramTable`'s writeOnce before this reads it,
-    * so the count is always of the current artifact.
+    * artifact's parquet FOOTERS on every invocation (see ParquetMeta),
+    * not cached: a data-derived value stays tied to the artifact it
+    * was read from. The artifact is built by `hashedGramTable` before
+    * this reads it, so the count is always of the current artifact.
     */
   private[operators] def ngramCandidatePairs(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
@@ -651,12 +646,11 @@ object SimilarityQueries {
       // table / IVF centroid pattern): a pure plan re-executes the
       // covariance pass once per lineage reference — the union doubles
       // it and each of the five matvec rounds re-expands it (measured
-      // 12.3 s at sf1 in the r9 join formulation; 10× the single
+      // 12.3 s at sf1 in a join formulation; 10× the single
       // pass). Materialized, the fact table is touched exactly once
       // and every round is a 4096-row scan.
-      val dir = graft.TempDirs.scoped("pca_cov", d)
-      graft.TempDirs.writeOnce("pca_cov" + d) {
-        // pass one = the emb_covariance GramCovAgg scan (r10): one
+      val m = artifact(s, "pca_cov", d) {
+        // pass one = the emb_covariance GramCovAgg scan: one
         // fact pass, mergeable per-partition sufficient stats, no
         // N·d² join; the DOUBLE image of the < 2^53 numerators is
         // exact, so the matvec algebra is unchanged
@@ -671,9 +665,7 @@ object SimilarityQueries {
         upper.unionByName(
           upper.filter(col("i") < col("j"))
             .select(col("j").as("i"), col("i").as("j"), col("mv")))
-          .write.mode("overwrite").parquet(dir)
       }
-      val m = parquet(s, dir)
       // Five power-iteration rounds on ONE bounded task (r10): the
       // matrix is d² rows BY CONSTRUCTION (corpus-independent), and
       // the previous dataframe spelling launched ~15 tiny shuffle

@@ -34,7 +34,7 @@ object TextQueries {
     "es" -> Seq("el", "la", "los", "query", "data", "column"),
     "fr" -> Seq("le", "la", "les", "scan", "merge", "join"))
 
-  /** Corpus bigram language-model tables (r6) — the statistics behind
+  /** Corpus bigram language-model tables — the statistics behind
     * `text_lm_score`, materialized once per (JVM, input dir) like the
     * gram/label tables (SURVEY §3.3): an LM is a corpus ARTIFACT,
     * rebuilt when the corpus changes, not per query. `lm_bigrams`
@@ -42,34 +42,26 @@ object TextQueries {
     * counts c(w1,·) derive from it by one tiny aggregate, and
     * `lm_vocab` holds the single-row distinct-token count V used by
     * add-one smoothing. Both builds are independent (no nested
-    * writeOnce).
+    * build).
     */
   private def lmBigrams(s: org.apache.spark.sql.SparkSession,
-                        d: String): org.apache.spark.sql.DataFrame = {
-    val dir = graft.TempDirs.scoped("lm_bigrams", d)
-    graft.TempDirs.writeOnce("lm_bigrams" + d) {
+                        d: String): org.apache.spark.sql.DataFrame =
+    artifact(s, "lm_bigrams", d) {
       documents(s, d)
         .withColumn("toks", split(col("text"), " "))
         .filter(size(col("toks")) >= 2)
         .select(explode(expr(bigramStructExpr)).as("bg"))
         .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
         .agg(count(lit(1)).as("c"))
-        .write.mode("overwrite").parquet(dir)
     }
-    parquet(s, dir)
-  }
 
   private def lmVocab(s: org.apache.spark.sql.SparkSession,
-                      d: String): org.apache.spark.sql.DataFrame = {
-    val dir = graft.TempDirs.scoped("lm_vocab", d)
-    graft.TempDirs.writeOnce("lm_vocab" + d) {
+                      d: String): org.apache.spark.sql.DataFrame =
+    artifact(s, "lm_vocab", d) {
       documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .agg(countDistinct(col("w")).as("vocab"))
-        .write.mode("overwrite").parquet(dir)
     }
-    parquet(s, dir)
-  }
 
   /** Documents plus the integer score of the top-fraction quality
     * gates: 20000 − stopword bp − short-token bp (higher = better),
@@ -91,7 +83,7 @@ object TextQueries {
     "transform(sequence(1, size(toks) - 1), " +
       "i -> struct(toks[i - 1] AS w1, toks[i] AS w2))"
 
-  /** The per-doc score table as a writeOnce ARTIFACT (r9): the CCNet
+  /** The per-doc score table as a build-once ARTIFACT: the CCNet
     * bucketing operators consume scores the way production does — a
     * scored corpus is computed once and every downstream gate reads
     * it — so the bucketing queries measure the BUCKETING, not a
@@ -99,13 +91,8 @@ object TextQueries {
     * IS that operator).
     */
   private def lmScoresArtifact(s: org.apache.spark.sql.SparkSession,
-                               d: String): org.apache.spark.sql.DataFrame = {
-    val dir = graft.TempDirs.scoped("lm_scores", d)
-    graft.TempDirs.writeOnce("lm_scores" + d) {
-      lmScores(s, d).write.mode("overwrite").parquet(dir)
-    }
-    parquet(s, dir)
-  }
+                               d: String): org.apache.spark.sql.DataFrame =
+    artifact(s, "lm_scores", d)(lmScores(s, d))
 
   /** Per-doc bigram-LM scores (doc_id, n_bigrams, bits_mbits) —
     * shared by `text_lm_score` and the CCNet bucketing (r8 factored

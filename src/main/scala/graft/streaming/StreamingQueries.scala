@@ -280,17 +280,14 @@ object StreamingQueries {
     * replaying from it must be chunking-independent: file pickup order
     * within AvailableNow is not contractual.
     */
-  private def plainEventsDir(s: SparkSession, d: String): String = {
-    val dir = graft.TempDirs.scoped("stream_src_plain", d)
-    graft.TempDirs.writeOnce("stream_src_plain" + d) {
+  private def plainEventsDir(s: SparkSession, d: String): String =
+    graft.TempDirs.once("stream_src_plain", d) { dir =>
       events(s, d)
         .select(col("event_id"), col("ts_us"), col("user_id"),
           col("event_type"), col("value"))
         .repartition(2, pmod(col("event_id"), lit(2)))
         .write.mode("overwrite").parquet(dir)
     }
-    dir
-  }
 
   /** One replay child session per (parent, rocksdb?, shuffle
     * partitions, no-data batches): the child is a fixed execution
@@ -492,7 +489,7 @@ object StreamingQueries {
     * resumes from the same checkpoint with the recovered watermark, so
     * micro-batch boundaries are fully controllable with no driver-side
     * collect. The source files must be written once per JVM
-    * (`TempDirs.writeOnce`): rewriting them with fresh part-file names
+    * (`TempDirs.once`): rewriting them with fresh part-file names
     * would make the checkpoint see "new" files and reprocess them —
     * exactly-once holds per stable input file.
     */
@@ -571,16 +568,12 @@ object StreamingQueries {
     // against the drained checkpoint and reread the identical sink,
     // the same exactly-once restart contract as stream_sink_parquet.
     "stream_watermark_late" -> ((s, d) => {
-      val srcDir = graft.TempDirs.scoped("wmlate_src", d)
-      val outDir = graft.TempDirs.scoped("wmlate_out", d)
-      graft.TempDirs.writeOnce("wmlate" + d) {
-        // a PRIOR failed build (writeOnce records the key only on
-        // success) may have left a half-committed checkpoint; resuming
-        // against it would replay the rewritten source files as late
-        // data against the recovered watermark and silently drop
-        // windows — wipe both sink and checkpoint so a retry starts
-        // from scratch
-        graft.TempDirs.clearDir(outDir)
+      // `once` empties the dir before a retried build: resuming
+      // against a failed build's half-committed checkpoint would replay
+      // the rewritten source files as late data against the recovered
+      // watermark and silently drop windows
+      val root = graft.TempDirs.once("wmlate", d) { root =>
+        val (srcDir, outDir) = (s"$root/src", s"$root/out")
         val ev = events(s, d)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))
@@ -604,7 +597,7 @@ object StreamingQueries {
           .write.mode("append").parquet(srcDir)
         pass()
       }
-      sinkRows(s, outDir, "win_start_us BIGINT, n BIGINT")
+      sinkRows(s, s"$root/out", "win_start_us BIGINT, n BIGINT")
         .select(col("win_start_us"), col("n"))
         .orderBy(col("win_start_us"))
     }),
@@ -619,11 +612,10 @@ object StreamingQueries {
     // order-independent and the result equals the batch per-type
     // counts, so this IS oracle-paired.
     "stream_dedup" -> ((s, d) => {
-      val dir = graft.TempDirs.scoped("stream_src", d)
       // once per (JVM, input): the doubled layout is deterministic, so
       // re-invocations (bench run 2, repeated verify) replay the same
       // files instead of rewriting 2x the feed each time
-      graft.TempDirs.writeOnce("stream_src" + d) {
+      val dir = graft.TempDirs.once("stream_src", d) { dir =>
         val ev = events(s, d)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))
@@ -725,8 +717,7 @@ object StreamingQueries {
     // at 100 TB the same loop lands on a MERGE-capable table format
     // (the §2.M boundary) instead of full-snapshot rewrites.
     "stream_foreachbatch_upsert" -> ((s0, d) => {
-      val srcDir = graft.TempDirs.scoped("fbusrc", d)
-      graft.TempDirs.writeOnce("fbusrc" + d) {
+      val srcDir = graft.TempDirs.once("fbusrc", d) { srcDir =>
         events(s0, d)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))
@@ -799,7 +790,7 @@ object StreamingQueries {
     // asserted in StreamingParitySpec. (This is the production sink
     // shape; the memory sinks elsewhere are test harness only.)
     "stream_sink_parquet" -> ((s0, d) => {
-      // the shared once-per-JVM source layout: writeOnce stability is
+      // the shared once-per-JVM source layout: its stability is
       // exactly the never-rewritten property the checkpointed sink needs
       val srcDir = plainEventsDir(s0, d)
       val s = replaySession(s0, rocksDb = false, partitions = 4,
@@ -836,16 +827,14 @@ object StreamingQueries {
     // pickup order, oracle-paired against the identical batch
     // self-join.
     "stream_stream_join" -> ((s0, d) => {
-      val clickDir = graft.TempDirs.scoped("ssj_clicks", d)
-      val purchDir = graft.TempDirs.scoped("ssj_purch", d)
-      graft.TempDirs.writeOnce("ssj" + d) {
+      val root = graft.TempDirs.once("ssj", d) { root =>
         val ev = events(s0, d)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))
         ev.filter(col("event_type") === "click")
-          .write.mode("overwrite").parquet(clickDir)
+          .write.mode("overwrite").parquet(s"$root/clicks")
         ev.filter(col("event_type") === "purchase")
-          .write.mode("overwrite").parquet(purchDir)
+          .write.mode("overwrite").parquet(s"$root/purch")
       }
       // Partitions stay at 4 — an A/B at 2 measured WORSE (the 40 k-row
       // join work loses more parallelism than the halved
@@ -855,12 +844,12 @@ object StreamingQueries {
       // disabled via noDataBatches = false.
       val s = replaySession(s0, rocksDb = false, partitions = 4,
         noDataBatches = false)
-      val clicks = eventStream(s, clickDir)
+      val clicks = eventStream(s, s"$root/clicks")
         .withColumn("click_ts", timestamp_micros(col("ts_us")))
         .withWatermark("click_ts", "1 hour")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("click_ts"))
-      val purchases = eventStream(s, purchDir)
+      val purchases = eventStream(s, s"$root/purch")
         .withColumn("p_ts", timestamp_micros(col("ts_us")))
         .withWatermark("p_ts", "1 hour")
         .select(col("event_id").as("purchase_id"),
@@ -903,8 +892,7 @@ object StreamingQueries {
     // replaying history — the state store starts where batch left
     // off.
     "stream_tws_initial_state" -> ((s0, d) => {
-      val srcDir = graft.TempDirs.scoped("stream_src_nosignup", d)
-      graft.TempDirs.writeOnce("stream_src_nosignup" + d) {
+      val srcDir = graft.TempDirs.once("stream_src_nosignup", d) { srcDir =>
         events(s0, d)
           .filter(col("event_type") =!= "signup")
           .select(col("event_id"), col("ts_us"), col("user_id"),
@@ -1044,15 +1032,14 @@ object StreamingQueries {
     // so the sink pins the semantics: per user exactly one row per
     // non-empty half, Σemitted = their full event count, Σprior = 0 —
     // a run where TTL failed to expire would emit prior = n_even and
-    // hash-mismatch. One-time cost (passes + sleep) is writeOnce per
+    // hash-mismatch. One-time cost (passes + sleep) is paid once per
     // JVM; re-invocations read the committed sink.
     "stream_tws_ttl" -> ((s0, d) => {
-      val srcDir = graft.TempDirs.scoped("ttl_src", d)
-      val outDir = graft.TempDirs.scoped("ttl_out", d)
-      graft.TempDirs.writeOnce("ttl" + d) {
-        // wipe a half-committed retry's sink+checkpoint (the wmlate
-        // rationale: resuming against one would double-count)
-        graft.TempDirs.clearDir(outDir)
+      // a retried build starts from the emptied dir (the wmlate
+      // rationale: resuming a half-committed checkpoint would
+      // double-count)
+      val root = graft.TempDirs.once("ttl", d) { root =>
+        val (srcDir, outDir) = (s"$root/src", s"$root/out")
         val ev = events(s0, d)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))
@@ -1086,7 +1073,8 @@ object StreamingQueries {
           .write.mode("append").parquet(srcDir)
         pass()
       }
-      sinkRows(s0, outDir, "user_id BIGINT, emitted_n BIGINT, prior BIGINT")
+      sinkRows(s0, s"$root/out",
+        "user_id BIGINT, emitted_n BIGINT, prior BIGINT")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_emissions"),
           sum(col("emitted_n")).as("sum_emitted"),

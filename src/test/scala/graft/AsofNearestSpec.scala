@@ -19,8 +19,7 @@ class AsofNearestSpec extends SparkSpecBase {
       (13L, 260L, "view"), (14L, 400L, "view"))
       .map { case (id, t, et) => (id, t * 1000L, 1L, et, 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = TempDirs.scoped("asof_nearest_spec", "tiny")
-    TempDirs.writeOnce("asof_nearest_spec_tiny") {
+    val dir = TempDirs.once("asof_nearest_spec", "tiny") { dir =>
       rows.write.mode("overwrite").parquet(s"$dir/events.parquet")
     }
     val got = SparkEntry.queries("join_asof_nearest")(spark, dir)
@@ -47,8 +46,7 @@ class AsofNearestSpec extends SparkSpecBase {
       (20L, 500L, 2L, "view"))     // user 2 never signed up -> null
       .map { case (id, t, u, et) => (id, t * 1000L, u, et, 0.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = TempDirs.scoped("asof_tol_spec", "tiny")
-    TempDirs.writeOnce("asof_tol_spec_tiny") {
+    val dir = TempDirs.once("asof_tol_spec", "tiny") { dir =>
       rows.write.mode("overwrite").parquet(s"$dir/events.parquet")
     }
     val got = SparkEntry.queries("join_asof_tolerance")(spark, dir)

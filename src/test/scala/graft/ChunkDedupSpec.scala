@@ -24,8 +24,7 @@ class ChunkDedupSpec extends SparkSpecBase {
       (20L, s"$chunkA $chunkC", "en", "src0", 0L),
       (30L, s"$chunkB $chunkB", "en", "src0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = TempDirs.scoped("chunk_dedup_spec", "tiny")
-    TempDirs.writeOnce("chunk_dedup_spec_tiny") {
+    val dir = TempDirs.once("chunk_dedup_spec", "tiny") { dir =>
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     }
     SparkEntry.queries("dedup_chunk_global")(spark, dir)

@@ -63,21 +63,20 @@ class FixtureSchemaSpec extends SparkSpecBase {
 
   test("nanos-int64 and micros-timestamp encodings decode identically") {
     import spark.implicits._
-    val dir = TempDirs.scoped("fixture_canary", "unitflip")
     // 2024-03-01T00:00:00Z = 1709251200 s; plus 1.5 ms to exercise the
     // sub-millisecond tail that double division would corrupt
     val micros = Seq(1709251200000000L, 1709251200001500L, 1709337600999999L)
-    TempDirs.writeOnce("fixture_canary_unitflip") {
-      // The nanos leg must be BYTE-FAITHFUL to the r1-5 fixtures:
+    val dir = TempDirs.once("fixture_canary", "unitflip") { dir =>
+      // The nanos leg must be BYTE-FAITHFUL to the nanos fixtures:
       // physical `int64 ts (TIMESTAMP(NANOS, isAdjustedToUTC=false))`,
       // which Spark can only load under nanosAsLong. A plain BIGINT
-      // column (the previous spelling, caught in the r7 review) loads
-      // as LongType with or without the flag, so it could never catch
-      // the flag being dropped or a Spark upgrade changing
-      // TIMESTAMP(NANOS) handling — parquet-mr writes the real thing.
+      // column loads as LongType with or without the flag, so it
+      // could never catch the flag being dropped or a Spark upgrade
+      // changing TIMESTAMP(NANOS) handling — parquet-mr writes the
+      // real thing.
       writeNanosParquet(s"$dir/nanos/events.parquet", micros.map(_ * 1000L))
       // NTZ cast writes parquet TIMESTAMP(MICROS, isAdjustedToUTC=false)
-      // — byte-for-byte the round-6 fixture encoding
+      // — byte-for-byte the micros fixture encoding
       micros.toDF("us")
         .select(lit(1L).as("event_id"),
           timestamp_micros(col("us")).cast(TimestampNTZType).as("ts"))
@@ -201,8 +200,7 @@ class FixtureSchemaSpec extends SparkSpecBase {
 
   test("an unsupported ts encoding fails loudly, naming the type") {
     import spark.implicits._
-    val dir = TempDirs.scoped("fixture_canary", "badunit")
-    TempDirs.writeOnce("fixture_canary_badunit") {
+    val dir = TempDirs.once("fixture_canary", "badunit") { dir =>
       Seq((1L, "2024-03-01T00:00:00Z")).toDF("event_id", "ts")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
     }

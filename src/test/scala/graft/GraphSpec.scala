@@ -154,12 +154,8 @@ class GraphSpec extends SparkSpecBase {
   test("graph_wcc equals union-find over the 1-NN edges and leaves no cache behind") {
     // a fresh copy of the fixtures: the label build runs once per
     // (JVM, input dir), so only a new dir makes this call build it
-    val src = java.nio.file.Paths.get(sfDir)
-    val copy = java.nio.file.Files.createTempDirectory("graft_wcc_fixture")
+    val copy = fixtureCopy("graft_wcc_fixture")
     try {
-      val ls = java.nio.file.Files.list(src)
-      try ls.forEach(f => java.nio.file.Files.copy(f, copy.resolve(f.getFileName)))
-      finally ls.close()
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
       val got = GraphQueries.queries("graph_wcc")(spark, copy.toString)

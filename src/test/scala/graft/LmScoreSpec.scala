@@ -16,9 +16,8 @@ class LmScoreSpec extends SparkSpecBase {
     * counts: (a,b)=3 (b,a)=1 (b,c)=1 (z,z)=1; contexts a=3 b=2 z=1;
     * vocab V = |{a,b,c,z}| = 4.
     */
-  private lazy val tinyDir: String = {
-    val dir = TempDirs.scoped("lm_tiny", "fixture")
-    TempDirs.writeOnce("lm_tiny_build") {
+  private lazy val tinyDir: String =
+    TempDirs.once("lm_tiny", "fixture") { dir =>
       val s = spark
       import s.implicits._
       Seq(
@@ -28,8 +27,6 @@ class LmScoreSpec extends SparkSpecBase {
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     }
-    dir
-  }
 
   private def bits(c: Long, cu: Long, v: Long): Double =
     -(math.log((c + 1).toDouble / (cu + v).toDouble) / math.log(2.0))

@@ -292,7 +292,7 @@ class PlanShapeSpec extends SparkSpecBase {
 
   test("scan_parquet_bloom prunes row groups that min/max cannot") {
     import org.apache.spark.sql.functions.col
-    // build the hash-ordered bloom layout (writeOnce)
+    // build the hash-ordered bloom layout (built once per JVM)
     SparkEntry.queries("scan_parquet_bloom")(spark, sfDir).collect()
     val dir = graft.TempDirs.scoped("pqbloom", sfDir)
     val total = spark.read.parquet(dir).count()

@@ -48,8 +48,7 @@ class RecursiveCteSpec extends SparkSpecBase {
     // day-per-level recursion needed span-many levels and would hit
     // Spark's default spark.sql.cteRecursionLevelLimit=100 here; the
     // 30-day block anchor caps depth at 30 regardless of span
-    val dir = TempDirs.scoped("cte_long_feed", "synthetic400")
-    TempDirs.writeOnce("cte_long_feed_synthetic400") {
+    val dir = TempDirs.once("cte_long_feed", "synthetic400") { dir =>
       Seq((0L, 0L), (1L, 399L))
         .map { case (id, day) => (id, day * 86400L * 1000000000L) }
         .toDF("event_id", "ts")

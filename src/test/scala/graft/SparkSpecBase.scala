@@ -21,6 +21,18 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** A new temp directory holding a copy of the `sfDir` fixtures: a
+    * build that runs once per (JVM, input dir) runs again only on a new
+    * dir. The caller deletes it.
+    */
+  def fixtureCopy(prefix: String): java.nio.file.Path = {
+    val copy = java.nio.file.Files.createTempDirectory(prefix)
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(sfDir))
+    try ls.forEach(f => java.nio.file.Files.copy(f, copy.resolve(f.getFileName)))
+    finally ls.close()
+    copy
+  }
+
   /** Runs `f` with `graft.plans.SmallFinalSort` taken off the session,
     * then puts it back: the once-per-session install has already run,
     * so an engine read inside `f` does not add the rule again.

@@ -35,7 +35,8 @@ class StatefulRestartSpec extends SparkSpecBase {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s.implicits._
     val base = TempDirs.scoped(s"restart_$kind", sfDir)
-    TempDirs.clearDir(base) // re-runs in one JVM start from scratch
+    // re-runs in one JVM start from scratch
+    TempDirs.deleteRecursively(java.nio.file.Paths.get(base))
     val srcDir = s"$base/src"
     val ckpt = s"$base/ckpt"
     val ev = Tables.events(s, sfDir).select(col("event_id"), col("ts_us"),

@@ -48,7 +48,7 @@ class StreamFloorSpec extends SparkSpecBase {
     s.conf.set("spark.sql.shuffle.partitions", "2")
     import s.implicits._
     val base = TempDirs.scoped("floor_probe", sfDir)
-    TempDirs.clearDir(base)
+    TempDirs.deleteRecursively(java.nio.file.Paths.get(base))
     val srcDir = s"$base/src"
     // 100 rows, one file: the smallest real feed — addBatch is then
     // dominated by lifecycle, which is what this spec pins

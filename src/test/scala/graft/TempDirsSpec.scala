@@ -1,13 +1,51 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Runtime contract of TempDirs.writeOnce: at-most-once builds,
-  * retry-on-failure, and the r6 lock-order guard (the acyclic-nesting
-  * rule was documented in r4/r5 but unenforced — a two-lock cycle
-  * would have deadlocked silently under concurrency).
+/** Runtime contract of TempDirs.once and writeOnce: at-most-once
+  * builds keyed on the directory, retry-on-failure from an empty
+  * directory, and the lock-order guard (a two-lock cycle would
+  * otherwise deadlock silently under concurrency).
   */
 class TempDirsSpec extends AnyFunSuite {
+
+  private def listing(dir: String): Seq[String] = {
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally s.close()
+  }
+
+  test("once returns scoped(kind, d) and builds once per (kind, d)") {
+    var n = 0
+    val dir = TempDirs.once("tds_kind", "in/1") { _ => n += 1 }
+    assert(dir == TempDirs.scoped("tds_kind", "in/1"))
+    assert(TempDirs.once("tds_kind", "in/1") { _ => n += 1 } == dir)
+    assert(n == 1)
+  }
+
+  test("a build that writes a file and throws leaves an empty dir for the retry") {
+    intercept[RuntimeException](
+      TempDirs.once("tds_torn", "in") { dir =>
+        Files.writeString(Paths.get(dir, "half.parquet"), "torn")
+        sys.error("crash after the first write")
+      })
+    var seen: Seq[String] = Seq("not built")
+    val dir = TempDirs.once("tds_torn", "in") { dir => seen = listing(dir) }
+    assert(seen == Seq.empty)
+    assert(listing(dir) == Seq.empty)
+  }
+
+  test("two kinds on one input dir keep separate flags") {
+    var built = Seq.empty[String]
+    val a = TempDirs.once("tds_kindA", "shared") { _ => built :+= "a" }
+    val b = TempDirs.once("tds_kindB", "shared") { _ => built :+= "b" }
+    assert(built == Seq("a", "b"))
+    assert(a != b)
+  }
 
   test("writeOnce runs a build at most once per key") {
     var n = 0
