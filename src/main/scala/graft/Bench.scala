@@ -54,7 +54,7 @@ object Bench {
   /** Runs the whole physical plan, root sort included, and discards the
     * rows. `count()` would plan an aggregate over the query, which drops
     * the root sort; a `noop` write plans a V2 write, under which
-    * `SmallFinalSort` keeps the range exchange that readers never get.
+    * `SmallPlanOnePartition` keeps the exchanges that readers never get.
     */
   private def drain(df: DataFrame): Unit = {
     val qe = df.queryExecution

@@ -37,8 +37,8 @@ import graft.functions.{CountMinAgg, DotProductExpr, HllRegistersAgg,
   * Function registration is additive metadata: the expressions take
   * part in whole-stage codegen exactly as their DataFrame spellings do.
   * The extension also injects the as-of join strategy. The
-  * `SmallFinalSort` optimizer rule reaches every session, with or
-  * without the extension, through `GraftExtensions.install`.
+  * `SmallPlanOnePartition` optimizer rule reaches every session, with
+  * or without the extension, through `GraftExtensions.install`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -55,7 +55,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     case Literal(k: Int, _) => k
     // isValidInt: a bare toInt would silently WRAP an out-of-range
     // long (5000000000 -> 705032704) into a garbage-but-positive
-    // parameter no downstream k-guard can catch (r7 review)
+    // parameter no downstream k-guard can catch
     case Literal(k: Long, _) if k.isValidInt => k.toInt
     case Literal(k: Short, _) => k.toInt
     case Literal(k: Byte, _) => k.toInt
@@ -130,7 +130,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
 
   /** Puts the engine's planner additions on `s`, once per session: the
-    * `SmallFinalSort` rule, and the as-of join strategy unless the
+    * `SmallPlanOnePartition` rule, and the as-of join strategy unless the
     * session's planner already has it from the extension. The engine's
     * read path (`Tables.parquet`) and the as-of join's child session
     * call it, so every plan over engine inputs gets them. The additions
@@ -144,8 +144,8 @@ object GraftExtensions {
       val planner = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner
       if (!planner.strategies.contains(graft.plans.AsofJoinStrategy))
         e.extraStrategies = e.extraStrategies :+ graft.plans.AsofJoinStrategy
-      if (!e.extraOptimizations.contains(graft.plans.SmallFinalSort))
-        e.extraOptimizations = e.extraOptimizations :+ graft.plans.SmallFinalSort
+      if (!e.extraOptimizations.contains(graft.plans.SmallPlanOnePartition))
+        e.extraOptimizations = e.extraOptimizations :+ graft.plans.SmallPlanOnePartition
       java.lang.Boolean.TRUE
     }
 }

@@ -94,14 +94,20 @@ class AsofJoinNativeSpec extends SparkSpecBase {
     val sg = Tables.events(s2, sfDir)
       .filter(col("event_type") === "signup")
       .select(col("user_id").as("s_user_id"), col("ts_us").as("s_ts_us"))
-    val agg = graft.plans.AsofJoinApi.asofJoin(s2, ev, sg,
+    def agg = graft.plans.AsofJoinApi.asofJoin(s2, ev, sg,
         "user_id", "s_user_id", "ts_us", "s_ts_us")
       .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-    val plan = agg.queryExecution.executedPlan.toString
+    // the layout of inputs above SmallPlanOnePartition's gate
+    val plan = withoutSmallPlanRule(s2)(agg.queryExecution.executedPlan.toString)
     val nExchanges = "Exchange hashpartitioning".r
       .findAllMatchIn(plan).length
     assert(nExchanges == 2,
       s"expected 2 exchanges (join inputs only), got $nExchanges:\n$plan")
+    // at fixture size the join keeps its two exchanges and the
+    // aggregate runs over a coalesce, adding no exchange
+    val small = agg.queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllMatchIn(small).length == 2 &&
+      small.contains("Coalesce 1"), small)
   }
 
   test("result survives adversarial input repartitioning") {

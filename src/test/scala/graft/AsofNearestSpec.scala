@@ -61,11 +61,16 @@ class AsofNearestSpec extends SparkSpecBase {
   }
 
   test("both direction windows share one shuffle (single user_id Exchange)") {
-    val plan = SparkEntry.queries("join_asof_nearest")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    def q = SparkEntry.queries("join_asof_nearest")(spark, sfDir)
+    // the layout of inputs above SmallPlanOnePartition's gate
+    val plan = withoutSmallPlanRule()(q.queryExecution.executedPlan.toString)
     val exchanges = "Exchange hashpartitioning".r
       .findAllIn(plan).length
     assert(exchanges == 1,
       s"expected exactly 1 hash Exchange (shared by both windows), got $exchanges:\n$plan")
+    // at fixture size both windows run in one stage with no exchange
+    val small = q.queryExecution.executedPlan.toString
+    assert(!small.contains("Exchange") && small.contains("Coalesce 1"), small)
+    assert(workDuring(q.collect())._2 == 1)
   }
 }

@@ -9,6 +9,19 @@ class PlanShapeSpec extends SparkSpecBase {
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.executedPlan.toString
 
+  /** The layout tests below pin the exchanges that inputs above
+    * `SmallPlanOnePartition`'s gate get, so they plan with the rule
+    * off; at fixture size the same query is one stage with no shuffle.
+    */
+  private def largeInputPlan(name: String): String = withoutSmallPlanRule()(plan(name))
+
+  private def assertOneStage(name: String): Unit = {
+    val p = plan(name)
+    assert(!shuffles(p), p)
+    val stages = workDuring(SparkEntry.queries(name)(spark, sfDir).collect())._2
+    assert(stages == 1, s"$name ran $stages stages")
+  }
+
   test("scan_parquet_pruned reads only the projected columns") {
     val p = plan("scan_parquet_pruned")
     assert(p.contains("ReadSchema"))
@@ -196,28 +209,27 @@ class PlanShapeSpec extends SparkSpecBase {
 
   test("sample_hash is a pure map filter — no Exchange before the sort") {
     // the only exchange allowed is the final presentation ORDER BY
-    val p = plan("sample_hash")
+    val p = largeInputPlan("sample_hash")
     assert(p.indexOf("Exchange") == p.lastIndexOf("Exchange"),
       s"expected exactly one Exchange (the output sort):\n$p")
+    assertOneStage("sample_hash")
   }
 
   test("shuffle_global is one range-partitioned sort") {
-    // without SmallFinalSort, as for inputs above its gate: this checks
-    // the range-partitioned sort that large inputs get
-    withoutSmallFinalSort {
-      val p = plan("shuffle_global")
-      assert(p.contains("rangepartitioning"), p)
-      assert(p.indexOf("Exchange") == p.lastIndexOf("Exchange"),
-        s"expected exactly one Exchange:\n$p")
-    }
+    val p = largeInputPlan("shuffle_global")
+    assert(p.contains("rangepartitioning"), p)
+    assert(p.indexOf("Exchange") == p.lastIndexOf("Exchange"),
+      s"expected exactly one Exchange:\n$p")
+    assertOneStage("shuffle_global")
   }
 
   test("pack_token_budget shuffles once on the shard key") {
-    val p = plan("pack_token_budget")
+    val p = largeInputPlan("pack_token_budget")
     assert(p.contains("Window"), p)
     // one hash exchange for the window, one range exchange for the
     // presentation ORDER BY — nothing else
     assert("Exchange".r.findAllIn(p).size <= 2, p)
+    assertOneStage("pack_token_budget")
   }
 
   test("codegen signature expressions stay inside WholeStageCodegen") {
@@ -251,15 +263,17 @@ class PlanShapeSpec extends SparkSpecBase {
   test("ts_streaks shares the user_id exchange across both windows") {
     // hash(user_id) satisfies the (user_id, event_type) window and both
     // aggregates (subset rule) — one hash exchange + the output sort
-    val p = plan("ts_streaks")
+    val p = largeInputPlan("ts_streaks")
     assert(p.contains("Window"), p)
     assert("Exchange".r.findAllIn(p).size <= 2, p)
+    assertOneStage("ts_streaks")
   }
 
   test("ts_sessionize shuffles once on user_id end to end") {
-    val p = plan("ts_sessionize")
+    val p = largeInputPlan("ts_sessionize")
     assert(p.contains("Window"), p)
     assert("Exchange".r.findAllIn(p).size <= 2, p)
+    assertOneStage("ts_sessionize")
   }
 
   test("cluster_zorder layout prunes row groups in BOTH dimensions") {

@@ -108,6 +108,6 @@ class QuickstartDocSpec extends AnyFunSuite with BeforeAndAfterAll {
     val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
     assert(state.planner.strategies.count(_ == graft.plans.AsofJoinStrategy) == 1)
     // the extension injects no optimizer rule: this is the rule's one path
-    assert(spark.experimental.extraOptimizations == Seq(graft.plans.SmallFinalSort))
+    assert(spark.experimental.extraOptimizations == Seq(graft.plans.SmallPlanOnePartition))
   }
 }

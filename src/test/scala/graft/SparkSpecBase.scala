@@ -33,17 +33,22 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     copy
   }
 
-  /** Runs `f` with `graft.plans.SmallFinalSort` taken off the session,
-    * then puts it back: the once-per-session install has already run,
-    * so an engine read inside `f` does not add the rule again.
+  /** Runs `f` with `graft.plans.SmallPlanOnePartition` taken off `s`
+    * (the suite's session, or a child session the test builds), then
+    * puts it back: the once-per-session install has already run, so an
+    * engine read inside `f` does not add the rule again. Plans built in
+    * `f` get the exchanges that inputs above the rule's gate get.
     */
-  def withoutSmallFinalSort[T](f: => T): T = {
-    GraftExtensions.install(spark)
-    val e = spark.experimental
+  def withoutSmallPlanRule[T](s: SparkSession = spark)(f: => T): T = {
+    GraftExtensions.install(s)
+    val e = s.experimental
     val prev = e.extraOptimizations
-    e.extraOptimizations = prev.filterNot(_ == graft.plans.SmallFinalSort)
+    e.extraOptimizations = prev.filterNot(_ == graft.plans.SmallPlanOnePartition)
     try f finally e.extraOptimizations = prev
   }
+
+  /** `plan` holds a shuffle exchange; a broadcast exchange is not one. */
+  def shuffles(plan: String): Boolean = "(?<!Broadcast)Exchange".r.findFirstIn(plan).nonEmpty
 
   /** (Spark jobs, stages) this thread starts while `f` runs. Listener
     * events arrive asynchronously but in order, so once a marker job

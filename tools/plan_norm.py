@@ -11,7 +11,8 @@ Parts of a formatted plan that change between runs of one build are
 replaced by fixed tokens: expression ids (`#n`), `plan_id=n`, the random
 suffix of `TempDirs.scoped` directories, UUIDs, RDD ids, the JVM-wide
 counters in lambda variable and common-expression names (`lambda x_17`,
-`_common_expr_2`), and lambda and object hashes. In diff mode every query that differs after that prints
+`_common_expr_2`), lambda and object hashes, and the source line in RDD
+names (`GraphQueries.scala:<n>`). In diff mode every query that differs after that prints
 its unified diff; the last line counts queries compared, differing, and
 present under one tag only. Exit status 1 when any query differs or is
 unpaired.
@@ -37,6 +38,10 @@ RULES = [
     (re.compile(r"\$\$Lambda[$/\w]*"), "$$Lambda"),
     (re.compile(r"@[0-9a-f]{4,16}\b"), "@<hash>"),
     (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[<n>]"),
+    # an RDD's name ends in the source position that created it
+    # (`... at localCheckpoint at GraphQueries.scala:357`), which moves
+    # with any edit above that line
+    (re.compile(r"(\w+\.scala):\d+\b"), r"\1:<n>"),
     (re.compile(r"plan_id=\d+"), "plan_id=<n>"),
     (re.compile(r"#\d+"), "#<n>"),
 ]
