@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SQLExecution
 import java.nio.file.{Files, Paths}
 
@@ -65,22 +65,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val calibPre = spinNsPerOp()
     val (steal0, jiffies0) = procStatSample()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like every other entry point (Verify/Plans/specs): the NTZ
-      // timestamp reads and string->timestamp cutoff literals are
-      // session-TZ-dependent, and an unpinned zone would make the bench
-      // measure different row counts than Verify verifies
-      .config("spark.sql.session.timeZone", "UTC")
-      // a loaded box can stall a broadcast-side job past the 5-min
-      // default and fail the query outright; the bench should measure
-      // slow, not die
-      .config("spark.sql.broadcastTimeout", "1800")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // warm the JVM / codegen / parquet-reader paths once so per-query
     // timings measure the queries, not session startup. NonFatal only:
     // a fatal JVM error must abort the run here, not resurface as bogus

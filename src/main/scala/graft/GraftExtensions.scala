@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
@@ -38,7 +38,7 @@ import graft.functions.{CountMinAgg, DotProductExpr, HllRegistersAgg,
   * part in whole-stage codegen exactly as their DataFrame spellings do.
   * The extension also injects the as-of join strategy. The
   * `SmallPlanOnePartition` optimizer rule reaches every session, with
-  * or without the extension, through `GraftExtensions.install`.
+  * or without the extension, through `Sessions.install`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -63,89 +63,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       s"$name: expected an int-range integer literal, got $other")
   }
 
+  /** (name, arity, constructor over the arity-checked arguments) of
+    * every SQL function the extension registers.
+    */
+  private val functions: Seq[(String, Int, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", 2, c => DotProductExpr(c(0), c(1))),
+    ("graft_sorted_intersect_count", 2, c => SortedIntersectCountExpr(c(0), c(1))),
+    // accept any integral literal width (16, 16L, SMALLINT...)
+    ("graft_minhash_sig", 2, c => MinHashSigExpr(c(0), intLiteral("graft_minhash_sig", c(1)))),
+    ("graft_minhash_sketch", 1, c => MinHashSketchAgg(c.head)),
+    ("graft_simhash_bands", 1, c => SimHashAgg(c.head)),
+    ("graft_hll_registers", 1, c => HllRegistersAgg(c.head)),
+    ("graft_cms", 1, c => CountMinAgg(c.head)),
+    ("graft_misra_gries", 2, c => MisraGriesAgg(c(0), intLiteral("graft_misra_gries", c(1)))))
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      info("graft_dot"),
-      (children: Seq[Expression]) => {
-        requireArity("graft_dot", 2, children)
-        DotProductExpr(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sorted_intersect_count"),
-      info("graft_sorted_intersect_count"),
-      (children: Seq[Expression]) => {
-        requireArity("graft_sorted_intersect_count", 2, children)
-        SortedIntersectCountExpr(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_sig"),
-      info("graft_minhash_sig"),
-      (children: Seq[Expression]) => {
-        requireArity("graft_minhash_sig", 2, children)
-        // accept any integral literal width (16, 16L, SMALLINT...)
-        MinHashSigExpr(children(0),
-          intLiteral("graft_minhash_sig", children(1)))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_sketch"),
-      info("graft_minhash_sketch"),
-      (children: Seq[Expression]) => {
-        requireArity("graft_minhash_sketch", 1, children)
-        MinHashSketchAgg(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash_bands"),
-      info("graft_simhash_bands"),
-      (children: Seq[Expression]) => {
-        requireArity("graft_simhash_bands", 1, children)
-        SimHashAgg(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_hll_registers"),
-      info("graft_hll_registers"),
-      (children: Seq[Expression]) => {
-        requireArity("graft_hll_registers", 1, children)
-        HllRegistersAgg(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cms"),
-      info("graft_cms"),
-      (children: Seq[Expression]) => {
-        requireArity("graft_cms", 1, children)
-        CountMinAgg(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_misra_gries"),
-      info("graft_misra_gries"),
-      (children: Seq[Expression]) => {
-        requireArity("graft_misra_gries", 2, children)
-        MisraGriesAgg(children(0),
-          intLiteral("graft_misra_gries", children(1)))
-      }))
-  }
-}
-
-object GraftExtensions {
-
-  /** Puts the engine's planner additions on `s`, once per session: the
-    * `SmallPlanOnePartition` rule, and the as-of join strategy unless the
-    * session's planner already has it from the extension. The engine's
-    * read path (`Tables.parquet`) and the as-of join's child session
-    * call it, so every plan over engine inputs gets them. The additions
-    * stay on the caller's session (README, Library API). Runs inside
-    * one `SessionMemo` init, so concurrent callers never race the
-    * read-modify-write of the experimental lists.
-    */
-  private[graft] def install(s: SparkSession): Unit =
-    SessionMemo(s, "planner_additions") {
-      val e = s.experimental
-      val planner = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner
-      if (!planner.strategies.contains(graft.plans.AsofJoinStrategy))
-        e.extraStrategies = e.extraStrategies :+ graft.plans.AsofJoinStrategy
-      if (!e.extraOptimizations.contains(graft.plans.SmallPlanOnePartition))
-        e.extraOptimizations = e.extraOptimizations :+ graft.plans.SmallPlanOnePartition
-      java.lang.Boolean.TRUE
+    functions.foreach { case (name, arity, make) =>
+      ext.injectFunction((new FunctionIdentifier(name), info(name),
+        (children: Seq[Expression]) => {
+          requireArity(name, arity, children)
+          make(children)
+        }))
     }
+  }
 }

@@ -37,13 +37,7 @@ object Plans {
     require(unknown.isEmpty,
       s"$usage; unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     if (args.isEmpty) {
       val names = SparkEntry.queries.keys.toSeq.sorted
       val sb = new StringBuilder

@@ -7,14 +7,16 @@ import org.apache.spark.sql.SparkSession
 /** The engine's one per-session cache: a weakly-keyed map from a
   * `SparkSession` to a concurrent key → value map. It holds the parquet
   * schemas `Tables.parquet` resolves, the SQL views `Tables.view`
-  * registers, the once-per-session planner install, and the fixed-conf
-  * child sessions of the join, streaming-replay and as-of modules.
+  * registers, and, through `Sessions`, the once-per-session planner
+  * install and every child session (`Sessions.child`: the as-of
+  * facade, the streaming replays, `join_skew_aqe`, `join_runtime_bloom`
+  * and the graph build loops).
   *
   * Invariants:
   *  - A value never references the session it is keyed on, so a session
   *    nobody else holds is collected together with its entries. Schemas
-  *    qualify, and so do child sessions: `newSession()` keeps the shared
-  *    state, not the parent.
+  *    qualify, and so do child sessions: a child keeps the shared state,
+  *    not the parent.
   *  - An `init` that throws stores nothing, so the next call retries.
   *  - No Spark job runs while the map-wide lock is held: that lock only
   *    fetches the session's map. `init` runs inside the per-key

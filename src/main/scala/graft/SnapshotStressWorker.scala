@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.SnapshotTable
 
 /** Cross-PROCESS stress worker for the snapshot-commit protocol and
@@ -36,12 +34,7 @@ object SnapshotStressWorker {
     val seed = args(1).toLong
     val nAppends = args(2).toInt
     val artFp = args(3)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(2)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val failures =

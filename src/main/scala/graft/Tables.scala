@@ -31,11 +31,11 @@ object Tables {
     * The key carries `TempDirs.fingerprintOf(path)`, so a path
     * rewritten with a different file set is resolved again. Every read
     * of an engine input passes here, so this is where a session gets
-    * the engine's planner additions (`GraftExtensions.install`), which
+    * the engine's planner additions (`Sessions.install`), which
     * then stay on it.
     */
   private[graft] def parquet(s: SparkSession, path: String): DataFrame = {
-    GraftExtensions.install(s)
+    Sessions.install(s)
     val schema = SessionMemo(s, ("parquet", path, TempDirs.fingerprintOf(path))) {
       s.read.parquet(path).schema
     }

@@ -56,17 +56,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // measure slow rather than die when the box is contended (the
-      // default 5-min broadcast timeout raced real jobs in r3)
-      .config("spark.sql.broadcastTimeout", "1800")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // local-iteration filter (comma-separated names); the driver sets
     // no env, so its runs always dump the full query set
     val only = sys.env.get("SPARK_GRAFT_ONLY")

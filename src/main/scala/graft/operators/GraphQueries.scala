@@ -131,6 +131,17 @@ object GraphQueries {
         when(xFirst, col("dy.dg")).otherwise(col("dx.dg")).as("dhi"))
   }
 
+  /** The narrow 8-partition child session the build loops
+    * (`graph_wcc`, `graph_kcore`, `dedup_cc_clusters`) run on: rounds
+    * of tiny joins over an edge table at the caller's partition count
+    * are pure task-scheduling overhead (the k-core peel measured 12 s
+    * cold at sf0.1 on 32 shuffle partitions, ~3 s on 8), the knob a
+    * cluster job sets between a corpus-sized stage and an edge-sized
+    * iterative one.
+    */
+  private[operators] def buildSession(s: SparkSession): SparkSession =
+    graft.Sessions.child(s, "narrow_build")("spark.sql.shuffle.partitions" -> "8")
+
   /** Connected components of the undirected graph whose edges are the
     * rows (a, b) of `pairs`: one row (v, label = min reachable v) per
     * vertex on any pair, handed to `write`. The one min-label
@@ -199,8 +210,7 @@ object GraphQueries {
     */
   private def wccLabels(s: SparkSession, d: String): DataFrame =
     parquet(s, graft.TempDirs.once("graph_wcc", d) { dir =>
-      val cc = s.newSession()
-      cc.conf.set("spark.sql.shuffle.partitions", "8")
+      val cc = buildSession(s)
       // best-match (1-NN) subgraph of the top-K artifact: each node
       // keeps only its strongest tie, which fragments the network
       // into genuine match-chain communities (the full top-3 graph is
@@ -232,13 +242,8 @@ object GraphQueries {
       // subtrees that wedge the optimizer/plan-stringify long before
       // execution (persist only caches execution results; analysis
       // still walks the full tree). The eager checkpoint pins each
-      // round to a LogicalRDD: 8 tiny jobs, linear plans. The loop
-      // runs on a narrow 8-partition session (the wcc playbook):
-      // 8 eager rounds × 32 shuffle partitions of a ~3·N-row edge
-      // table is pure task-scheduling overhead (measured 12 s cold at
-      // sf0.1; ~3 s at 8 partitions).
-      val cc = s.newSession()
-      cc.conf.set("spark.sql.shuffle.partitions", "8")
+      // round to a LogicalRDD: 8 tiny jobs, linear plans.
+      val cc = buildSession(s)
       var und = undirected(edgesTopK(cc, d)).localCheckpoint()
       // early exit once a round removes nothing: peeling only ever
       // deletes edges, so an unchanged edge count IS the fixpoint and

@@ -94,38 +94,3 @@ object IvfIndexBuilder {
     if (r.isNullAt(0)) 0.0 else r.getDouble(0)
   }
 }
-
-/** CLI: `runMain graft.operators.BuildIvfIndex <sfDir> <outDir> [k] [rounds]`
-  * — writes refined centroids to `<outDir>/centroids.parquet`.
-  */
-object BuildIvfIndex {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
-    val outDir = args.lift(1).getOrElse("/tmp/graft_ivf")
-    val rounds = args.lift(3).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // default nlist scales ~sqrt(corpus) — pass an explicit k to pin
-    val k = args.lift(2).map(_.toInt).getOrElse(
-      IvfIndexBuilder.nlistFor(
-        graft.Tables.embeddings(spark, sfDir).count()))
-    val (vecs, cents0) = IvfIndexBuilder.prepare(spark, sfDir, k)
-    var cents = cents0
-    println(f"round 0 objective ${IvfIndexBuilder.objective(vecs, cents)}%.4f")
-    for (r <- 1 to rounds) {
-      cents = IvfIndexBuilder.lloydRound(vecs, cents)
-        .localCheckpoint() // cut the growing lineage between rounds
-      println(f"round $r objective ${IvfIndexBuilder.objective(vecs, cents)}%.4f")
-    }
-    cents.coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/centroids.parquet")
-    println(s"wrote $outDir/centroids.parquet (k=$k, rounds=$rounds)")
-    spark.stop()
-  }
-}

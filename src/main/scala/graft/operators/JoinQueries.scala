@@ -395,7 +395,7 @@ object JoinQueries {
     }),
 
     // AQE runtime skew split — the engine-native complement to
-    // `join_skew_salted`'s manual fan-out (r6): the same 3-orders-of-
+    // `join_skew_salted`'s manual fan-out: the same 3-orders-of-
     // magnitude key skew (90% of the fact lands on key 0), but left
     // for ADAPTIVE execution to fix — after the shuffle map stage, AQE
     // observes the oversized partition and OptimizeSkewedJoin splits
@@ -430,28 +430,19 @@ object JoinQueries {
       // fixtures do not split the hot partition into sub-KB reducers.
       // However small the advisory size, the hot partition splits into
       // at most 16 reducer tasks, one per map chunk below: AQE splits a
-      // skewed partition by whole map outputs. Derived values join the
-      // session-cache key so two scales in one JVM never share a
-      // mis-sized profile.
+      // skewed partition by whole map outputs. The derived values are
+      // child-session overrides, and so part of its key: two scales in
+      // one JVM never share a mis-sized profile.
       val thrBytes = math.min(256L << 20, math.max(1024L,
         graft.ParquetMeta.byteSize(s"$d/lineitem.parquet") / 1024))
-      // one fixed-conf child session per (caller, profile): rebuilding
-      // SessionState per call is pure fixed cost, and nothing registers
-      // views or UDFs on the child, so every call can share it
-      val s2 = graft.SessionMemo(s, ("join_conf", s"skew_aqe_$thrBytes")) {
-        val c = s.newSession()
-        c.conf.set("spark.sql.adaptive.enabled", "true")
-        c.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        c.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-        c.conf.set(
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-          thrBytes.toString)
-        c.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-          math.max(2048L, thrBytes / 2).toString)
-        c.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        c.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        c
-      }
+      val s2 = graft.Sessions.child(s, "join_skew_aqe")(
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> thrBytes.toString,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> math.max(2048L, thrBytes / 2).toString,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
       val fact = lineitem(s2, d)
         .select(col("l_orderkey"), col("l_quantity"))
         .withColumn("skew_key",
@@ -560,7 +551,7 @@ object JoinQueries {
         .orderBy(col("label"))
     }),
 
-    // Injected runtime bloom filter (r6): the third runtime-
+    // Injected runtime bloom filter: the third runtime-
     // optimization demo next to `join_dpp` (partition-level skipping)
     // and `join_skew_aqe` (partition splitting). A selectively
     // filtered dim side joins the fact on a non-partition key, so DPP
@@ -575,16 +566,11 @@ object JoinQueries {
     // exactly when the join must shuffle. Plan-asserted in
     // PlanShapeSpec (might_contain on the fact scan's filter).
     "join_runtime_bloom" -> ((s, d) => {
-      val s2 = graft.SessionMemo(s, ("join_conf", "runtime_bloom")) {
-        val c = s.newSession()
-        c.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        c.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-          "0")
-        c.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        c.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        c
-      }
+      val s2 = graft.Sessions.child(s, "join_runtime_bloom")(
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
       val dim = orders(s2, d)
         .filter(col("o_orderpriority") === "1-URGENT" &&
           col("o_orderstatus") === "F")

@@ -157,19 +157,15 @@ object LlmQueries {
     * orders of magnitude smaller than the corpus at any scale). The
     * build runs once per (JVM, input dir) and lands the label table as
     * a parquet artifact; queries then read the artifact — the same
-    * offline-build/online-read split as `BuildIvfIndex`, and the shape
+    * offline-build/online-read split as `ann_ivf_built_topk`'s
+    * centroid build (`IvfIndexBuilder`), and the shape
     * a 100 TB pipeline would use (a label table is a corpus artifact,
     * rebuilt when the corpus changes, not per query).
-    *
-    * A cloned session (shared context, own SQLConf) scopes a small
-    * shuffle-partition count to the propagation stage, exactly the
-    * knob a cluster job would set between the corpus-sized discovery
-    * stage and the edge-sized iterative stage.
+    * It runs on `GraphQueries.buildSession`.
     */
   private def ccLabels(s: SparkSession, d: String): DataFrame =
     parquet(s, graft.TempDirs.once("cc_labels", d) { dir =>
-      val cc = s.newSession()
-      cc.conf.set("spark.sql.shuffle.partitions", "8")
+      val cc = GraphQueries.buildSession(s)
       val pairs = SimilarityQueries.ngramCandidatePairs(cc, d)
         .select(col("doc_a"), col("doc_b"))
       GraphQueries.componentLabels(pairs, "dedup_cc_clusters")(

@@ -363,7 +363,7 @@ case class AsofJoinExec(
   * the two inputs' analyzed plans and surfaces the custom node as an
   * ordinary DataFrame. The session must have `AsofJoinStrategy`
   * installed: `GraftExtensions` injects it, and `asofJoin` puts it on
-  * its execution session through `GraftExtensions.install`. Like pandas
+  * its execution session through `Sessions.install`. Like pandas
   * `merge_asof`, the result carries every left column plus every
   * right column (null-extended on no match) — rename overlapping
   * right columns before the call.
@@ -391,21 +391,7 @@ object AsofJoinApi {
     */
   private def aqeOffSession(s: SparkSession): SparkSession =
     if (s.conf.get("spark.sql.adaptive.enabled", "true") == "false") s
-    else graft.SessionMemo(s, "asof_aqe_off") {
-      val c = s.newSession()
-      // inherit the caller's RUNTIME confs (newSession() only copies
-      // builder-time conf, so e.g. a caller's spark.sql.shuffle
-      // .partitions or ANSI toggle would otherwise be silently
-      // dropped inside the as-of pipeline), THEN pin AQE off.
-      // Snapshot is taken at child creation; conf changes the caller
-      // makes later are deliberately not tracked.
-      s.conf.getAll.foreach { case (k, v) =>
-        try c.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      }
-      c.conf.set("spark.sql.adaptive.enabled", "false")
-      c
-    }
+    else graft.Sessions.child(s, "asof")("spark.sql.adaptive.enabled" -> "false")
 
   /** As-of join `leftDf` to `rightDf`: every left row + the payload
     * columns of the matched right row (backward: latest right time
@@ -423,7 +409,7 @@ object AsofJoinApi {
       forward: Boolean = false,
       nearest: Boolean = false): DataFrame = {
     val s2 = aqeOffSession(s)
-    graft.GraftExtensions.install(s2)
+    graft.Sessions.install(s2)
     val lPlan = leftDf.queryExecution.analyzed
     val rPlan = rightDf.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String): Attribute =

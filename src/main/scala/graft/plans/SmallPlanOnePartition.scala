@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Nondeterministic, SortOrder}
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, JoinSelectionHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, DeserializeToObject, Filter, Generate, GlobalLimit, Join, LeafNode, LocalLimit, LogicalPlan, MapPartitions, Project, Repartition, RepartitionOperation, Sample, SerializeFromObject, Sort, Union, V2WriteCommand, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{V1WriteCommand, WriteFiles}
@@ -24,7 +25,10 @@ import org.apache.spark.sql.execution.datasources.{V1WriteCommand, WriteFiles}
   * `Range`, whose range-partitioned output needs no sort once
   * planned), or a sort under a limit, which plans as one
   * `TakeOrderedAndProject`. Joins are never given a coalesce: they keep
-  * their planned exchanges and broadcasts.
+  * their planned exchanges and broadcasts. The operator a join reads
+  * (through projections, filters and generators) is coalesced only when
+  * Spark's join selection broadcasts that input (by hint or size), or when
+  * that makes every input of the join one partition.
   *
   * Left alone: streaming plans, a leaf without size statistics (its
   * default size is above the gate), and a plan holding a
@@ -33,7 +37,7 @@ import org.apache.spark.sql.execution.datasources.{V1WriteCommand, WriteFiles}
   * one-partition repartition is rewritten, so a write keeps its file
   * layout: a `coalesce(1)` write is one file either way.
   */
-object SmallPlanOnePartition extends Rule[LogicalPlan] {
+object SmallPlanOnePartition extends Rule[LogicalPlan] with JoinSelectionHelper {
 
   /** Summed `stats.sizeInBytes` (file bytes, for parquet) of a plan's
     * leaves. Timed with perfbench's checksum action on `local[2]` (4
@@ -51,15 +55,43 @@ object SmallPlanOnePartition extends Rule[LogicalPlan] {
     if (plan.isStreaming || !small(plan) || partitionDependent(plan)) plan
     else rewrite(plan)
 
-  private def rewrite(p: LogicalPlan): LogicalPlan = p match {
+  private def rewrite(p: LogicalPlan): LogicalPlan = coalesce(descend(p))
+
+  /** `p` over its rewritten children, with no coalesce of its own. */
+  private def descend(p: LogicalPlan): LogicalPlan = p match {
     case _: V1WriteCommand | _: WriteFiles | _: V2WriteCommand => p.mapChildren(inWrite)
     case _: LocalLimit => p.mapChildren(topK)
-    case _ =>
-      val q = p.mapChildren(rewrite)
-      if (needsDistribution(q) && !onePartition(q.children.head))
-        q.withNewChildren(Seq(Repartition(1, shuffle = false, q.children.head)))
-      else q
+    case j: Join =>
+      // a join input is coalesced only when Spark broadcasts it, or when
+      // that makes every input of the join one partition: beside an
+      // input that stays partitioned, a coalesced input is shuffled
+      // again by a shuffled join, and narrows a broadcast join's
+      // streamed side to one task
+      val q = j.mapChildren(joinInput(_, descend))
+      val all = q.mapChildren(joinInput(_, coalesce))
+      if (onePartition(all)) all
+      else getBroadcastBuildSide(j, hintOnly = true, conf)
+        .orElse(getBroadcastBuildSide(j, hintOnly = false, conf)) match {
+        case Some(BuildLeft) => q.withNewChildren(Seq(all.children.head, q.children(1)))
+        case Some(BuildRight) => q.withNewChildren(Seq(q.children.head, all.children(1)))
+        case None => q
+      }
+    case _ => p.mapChildren(rewrite)
   }
+
+  private def coalesce(q: LogicalPlan): LogicalPlan =
+    if (needsDistribution(q) && !onePartition(q.children.head))
+      q.withNewChildren(Seq(Repartition(1, shuffle = false, q.children.head)))
+    else q
+
+  /** `top` applied to the operator a join reads, seen through the
+    * operators that keep their child's partitioning.
+    */
+  private def joinInput(p: LogicalPlan, top: LogicalPlan => LogicalPlan): LogicalPlan =
+    p match {
+      case _: Project | _: Filter | _: Generate => p.mapChildren(joinInput(_, top))
+      case _ => top(p)
+    }
 
   private def inWrite(p: LogicalPlan): LogicalPlan = p match {
     case Repartition(1, _, c) => p.withNewChildren(Seq(rewrite(c)))

@@ -289,21 +289,40 @@ object StreamingQueries {
         .write.mode("overwrite").parquet(dir)
     }
 
-  /** One replay child session per (parent, rocksdb?, shuffle
-    * partitions, no-data batches): the child is a fixed execution
-    * environment, and rebuilding SessionState per replay invocation would
-    * be pure fixed cost. Memory sink table names are per invocation, so
+  /** The replay child session for (rocksdb?, shuffle partitions,
+    * no-data batches). Memory sink table names are per invocation, so
     * sharing one session across replays cannot collide. The partition
-    * count is part of the key because stream_stream_join's
+    * count is a parameter because stream_stream_join's
     * 4-store-per-partition join wants 4 partitions while the keyed
     * replays' optimum is 2, and a shared session's conf cannot serve
     * both without racing.
     */
   private def replaySession(s0: SparkSession, rocksDb: Boolean,
                             partitions: Int = 2,
-                            noDataBatches: Boolean = true): SparkSession =
-    graft.SessionMemo(s0, ("replay", rocksDb, partitions, noDataBatches)) {
-      val s = s0.newSession()
+                            noDataBatches: Boolean = true): SparkSession = {
+    val rocksDbConfs = if (!rocksDb) Nil else Seq(
+      // transformWithState requires RocksDB
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      // ONE shared RocksDB block cache + write-buffer manager
+      // across every instance on the executor: without bounded
+      // memory each tws replay's store instances allocate private
+      // caches; with it they share a single LRU arena sized far
+      // above these replays' KB-scale states, so the setting only
+      // dedups allocations — it can never evict a working set at
+      // this scale
+      "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
+      "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "256",
+      // changelog checkpointing: each commit uploads the batch's
+      // delta instead of zipping the full RocksDB instance — the
+      // production default, and it shaves the per-batch commit
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      // every commit otherwise COUNTS the whole store to report
+      // numTotalStateRows — an O(state) scan paid per batch for a
+      // progress metric none of these replays read (the standard
+      // production toggle for large stateful queries)
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
+    graft.Sessions.child(s0, "replay")(Seq(
       // 2 shuffle partitions by default, not 4: state store instances
       // are per (stateful operator, partition) and the replays' key
       // counts need no more parallelism; results are key-grouped
@@ -313,7 +332,7 @@ object StreamingQueries {
       // data-proportional states, stream_dedup's 600k ids above all,
       // lose more to serial execution than the saved state store
       // open/commit returns). 2 is the measured optimum.
-      s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      "spark.sql.shuffle.partitions" -> partitions.toString,
       // most replays provably gain nothing from the trailing no-data
       // micro-batch (Update/Complete modes, or append operators that
       // emit on arrival — dedup, inner stream-stream join): it only
@@ -321,36 +340,9 @@ object StreamingQueries {
       // open/commit cycle per stateful partition (probe: 0.2-0.7 s).
       // Queries whose OUTPUT is produced by watermark movement
       // (timer expiry, append-mode windowed aggs) must keep it.
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        noDataBatches.toString)
-      if (rocksDb) { // transformWithState requires RocksDB
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // ONE shared RocksDB block cache + write-buffer manager
-        // across every instance on the executor: without bounded
-        // memory each tws replay's store instances allocate private
-        // caches; with it they share a single LRU arena sized far
-        // above these replays' KB-scale states, so the setting only
-        // dedups allocations — it can never evict a working set at
-        // this scale
-        s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-          ".boundedMemoryUsage", "true")
-        s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-          ".maxMemoryUsageMB", "256")
-        // changelog checkpointing: each commit uploads the batch's
-        // delta instead of zipping the full RocksDB instance — the
-        // production default, and it shaves the per-batch commit
-        s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-          ".changelogCheckpointing.enabled", "true")
-        // every commit otherwise COUNTS the whole store to report
-        // numTotalStateRows — an O(state) scan paid per batch for a
-        // progress metric none of these replays read (the standard
-        // production toggle for large stateful queries)
-        s.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-          ".trackTotalNumberOfRows", "false")
-      }
-      s
-    }
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString
+    ) ++ rocksDbConfs: _*)
+  }
 
   /** Memory-sink names must be unique per INVOCATION because replays
     * share a session: a fixed name would make two concurrent runs of

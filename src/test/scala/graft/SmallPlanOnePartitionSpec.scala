@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Repartition, Sort, Statistics}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DatasetBridge
@@ -25,7 +25,7 @@ class SmallPlanOnePartitionSpec extends SparkSpecBase {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    GraftExtensions.install(spark)
+    Sessions.install(spark)
   }
 
   private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
@@ -57,7 +57,7 @@ class SmallPlanOnePartitionSpec extends SparkSpecBase {
   test("results match the exchange-planned query row for row") {
     (Seq("project_cast", "win_row_number", "topk_per_group", "agg_group_sums",
       "join_inner_broadcast", "dedup_distinct", "join_inner_shuffle", "join_skew_salted",
-      "sql_exists_subquery", "sample_hash", "shuffle_global") ++ rewritten ++
+      "sql_exists_subquery", "sample_hash", "shuffle_global", "join_full_outer") ++ rewritten ++
       Seq("agg_cms_point", "pack_token_budget", "ts_streaks", "ts_sessionize",
         "join_asof_nearest")).distinct.foreach { name =>
       val on = q(name).collect().toSeq
@@ -65,6 +65,24 @@ class SmallPlanOnePartitionSpec extends SparkSpecBase {
       // agg_having's HAVING bound keeps no group at fixture size
       assert(on.nonEmpty || name == "agg_having", name)
       assert(on == off, name)
+    }
+  }
+
+  test("an aggregate a join reads beside a partitioned input keeps its exchange unless broadcast") {
+    // join_full_outer: a shuffled join of the aggregate and a plain scan;
+    // join_skew_salted: the distinct is a broadcast join's streamed side
+    Seq("join_full_outer", "join_skew_salted").foreach { name =>
+      val df = q(name)
+      val join = df.queryExecution.optimizedPlan.collectFirst { case j: Join => j }.get
+      assert(!join.exists(_.isInstanceOf[Repartition]), s"$name\n${join.treeString}")
+      val p = plan(df)
+      assert("HashAggregate[^\n]*\n[^\n]*Exchange hashpartitioning".r.findFirstIn(p).nonEmpty,
+        s"$name\n$p")
+    }
+    // the aggregate is the broadcast side, by hint and by size: still one stage
+    Seq("ts_seasonal_profile", "sql_scalar_subquery").foreach { name =>
+      val p = plan(q(name))
+      assert(p.contains("BroadcastExchange") && !shuffles(p), s"$name\n$p")
     }
   }
 

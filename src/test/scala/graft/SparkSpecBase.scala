@@ -40,7 +40,7 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     * `f` get the exchanges that inputs above the rule's gate get.
     */
   def withoutSmallPlanRule[T](s: SparkSession = spark)(f: => T): T = {
-    GraftExtensions.install(s)
+    Sessions.install(s)
     val e = s.experimental
     val prev = e.extraOptimizations
     e.extraOptimizations = prev.filterNot(_ == graft.plans.SmallPlanOnePartition)
